@@ -98,9 +98,9 @@ class BulkloadService:
     # -- POST /tsdb/load (:232-254, H7 external contract) ------------------
     def load_hfiles(self, path: str, rollup: bool = False) -> dict:
         """Adoption stub: validate the sorted/non-overlapping layout that
-        LoadIncrementalHFiles requires, return the manifest."""
-        hfile.validate_layout(self.spark, path, rollup=rollup)
-        return hfile.build_manifest(self.spark, path)
+        LoadIncrementalHFiles requires, return the manifest that the same
+        readback pass derived."""
+        return hfile.validate_layout(self.spark, path, rollup=rollup)
 
     # -- maintenance crons (:126-154 → manager/HBaseManager.java) ----------
     def merge_small_regions(self, regions: DataFrame, now_ms: int) -> DataFrame:

@@ -479,7 +479,7 @@ def q56_bulkload_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = tempfile.mkdtemp(prefix="q56hfiles")
     try:
         hfile.write_hfiles(
-            kv, d, rollup=True, num_partitions=16, manifest=False,
+            kv, d, rollup=True, manifest=False,
             presorted=True,  # kv IS bulkload_kv output (r09, guide §2.4)
         )
         # full-corpus summary: native parquet readback (the sink IS parquet

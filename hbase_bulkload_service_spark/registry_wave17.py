@@ -57,7 +57,7 @@ def q167_hfilev3_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     # manifest-level layout checks in the driver (container-agnostic:
     # bucket-prefix spans, file caps, region disjointness); the per-file
     # container invariants run inside the distributed reading tasks
-    summary = hfile.validate_hfl2_layout(d, rollup=True, deep=False)
+    summary = hfile.validate_manifest_layout(d, rollup=True)
     assert not summary["per_record_validated"] and summary["pending"]
     back = hfilev3.read_hfilev3_dir(spark, d)
     return back.groupBy("region").agg(
@@ -100,7 +100,7 @@ def q168_hfilev3_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     hfilev3.write_hfilev3_files(
         kv, d, rollup=True, num_partitions=16, compression="GZ"
     )
-    hfile.validate_hfl2_layout(d, rollup=True, deep=False)
+    hfile.validate_manifest_layout(d, rollup=True)
     back = hfilev3.read_hfilev3_dir(spark, d)
     return back.groupBy("region").agg(
         F.count("*").alias("n_cells"),
@@ -150,7 +150,7 @@ def q169_hfilev3_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         kv, d, rollup=True, num_partitions=16,
         compression="GZ", encoding="DIFF", bloom=True,
     )
-    hfile.validate_hfl2_layout(d, rollup=True, deep=False)
+    hfile.validate_manifest_layout(d, rollup=True)
     back = hfilev3.read_hfilev3_dir(spark, d)
     return back.groupBy("region").agg(
         F.count("*").alias("n_cells"),

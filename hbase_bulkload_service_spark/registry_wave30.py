@@ -53,7 +53,7 @@ def q221_hfilev3_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
         kv, d, rollup=True, num_partitions=16,
         compression="SNAPPY", encoding="DIFF", bloom=True,
     )
-    hfile.validate_hfl2_layout(d, rollup=True, deep=False)
+    hfile.validate_manifest_layout(d, rollup=True)
     back = hfilev3.read_hfilev3_dir(spark, d)
     from hbase_bulkload_service_spark.functions.codec import decode_double_be
 

@@ -63,14 +63,14 @@ def q115_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# q116 — bulkload e2e through the HFL2 BINARY container (block index +
-# ROW bloom + DIFF encoding — the HFile v3 features the reference's table
-# config enables: HBaseManager.java:379-385, HFileOutputUtil.java:20-26)
+# Container-agnostic bulkload oracle (q116, retired below, was its first
+# gate)
 # ===========================================================================
 
-# Shared by q116 (HFL2 stand-in container) and q167 (real HFile v3
-# container, registry_wave17): the oracle recomputes the bulkload
-# pipeline from source data and is container-agnostic by construction.
+# Shared by the real HFile v3 container gates (q167-q169 in
+# registry_wave17, q221 in registry_wave30): the oracle recomputes the
+# bulkload pipeline from source data and is container-agnostic by
+# construction.
 HFL_CONTAINER_ORACLE = f"""
     WITH {TSDB_CELLS_CTE},
     c1 AS (
@@ -104,15 +104,14 @@ HFL_CONTAINER_ORACLE = f"""
 
 # q116_hfl2_container RETIRED round 8 (VERDICT r07 item 3): the HFL2
 # stand-in container it exercised has been fully superseded by the real
-# HFile v3 path — q167 (container, SAME oracle below), q169 (full DDL),
+# HFile v3 path — q167 (container, SAME oracle above), q169 (full DDL),
 # q170 (byte-level bloom+index seek), q221 (DIFF+SNAPPY+compound-bloom
-# DDL codec). Every container invariant q116 enforced in-task (magic,
-# index<->block agreement, DIFF decode, global sort, bloom membership,
-# per-region aggregate parity with the manifest) is pinned by
-# tests/test_bulkload_hfile.py::{test_hfl2_unit_roundtrip,
-# test_hfl2_distributed_write_read} over the same write/read code path;
-# retiring the registry entry drops ~20 s from every local bench run
-# with zero coverage loss (COVERAGE.md H1 row updated).
+# DDL codec). The stand-in container itself has since been deleted; the
+# container invariants q116 enforced in-task (magic, index<->block
+# agreement, block decode, global sort, bloom membership, per-region
+# aggregate parity with the manifest) are pinned on the v3 container by
+# tests/test_hfilev3.py, and the wrong-region mapping check by
+# tests/test_bulkload_hfile.py::test_v3_wrong_region_mapping_is_caught.
 
 
 # ===========================================================================

@@ -1,5 +1,5 @@
 """HFile-layout sink (SURVEY.md §2.H H1-H3) — sorted, per-region,
-non-overlapping KV files + manifest, with a pluggable binary container.
+non-overlapping KV files + manifest.
 
 Reference writers:
 - H1 stock `HFileOutputFormat2` config (bulkload/HFileOutputUtil.java:17-39:
@@ -14,12 +14,11 @@ Spark-first design (SURVEY.md §4.2): instead of relying on each task's
 stream being sorted and hoping partitions don't overlap (the reference's
 contract), the requirement is declared once —
 ``repartitionByRange(region, key) + sortWithinPartitions`` — giving
-globally non-overlapping, internally sorted files per region. The default
-container is sorted parquet (snappy) per region directory; `HFL1` is a
-minimal pure-Python binary KV container for jar-less HFile-shaped output
-(PySpark cannot instantiate HFileOutputFormat2 without HBase jars; the
-sorted/partitioned layout is the tested contract, the container is
-pluggable — SURVEY.md §4.2 point 2).
+globally non-overlapping, internally sorted files per region. This module
+writes the layout as sorted parquet (snappy) per region directory; the
+real HFile v3 byte format over the same layout lives in
+``sources/hfilev3.py`` (PySpark cannot instantiate HFileOutputFormat2
+without HBase jars, so that writer is pure Python).
 
 The adoption step (LoadIncrementalHFiles, HBaseController.java:232-254, H7)
 is an external contract: `validate_layout` is the no-op load stub that
@@ -30,17 +29,12 @@ from __future__ import annotations
 
 import json
 import os
-import struct
 
 from pyspark.sql import DataFrame
-
-from hbase_bulkload_service_spark.session import local_frame
 from pyspark.sql import functions as F
 
 MAX_FILES_PER_REGION = 2048  # HFileOutputUtil.java:20
 ROLLUP_BUCKETS_PER_REGION = 8  # HadoopOutputFormat3.java:24,97
-
-HFL1_MAGIC = b"HFL1"
 
 
 def assign_region(kv: DataFrame, rollup: bool = False) -> DataFrame:
@@ -79,12 +73,18 @@ def write_hfiles(
     flagship plan carried ``Exchange rangepartitioning(bucket, key,
     qualifier)`` directly under ``Exchange rangepartitioning(region, key,
     qualifier)``, each a full shuffle of the kv payload plus a sampling
-    pass). Callers with arbitrary kv frames keep the default.
+    pass). Callers with arbitrary kv frames keep the default. The input's
+    partitioning is kept as is, so ``num_partitions`` cannot apply and
+    passing both raises ``ValueError``.
 
     ``manifest=False`` skips the readback pass; a caller that re-reads the
     output anyway can derive the same stats from its own scan and persist
     them with :func:`write_manifest` (avoids scanning the data twice).
     """
+    if presorted and num_partitions is not None:
+        raise ValueError(
+            "presorted=True keeps the input's partitioning; drop num_partitions"
+        )
     regions = assign_region(kv, rollup)
     if not presorted:
         n = num_partitions or 64
@@ -104,7 +104,7 @@ def write_hfiles(
     return m
 
 
-def write_manifest(path: str, manifest: dict) -> None:
+def write_manifest(path: str, manifest: dict | list) -> None:
     with open(os.path.join(path, "_manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
 
@@ -126,45 +126,44 @@ def manifest_from_region_stats(rows) -> dict:
     }
 
 
-def build_manifest(spark, path: str) -> dict:
-    df = spark.read.parquet(path)
+def _region_stats(spark, path: str, step: int = 1) -> list:
+    """The one readback pass over a parquet layout: per region, its row
+    count, key span, and the count of rows whose ``bucket div step`` is not
+    the region they landed in. Sorted by region in the driver (a few
+    hundred rows), so the pass is a single aggregation job."""
     rows = (
-        df.groupBy("region")
+        spark.read.parquet(path)
+        .groupBy("region")
         .agg(
             F.count("*").alias("rows"),
             F.min("key_hex").alias("min_key_hex"),
             F.max("key_hex").alias("max_key_hex"),
+            F.count_if(F.expr(f"bucket div {step}") != F.col("region")).alias(
+                "wrong_region"
+            ),
         )
-        .orderBy("region")
         .collect()
     )
-    return {
-        "regions": {
-            str(r["region"]): {
-                "rows": r["rows"],
-                "min_key_hex": r["min_key_hex"],
-                "max_key_hex": r["max_key_hex"],
-            }
-            for r in rows
-        }
-    }
+    return sorted(rows, key=lambda r: r["region"])
 
 
-def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True) -> None:
+def build_manifest(spark, path: str) -> dict:
+    return manifest_from_region_stats(_region_stats(spark, path))
+
+
+def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True):
     """No-op `load` stub (H7): assert what LoadIncrementalHFiles needs —
     per-region files internally sorted, regions non-overlapping in key
     space, region == its keys' bucket prefix, ≤2048 files per region.
-    Dispatches on the container: parquet layouts are checked via Spark,
-    binary HFL1/HFL2 layouts are parsed back record-by-record (for HFL2,
-    ``deep=False`` keeps only the O(files) manifest checks — pair it
-    with the distributed reader's in-task invariants at data scale)."""
-    names = os.listdir(path)
-    if any(n.endswith(".hfile") for n in names):
-        # real HFile v3 dir (sources/hfilev3.py): manifest-level layout
-        # checks are container-agnostic; per-file container invariants
-        # run in read_hfilev3_dir's tasks (deep=True re-parses in the
-        # driver — adoption/test scale only)
-        summary = validate_hfl2_layout(path, rollup, deep=False)
+
+    Dispatches on the container. A parquet layout is checked in one
+    Spark pass and the manifest that pass derived is returned. An HFile
+    v3 dir (``sources/hfilev3.py``) gets the manifest-level checks of
+    :func:`validate_manifest_layout`; ``deep=True`` also parses every
+    file back in the driver (adoption/test scale only). It returns the
+    check summary."""
+    if any(n.endswith(".hfile") for n in os.listdir(path)):
+        summary = validate_manifest_layout(path, rollup)
         if deep:
             from hbase_bulkload_service_spark.sources import hfilev3
 
@@ -179,30 +178,20 @@ def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True) -
             summary["pending"] = None
             summary["checked"].append("hfilev3-per-file-parse")
         return summary
-    if any(n.endswith(".hfl2") for n in names):
-        return validate_hfl2_layout(path, rollup, deep=deep)
-    if any(n.endswith(".hfl1") for n in names):
-        return validate_hfl1_layout(path, rollup)
-    df = spark.read.parquet(path)
     step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
+    stats = _region_stats(spark, path, step)
 
-    bad_bucket = df.filter(F.expr(f"bucket div {step}") != F.col("region")).count()
+    bad_bucket = sum(r["wrong_region"] for r in stats)
     if bad_bucket:
         raise AssertionError(f"{bad_bucket} rows landed in the wrong region")
 
-    bounds = (
-        df.groupBy("region")
-        .agg(F.min("key_hex").alias("lo"), F.max("key_hex").alias("hi"))
-        .orderBy("region")
-        .collect()
-    )
     prev_hi, prev_region = None, None
-    for r in bounds:
-        if prev_hi is not None and r["lo"] < prev_hi:
+    for r in stats:
+        if prev_hi is not None and r["min_key_hex"] < prev_hi:
             raise AssertionError(
                 f"regions {prev_region} and {r['region']} overlap in key space"
             )
-        prev_hi, prev_region = r["hi"], r["region"]
+        prev_hi, prev_region = r["max_key_hex"], r["region"]
 
     for region_dir in sorted(os.listdir(path)):
         if not region_dir.startswith("region="):
@@ -216,162 +205,7 @@ def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True) -
             raise AssertionError(
                 f"{region_dir}: {len(files)} files > {MAX_FILES_PER_REGION}"
             )
-
-
-# ---------------------------------------------------------------------------
-# HFL1 — minimal binary sorted-KV container (jar-less HFile stand-in)
-# ---------------------------------------------------------------------------
-
-def _hfl1_encode_records(rows) -> tuple[bytes, int, bytes | None, bytes | None]:
-    body = bytearray()
-    count = 0
-    first = last = None
-    for rec in rows:
-        key = rec[0]
-        if last is not None and key < last:
-            raise AssertionError("HFL1 input not sorted by key")
-        body.extend(struct.pack(">IIII", *(len(p) for p in rec)))
-        for p in rec:
-            body.extend(p)
-        first = first if first is not None else key
-        last = key
-        count += 1
-    return bytes(body), count, first, last
-
-
-def _rolling_write_arrow(sorted_kv: DataFrame, write_region_file) -> list[dict]:
-    """Shared Arrow-batched rolling writer: stream the range-partitioned,
-    sorted KV frame through mapInPandas (one Arrow batch at a time — the
-    old ``.rdd.mapPartitionsWithIndex`` path converted every InternalRow
-    to a Python Row, a per-CELL pickle tax on the flagship write), roll a
-    file on region change, and collect only the per-file manifest rows.
-    ``write_region_file(region, pid, cells)`` gets the accumulated
-    ``(key, family, qualifier, value)`` bytes tuples and returns the
-    manifest dict."""
-    stream = sorted_kv.select(
-        "region",
-        "key",
-        "family",
-        "qualifier",
-        "value",
-        F.spark_partition_id().alias("__pid"),
-    )
-
-    def write_batches(batches):
-        import pandas as pd
-
-        out: list[dict] = []
-        current_region, buf, pid = None, [], None
-
-        def flush():
-            if current_region is None or not buf:
-                return
-            out.append(write_region_file(int(current_region), int(pid), buf))
-
-        for pdf in batches:
-            for region, key, fam, qual, val, p in zip(
-                pdf["region"], pdf["key"], pdf["family"],
-                pdf["qualifier"], pdf["value"], pdf["__pid"],
-            ):
-                if region != current_region:
-                    flush()
-                    current_region, buf = region, []
-                pid = p
-                buf.append((bytes(key), bytes(fam), bytes(qual), bytes(val)))
-        flush()
-        if out:
-            yield pd.DataFrame(out)
-
-    rows = stream.mapInPandas(
-        write_batches,
-        "file string, region int, rows long, "
-        "min_key_hex string, max_key_hex string",
-    ).collect()
-    return sorted(
-        (r.asDict() for r in rows), key=lambda r: (r["region"], r["file"])
-    )
-
-
-def write_hfl1_files(kv: DataFrame, path: str, rollup: bool = False) -> list[dict]:
-    """Binary-container variant of the H2/H3 writer: each task writes one
-    HFL1 file per region it holds, rolling on region change exactly like
-    HadoopOutputFormat2.writeRecord (:85-100). Input must already be range
-    partitioned + sorted (use through `operators.tsdb.bulkload_kv`)."""
-    os.makedirs(path, exist_ok=True)
-    regions = assign_region(kv, rollup)
-    sorted_kv = regions.repartitionByRange(
-        16, "region", "key", "qualifier"
-    ).sortWithinPartitions("region", "key", "qualifier")
-
-    def write_region_file(region: int, pid: int, cells) -> dict:
-        body, count, first, last = _hfl1_encode_records(cells)
-        fname = os.path.join(path, f"region_{region:05d}_p{pid:05d}.hfl1")
-        trailer = struct.pack(">I", count) + first + last
-        with open(fname, "wb") as f:
-            f.write(HFL1_MAGIC)
-            f.write(body)
-            f.write(struct.pack(">I", len(trailer)))
-            f.write(trailer)
-        return {
-            "file": os.path.basename(fname),
-            "region": region,
-            "rows": count,
-            "min_key_hex": first.hex().upper(),
-            "max_key_hex": last.hex().upper(),
-        }
-
-    manifest = _rolling_write_arrow(sorted_kv, write_region_file)
-    with open(os.path.join(path, "_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    return manifest
-
-
-def read_hfl1_file(fname: str):
-    """Parse an HFL1 file back into (key, family, qualifier, value)
-    records; verifies magic, trailer count/bounds and sort order."""
-    with open(fname, "rb") as f:
-        data = f.read()
-    if data[:4] != HFL1_MAGIC:
-        raise AssertionError(f"{fname}: bad HFL1 magic")
-    # trailer: ... body | trailer_len(4) | trailer — variable-length keys
-    # make end-parsing ambiguous for HFL1, so walk forward instead
-    records = []
-    off = 4
-    prev = None
-    # records run until 4 + body_len; body_len = len(data) - 4 - 4 - trailer
-    # walk until the next 16 bytes can't be a record header that fits
-    while off + 16 <= len(data):
-        klen, flen, qlen, vlen = struct.unpack_from(">IIII", data, off)
-        rec_end = off + 16 + klen + flen + qlen + vlen
-        if rec_end > len(data) - 4:
-            break  # ran into trailer_len + trailer
-        o = off + 16
-        key = data[o : o + klen]; o += klen
-        fam = data[o : o + flen]; o += flen
-        qual = data[o : o + qlen]; o += qlen
-        val = data[o : o + vlen]
-        if prev is not None and key < prev:
-            raise AssertionError(f"{fname}: records out of order")
-        prev = key
-        records.append((key, fam, qual, val))
-        off = rec_end
-    (trailer_len,) = struct.unpack_from(">I", data, off)
-    # positive end-of-parse check: the walk must land EXACTLY on the
-    # trailer_len field and the trailer must close the file — otherwise
-    # trailer bytes that happened to parse as a fitting record header
-    # were swallowed as a record (detected here explicitly, not via the
-    # incidental count mismatch below)
-    if off + 4 + trailer_len != len(data):
-        raise AssertionError(
-            f"{fname}: record walk ended at {off}, but trailer of"
-            f" {trailer_len} bytes does not close the {len(data)}-byte file"
-            " (misparsed record boundary)"
-        )
-    trailer = data[off + 4 : off + 4 + trailer_len]
-    (count,) = struct.unpack_from(">I", trailer, 0)
-    if count != len(records):
-        raise AssertionError(f"{fname}: trailer count {count} != {len(records)}")
-    return records
+    return manifest_from_region_stats(stats)
 
 
 def _check_bucket_prefix(key_hex: str, region: int, step: int, where: str) -> None:
@@ -381,32 +215,31 @@ def _check_bucket_prefix(key_hex: str, region: int, step: int, where: str) -> No
         raise AssertionError(f"{where}: key {key_hex[:4]} not in region {region}")
 
 
-def validate_hfl1_layout(path: str, rollup: bool = False) -> None:
-    """Binary readback check for an HFL1 directory: every file parses
-    clean and sorted, manifest bounds agree, region == its keys' bucket
-    prefix, ≤2048 files per region, regions non-overlapping."""
+def validate_manifest_layout(path: str, rollup: bool = False) -> dict:
+    """Adoption check over a per-file ``_manifest.json`` (the list of
+    ``{file, region, rows, min_key_hex, max_key_hex}`` a rolling writer
+    emits): each file's key span sits in its region's bucket prefix (div
+    8 under ``rollup``), per-region file count ≤ 2048, and regions are
+    non-overlapping in key space. O(files) metadata, no file is opened.
+
+    Returns a summary of what WAS checked: ``per_record_validated`` is
+    False and ``pending`` names the distributed step the caller still
+    owes — gates assert on it instead of silently assuming full coverage
+    (VERDICT r04 advice)."""
     step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
     with open(os.path.join(path, "_manifest.json")) as f:
         manifest = json.load(f)
     per_region: dict[int, list[dict]] = {}
     for m in manifest:
         per_region.setdefault(m["region"], []).append(m)
-        records = read_hfl1_file(os.path.join(path, m["file"]))
-        if not records:
-            raise AssertionError(f"{m['file']}: empty HFL1 file")
-        if (
-            records[0][0].hex().upper() != m["min_key_hex"]
-            or records[-1][0].hex().upper() != m["max_key_hex"]
-            or len(records) != m["rows"]
-        ):
-            raise AssertionError(f"{m['file']}: manifest/content disagree")
-        for rec in records:
-            _check_bucket_prefix(rec[0].hex().upper(), m["region"], step, m["file"])
+        _check_bucket_prefix(m["min_key_hex"], m["region"], step, m["file"])
+        _check_bucket_prefix(m["max_key_hex"], m["region"], step, m["file"])
     for region, files in per_region.items():
         if len(files) > MAX_FILES_PER_REGION:
             raise AssertionError(
                 f"region {region}: {len(files)} files > {MAX_FILES_PER_REGION}"
             )
+    # region key ranges must not overlap (region order = key order)
     spans = sorted(
         (
             min(f["min_key_hex"] for f in files),
@@ -418,395 +251,6 @@ def validate_hfl1_layout(path: str, rollup: bool = False) -> None:
     for (_lo_a, hi_a, ra), (lo_b, _hi_b, rb) in zip(spans, spans[1:]):
         if lo_b < hi_a and ra != rb:
             raise AssertionError(f"regions {ra} and {rb} overlap in key space")
-
-
-# ---------------------------------------------------------------------------
-# HFL2 — blocked binary container with block index, ROW bloom and
-# DIFF-style key encoding (the HFile v3 features the reference's table
-# config turns on: HBaseManager.java:379-385 sets DataBlockEncoding.DIFF
-# + BloomType.ROW + snappy; HFileOutputUtil.java:20-26 sets the 2048
-# file cap and hfile.compression=snappy)
-# ---------------------------------------------------------------------------
-
-HFL2_MAGIC = b"HFL2"
-HFL2_BLOCK_SIZE = 65536  # HFile default data-block size
-_BLOOM_BITS_PER_KEY = 10  # ~1% false-positive rate at k=7
-_BLOOM_K = 7
-
-
-def _bloom_hashes(key: bytes, m_bits: int):
-    """k positions for a ROW bloom — two independent 64-bit halves of
-    md5(key) combined Kirsch-Mitzenmacher style (h1 + i*h2)."""
-    import hashlib
-
-    d = hashlib.md5(key).digest()
-    h1 = int.from_bytes(d[:8], "big")
-    h2 = int.from_bytes(d[8:], "big") | 1
-    return [(h1 + i * h2) % m_bits for i in range(_BLOOM_K)]
-
-
-def _bloom_build(row_keys: list[bytes]) -> bytes:
-    m_bits = max(64, len(row_keys) * _BLOOM_BITS_PER_KEY)
-    bits = bytearray((m_bits + 7) // 8)
-    for key in row_keys:
-        for pos in _bloom_hashes(key, m_bits):
-            bits[pos >> 3] |= 1 << (pos & 7)
-    return struct.pack(">II", m_bits, _BLOOM_K) + bytes(bits)
-
-
-def bloom_might_contain(bloom: bytes, key: bytes) -> bool:
-    m_bits, _k = struct.unpack(">II", bloom[:8])
-    bits = bloom[8:]
-    return all(
-        bits[pos >> 3] & (1 << (pos & 7)) for pos in _bloom_hashes(key, m_bits)
-    )
-
-
-def _common_prefix_len(a: bytes, b: bytes) -> int:
-    n = min(len(a), len(b))
-    i = 0
-    while i < n and a[i] == b[i]:
-        i += 1
-    return i
-
-
-def _encode_block(records: list[tuple[bytes, bytes, bytes, bytes]]) -> bytes:
-    """DIFF-style record encoding: each key stores only the suffix after
-    its shared prefix with the previous key; a repeated family is elided
-    (fam_len=0 ⇒ same as previous) — the two deltas HBase's DIFF block
-    encoding exploits on sorted TSDB keys."""
-    out = bytearray()
-    prev_key = b""
-    prev_fam: bytes | None = None
-    for key, fam, qual, val in records:
-        plen = _common_prefix_len(prev_key, key)
-        fam_out = b"" if fam == prev_fam else fam
-        out.extend(
-            struct.pack(
-                ">HHBHI", plen, len(key) - plen, len(fam_out), len(qual), len(val)
-            )
-        )
-        out.extend(key[plen:])
-        out.extend(fam_out)
-        out.extend(qual)
-        out.extend(val)
-        prev_key, prev_fam = key, fam
-    return bytes(out)
-
-
-def _decode_block(payload: bytes) -> list[tuple[bytes, bytes, bytes, bytes]]:
-    records = []
-    prev_key = b""
-    prev_fam = b""
-    off = 0
-    while off < len(payload):
-        plen, slen, flen, qlen, vlen = struct.unpack_from(">HHBHI", payload, off)
-        off += 11
-        key = prev_key[:plen] + payload[off : off + slen]
-        off += slen
-        fam = payload[off : off + flen] if flen else prev_fam
-        off += flen
-        qual = payload[off : off + qlen]
-        off += qlen
-        val = payload[off : off + vlen]
-        off += vlen
-        records.append((key, fam, qual, val))
-        prev_key, prev_fam = key, fam
-    return records
-
-
-def _try_snappy():
-    """HFL2 compresses blocks with snappy when a codec is importable
-    (hfile.compression=snappy in the reference); raw blocks otherwise —
-    the flag travels in the block header so readers never guess."""
-    try:
-        import snappy  # type: ignore
-
-        return snappy.compress, snappy.decompress
-    except Exception:
-        return None, None
-
-
-def _write_hfl2_file(
-    fname: str, records: list[tuple[bytes, bytes, bytes, bytes]]
-) -> dict:
-    """One sorted HFL2 file: blocked DIFF-encoded records, a block index
-    (first_key + offset + length per block), a ROW bloom over the row
-    keys, a JSON meta block, and a fixed-size seekable trailer.
-
-    Layout:  MAGIC | data blocks | block index | bloom | meta |
-             trailer(index_off, bloom_off, meta_off, n_blocks) | MAGIC
-    """
-    compress, _ = _try_snappy()
-    blocks: list[tuple[bytes, bytes]] = []  # (first_key, encoded payload)
-    cur: list[tuple[bytes, bytes, bytes, bytes]] = []
-    cur_size = 0
-    prev_key: bytes | None = None
-    for rec in records:
-        if prev_key is not None and rec[0] < prev_key:
-            raise AssertionError("HFL2 input not sorted by key")
-        prev_key = rec[0]
-        cur.append(rec)
-        cur_size += sum(len(p) for p in rec) + 11
-        if cur_size >= HFL2_BLOCK_SIZE:
-            blocks.append((cur[0][0], _encode_block(cur)))
-            cur, cur_size = [], 0
-    if cur:
-        blocks.append((cur[0][0], _encode_block(cur)))
-
-    with open(fname, "wb") as f:
-        f.write(HFL2_MAGIC)
-        index_entries = []
-        off = len(HFL2_MAGIC)
-        for first_key, payload in blocks:
-            stored = compress(payload) if compress else payload
-            hdr = struct.pack(">BII", 1 if compress else 0, len(stored), len(payload))
-            f.write(hdr)
-            f.write(stored)
-            index_entries.append((first_key, off, len(hdr) + len(stored)))
-            off += len(hdr) + len(stored)
-        index_off = off
-        f.write(struct.pack(">I", len(index_entries)))
-        for first_key, boff, blen in index_entries:
-            f.write(struct.pack(">HQI", len(first_key), boff, blen))
-            f.write(first_key)
-        bloom_off = f.tell()
-        f.write(_bloom_build([r[0] for r in records]))
-        meta_off = f.tell()
-        meta = {
-            "rows": len(records),
-            "min_key_hex": records[0][0].hex().upper(),
-            "max_key_hex": records[-1][0].hex().upper(),
-            "encoding": "DIFF",
-            "bloom": "ROW",
-            "compression": "snappy" if compress else "none",
-        }
-        f.write(json.dumps(meta, sort_keys=True).encode())
-        f.write(struct.pack(">QQQI", index_off, bloom_off, meta_off, len(blocks)))
-        f.write(HFL2_MAGIC)
-    return meta
-
-
-def read_hfl2_file(fname: str, verify_bloom: bool = False):
-    """Parse an HFL2 file back into (key, family, qualifier, value)
-    records via its block index — the adoption-side reader. Verifies
-    magic, trailer, index↔block agreement and global sort; with
-    ``verify_bloom`` every row key is tested against the ROW bloom
-    (a build bug shows up as a false NEGATIVE, which blooms never have).
-    """
-    _, decompress = _try_snappy()
-    with open(fname, "rb") as f:
-        data = f.read()
-    if data[:4] != HFL2_MAGIC or data[-4:] != HFL2_MAGIC:
-        raise AssertionError(f"{fname}: bad HFL2 magic")
-    index_off, bloom_off, meta_off, n_blocks = struct.unpack_from(
-        ">QQQI", data, len(data) - 4 - 28
-    )
-    meta = json.loads(data[meta_off : len(data) - 4 - 28])
-    bloom = data[bloom_off:meta_off]
-    # block index
-    entries = []
-    off = index_off
-    (n_idx,) = struct.unpack_from(">I", data, off)
-    off += 4
-    if n_idx != n_blocks:
-        raise AssertionError(f"{fname}: index count {n_idx} != trailer {n_blocks}")
-    for _ in range(n_idx):
-        klen, boff, blen = struct.unpack_from(">HQI", data, off)
-        off += 14
-        entries.append((data[off : off + klen], boff, blen))
-        off += klen
-    records = []
-    prev = None
-    for first_key, boff, blen in entries:
-        comp_flag, stored_len, raw_len = struct.unpack_from(">BII", data, boff)
-        payload = data[boff + 9 : boff + 9 + stored_len]
-        if comp_flag:
-            if decompress is None:
-                raise AssertionError(f"{fname}: snappy block, no codec available")
-            payload = decompress(payload)
-        if len(payload) != raw_len:
-            raise AssertionError(f"{fname}: block length mismatch at {boff}")
-        block = _decode_block(payload)
-        if block[0][0] != first_key:
-            raise AssertionError(f"{fname}: index first_key mismatch at {boff}")
-        for rec in block:
-            if prev is not None and rec[0] < prev:
-                raise AssertionError(f"{fname}: records out of order")
-            prev = rec[0]
-            records.append(rec)
-    if len(records) != meta["rows"]:
-        raise AssertionError(f"{fname}: row count {len(records)} != meta")
-    if verify_bloom:
-        for rec in records:
-            if not bloom_might_contain(bloom, rec[0]):
-                raise AssertionError(f"{fname}: ROW bloom false negative")
-    return records, meta
-
-
-def write_hfl2_files(
-    kv: DataFrame, path: str, rollup: bool = False, num_partitions: int = 16
-) -> list[dict]:
-    """H2/H3 rolling writer over the HFL2 container: range-partition +
-    sort once (globally non-overlapping regions, the §4.2 contract), then
-    each task rolls one file per region it holds — block index, ROW
-    bloom and DIFF encoding per file. Same manifest shape as
-    write_hfl1_files."""
-    os.makedirs(path, exist_ok=True)
-    regions = assign_region(kv, rollup)
-    sorted_kv = regions.repartitionByRange(
-        num_partitions, "region", "key", "qualifier"
-    ).sortWithinPartitions("region", "key", "qualifier")
-
-    def write_region_file(region: int, pid: int, cells) -> dict:
-        fname = os.path.join(path, f"region_{region:05d}_p{pid:05d}.hfl2")
-        meta = _write_hfl2_file(fname, cells)
-        return {
-            "file": os.path.basename(fname),
-            "region": region,
-            "rows": meta["rows"],
-            "min_key_hex": meta["min_key_hex"],
-            "max_key_hex": meta["max_key_hex"],
-        }
-
-    manifest = _rolling_write_arrow(sorted_kv, write_region_file)
-    with open(os.path.join(path, "_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    return manifest
-
-
-def read_hfl2_dir(spark, path: str, verify_bloom: bool = False) -> DataFrame:
-    """Distributed HFL2 readback: one task per file (manifest-driven),
-    each parsing its file through :func:`read_hfl2_file` (which enforces
-    the container invariants as it reads). Returns (region, key, key_hex,
-    family, qualifier, qualifier_hex, value)."""
-    with open(os.path.join(path, "_manifest.json")) as f:
-        manifest = json.load(f)
-    files = [
-        (
-            os.path.join(path, m["file"]),
-            m["region"],
-            (m["rows"], m["min_key_hex"], m["max_key_hex"]),
-        )
-        for m in manifest
-    ]
-
-    # Arrow-batched readback (same change as hfilev3.read_hfilev3_dir):
-    # parallelize+createDataFrame(rdd) pickled every cell row Python->JVM
-    # with per-row verification; mapInPandas ships one Arrow batch per
-    # file. Manifest <-> file meta agreement is still enforced IN the
-    # reading task, so deep=False layout validation loses no coverage.
-    meta_df = local_frame(spark,
-        [(f, r, e[0], e[1], e[2]) for f, r, e in files],
-        "fname string, region int, exp_rows long, exp_min string, "
-        "exp_max string",
-    ).repartition(
-        # round-robin; one file per task only while the cluster has the
-        # slots — each Python-runner task costs ~0.25 s of harness
-        # overhead even with warm reused workers (measured: an identity
-        # 79-task mapInPandas burns ~20 s executor CPU doing nothing),
-        # so on a 32-core box 79 single-file tasks pay more harness than
-        # parse. At cluster scale defaultParallelism >> files and this
-        # stays one file per task.
-        max(1, min(len(files), spark.sparkContext.defaultParallelism))
-    )
-
-    def parse_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for fname, region, erows, emin, emax in pdf.itertuples(
-                index=False
-            ):
-                records, meta = read_hfl2_file(
-                    fname, verify_bloom=verify_bloom
-                )
-                if (
-                    meta["rows"],
-                    meta["min_key_hex"],
-                    meta["max_key_hex"],
-                ) != (erows, emin, emax):
-                    raise AssertionError(f"{fname}: manifest/meta disagree")
-                if not records:
-                    continue  # empty frame would poison Arrow dtype inference
-                yield pd.DataFrame(
-                    {
-                        "region": [region] * len(records),
-                        "key": [r[0] for r in records],
-                        "key_hex": [r[0].hex().upper() for r in records],
-                        "family": [r[1] for r in records],
-                        "qualifier": [r[2] for r in records],
-                        "qualifier_hex": [r[2].hex().upper() for r in records],
-                        "value": [r[3] for r in records],
-                    }
-                )
-
-    return meta_df.mapInPandas(
-        parse_batches,
-        "region int, key binary, key_hex string, family binary, "
-        "qualifier binary, qualifier_hex string, value binary",
-    )
-
-
-def validate_hfl2_layout(
-    path: str, rollup: bool = False, deep: bool = True
-) -> dict:
-    """Adoption check for the binary container (H7 over HFL2): every file
-    parses clean (magic, index, DIFF decode, sort), per-region file count
-    ≤ 2048, file key ranges match the manifest, region == its keys'
-    bucket prefix (div 8 under ``rollup``), and regions are
-    non-overlapping in key space. ``deep=True`` re-parses every file in
-    the DRIVER — test/adoption scale only; at data scale pass
-    ``deep=False`` (manifest-level checks only, O(files) metadata) and
-    run the DISTRIBUTED reader for the per-file invariants —
-    read_hfl2_dir(verify_bloom=True) enforces magic/index/DIFF/sort/bloom
-    inside each reading task.
-
-    Returns a summary of what WAS checked: with deep=False,
-    ``per_record_validated`` is False and ``pending`` names the
-    distributed step the caller still owes — gates assert on it instead
-    of silently assuming full coverage (VERDICT r04 advice)."""
-    step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
-    with open(os.path.join(path, "_manifest.json")) as f:
-        manifest = json.load(f)
-    per_region: dict[int, list[dict]] = {}
-    for m in manifest:
-        per_region.setdefault(m["region"], []).append(m)
-        # region == bucket-prefix holds for the span ends even at
-        # deep=False (manifest-only, O(files) metadata)
-        _check_bucket_prefix(m["min_key_hex"], m["region"], step, m["file"])
-        _check_bucket_prefix(m["max_key_hex"], m["region"], step, m["file"])
-    for region, files in per_region.items():
-        if len(files) > MAX_FILES_PER_REGION:
-            raise AssertionError(
-                f"region {region}: {len(files)} files > {MAX_FILES_PER_REGION}"
-            )
-    # manifest agrees with each file's own meta block
-    if deep:
-        for m in manifest:
-            records, meta = read_hfl2_file(os.path.join(path, m["file"]))
-            if (meta["min_key_hex"], meta["max_key_hex"], meta["rows"]) != (
-                m["min_key_hex"],
-                m["max_key_hex"],
-                m["rows"],
-            ):
-                raise AssertionError(f"{m['file']}: manifest/meta disagree")
-            for rec in records:
-                _check_bucket_prefix(
-                    rec[0].hex().upper(), m["region"], step, m["file"]
-                )
-    # region key ranges must not overlap (region order = key order)
-    spans = sorted(
-        (
-            min(f["min_key_hex"] for f in files),
-            max(f["max_key_hex"] for f in files),
-            region,
-        )
-        for region, files in per_region.items()
-    )
-    for (lo_a, hi_a, ra), (lo_b, _hi_b, rb) in zip(spans, spans[1:]):
-        if lo_b < hi_a and ra != rb:
-            raise AssertionError(f"regions {ra} and {rb} overlap in key space")
     return {
         "files": len(manifest),
         "regions": len(per_region),
@@ -814,11 +258,8 @@ def validate_hfl2_layout(
             "manifest-span-bucket-prefix",
             "files-per-region-cap",
             "region-span-disjointness",
-        ]
-        + (["per-record-parse+prefix", "manifest-meta-agreement"] if deep else []),
-        "per_record_validated": bool(deep),
-        "pending": None
-        if deep
-        else "read_hfl2_dir(verify_bloom=True) — distributed per-file"
-        " magic/index/DIFF/sort/bloom invariants",
+        ],
+        "per_record_validated": False,
+        "pending": "read_hfilev3_dir — distributed per-file trailer/index/"
+        "checksum/sort invariants",
     }

@@ -4,8 +4,8 @@ This is the adoption-fidelity container behind H1/H7 (SURVEY.md §2): the
 reference hands its output to ``LoadIncrementalHFiles`` (reference
 ``controller/HBaseController.java:232-254``, ``HFileOutputUtil.java:17-39``),
 which adopts files in the on-disk format HBase's ``HFile.Reader`` parses.
-Where HFL1/HFL2 are minimal stand-in containers proving the LAYOUT
-contract (sorted, per-region, non-overlapping), this module emits the
+Where ``sources/hfile.py`` writes the LAYOUT contract (sorted,
+per-region, non-overlapping) as parquet, this module emits the
 actual v3 structure, byte-for-byte per the public format (Apache HBase
 ``HFileBlock`` / ``FixedFileTrailer`` / ``HFileWriterImpl`` — all
 public-source knowledge):
@@ -70,6 +70,8 @@ import json
 import os
 import struct
 import zlib
+
+from pyspark.sql import functions as F
 
 from hbase_bulkload_service_spark.session import local_frame
 
@@ -1419,7 +1421,60 @@ def read_hfile_v3(fname: str) -> tuple[list, dict]:
     return cells, meta
 
 
-# --- Spark integration (same rolling contract as write_hfl2_files) ---------
+# --- Spark integration ------------------------------------------------------
+
+def _rolling_write_arrow(sorted_kv, write_region_file) -> list[dict]:
+    """Arrow-batched rolling writer: stream the range-partitioned, sorted
+    KV frame through mapInPandas (one Arrow batch at a time — the old
+    ``.rdd.mapPartitionsWithIndex`` path converted every InternalRow to a
+    Python Row, a per-CELL pickle tax on the flagship write), roll a file
+    on region change, and collect only the per-file manifest rows.
+    ``write_region_file(region, pid, cells)`` gets the accumulated
+    ``(key, family, qualifier, value)`` bytes tuples and returns the
+    manifest dict."""
+    stream = sorted_kv.select(
+        "region",
+        "key",
+        "family",
+        "qualifier",
+        "value",
+        F.spark_partition_id().alias("__pid"),
+    )
+
+    def write_batches(batches):
+        import pandas as pd
+
+        out: list[dict] = []
+        current_region, buf, pid = None, [], None
+
+        def flush():
+            if current_region is None or not buf:
+                return
+            out.append(write_region_file(int(current_region), int(pid), buf))
+
+        for pdf in batches:
+            for region, key, fam, qual, val, p in zip(
+                pdf["region"], pdf["key"], pdf["family"],
+                pdf["qualifier"], pdf["value"], pdf["__pid"],
+            ):
+                if region != current_region:
+                    flush()
+                    current_region, buf = region, []
+                pid = p
+                buf.append((bytes(key), bytes(fam), bytes(qual), bytes(val)))
+        flush()
+        if out:
+            yield pd.DataFrame(out)
+
+    rows = stream.mapInPandas(
+        write_batches,
+        "file string, region int, rows long, "
+        "min_key_hex string, max_key_hex string",
+    ).collect()
+    return sorted(
+        (r.asDict() for r in rows), key=lambda r: (r["region"], r["file"])
+    )
+
 
 def write_hfilev3_files(
     kv,
@@ -1435,21 +1490,19 @@ def write_hfilev3_files(
     each task rolls one HFile per region it holds. Input columns as
     bulkload_kv (bucket, key, key_hex, family, qualifier, qualifier_hex,
     value); cell timestamp is fixed at 0 (bulk loads carry the version in
-    the value/qualifier per the reference's TSDB layout). Same manifest
-    shape as write_hfl1_files/write_hfl2_files."""
-    from hbase_bulkload_service_spark.sources.hfile import assign_region
+    the value/qualifier per the reference's TSDB layout). Returns the
+    per-file manifest (``file, region, rows, min_key_hex, max_key_hex``),
+    also written to ``_manifest.json``."""
+    from hbase_bulkload_service_spark.sources.hfile import (
+        assign_region,
+        write_manifest,
+    )
 
     os.makedirs(path, exist_ok=True)
     regions = assign_region(kv, rollup)
     sorted_kv = regions.repartitionByRange(
         num_partitions, "region", "key", "qualifier"
     ).sortWithinPartitions("region", "key", "qualifier")
-
-    # Arrow-batched writer (sources/hfile.py:_rolling_write_arrow — the
-    # old .rdd.mapPartitionsWithIndex path paid a per-CELL Row pickle):
-    from hbase_bulkload_service_spark.sources.hfile import (
-        _rolling_write_arrow,
-    )
 
     def write_region_file(region: int, pid: int, cells) -> dict:
         fname = os.path.join(path, f"region_{region:05d}_p{pid:05d}.hfile")
@@ -1469,8 +1522,7 @@ def write_hfilev3_files(
         }
 
     manifest = _rolling_write_arrow(sorted_kv, write_region_file)
-    with open(os.path.join(path, "_manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    write_manifest(path, manifest)
     return manifest
 
 

@@ -260,7 +260,6 @@ def streaming_bulkload(
             kv,
             os.path.join(base_path, f"batch={int(batch_id)}"),
             rollup=rollup,
-            num_partitions=num_partitions,
             presorted=True,  # kv IS bulkload_kv output (r09, guide §2.4)
         )
 

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import json
 import os
-import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,9 +61,7 @@ def test_presorted_write_equals_default_write(spark, kv, tmp_path):
     p_default = str(tmp_path / "hf_default")
     p_presorted = str(tmp_path / "hf_presorted")
     hfile.write_hfiles(kv, p_default, rollup=True, num_partitions=8)
-    hfile.write_hfiles(
-        kv, p_presorted, rollup=True, num_partitions=8, presorted=True
-    )
+    hfile.write_hfiles(kv, p_presorted, rollup=True, presorted=True)
     a = spark.read.parquet(p_default)
     b = spark.read.parquet(p_presorted)
     cols = sorted(a.columns)
@@ -80,141 +77,98 @@ def test_presorted_write_equals_default_write(spark, kv, tmp_path):
     hfile.validate_layout(spark, p_presorted, rollup=True)
 
 
-def test_hfl1_binary_container(kv, tmp_path):
-    path = str(tmp_path / "hfl1")
-    manifest = hfile.write_hfl1_files(kv, path)
-    assert manifest
-    total = 0
-    for entry in manifest:
-        fpath = os.path.join(path, entry["file"])
-        with open(fpath, "rb") as f:
-            data = f.read()
-        assert data[:4] == hfile.HFL1_MAGIC
-        # layout: MAGIC | records | trailer_len(4B) | trailer
-        pos, last_key, n = 4, None, 0
-        for _ in range(entry["rows"]):
-            klen, flen, qlen, vlen = struct.unpack(">IIII", data[pos : pos + 16])
-            pos += 16
-            key = data[pos : pos + klen]
-            pos += klen + flen + qlen + vlen
-            if last_key is not None:
-                assert key >= last_key
-            last_key = key
-            n += 1
-        # after all records comes the trailer length prefix
-        (trailer_len,) = struct.unpack(">I", data[pos : pos + 4])
-        assert pos + 4 + trailer_len == len(data)
-        trailer = data[pos + 4 :]
-        (count,) = struct.unpack(">I", trailer[:4])
-        assert count == entry["rows"]
-        assert n == entry["rows"]
-        total += n
-    assert total == kv.count()
+def test_presorted_rejects_num_partitions(kv, tmp_path):
+    """presorted=True keeps the input's partitioning, so a num_partitions
+    passed alongside it could never take effect: refuse the combination."""
+    with pytest.raises(ValueError, match="num_partitions"):
+        hfile.write_hfiles(
+            kv, str(tmp_path / "both"), num_partitions=8, presorted=True
+        )
+
+
+def test_parquet_row_in_wrong_region_dir_is_caught(spark, kv, tmp_path):
+    """One row copied into another region's dir must fail the
+    bucket-div-step == region count of the parquet readback."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "hf_wrong_region")
+    hfile.write_hfiles(kv, path, num_partitions=8)
+    region_dirs = sorted(
+        d for d in os.listdir(path) if d.startswith("region=")
+    )
+    src_dir = os.path.join(path, region_dirs[0])
+    src = next(f for f in os.listdir(src_dir) if f.endswith(".parquet"))
+    row = pq.read_table(os.path.join(src_dir, src)).slice(0, 1)
+    pq.write_table(row, os.path.join(path, region_dirs[-1], "stray.parquet"))
+    with pytest.raises(AssertionError, match="wrong region"):
+        hfile.validate_layout(spark, path)
+
+
+def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
+    """Region dirs whose key spans overlap must fail even when every row
+    sits in its bucket's region (the parquet branch checks spans, not
+    key prefixes)."""
+    rows = [
+        (bucket, key_hex.encode(), key_hex, b"t", b"q", "71", b"v")
+        for bucket, key_hex in [(0, "0000AA"), (0, "0000CC"), (1, "0000BB")]
+    ]
+    kv = spark.createDataFrame(
+        rows,
+        "bucket int, key binary, key_hex string, family binary,"
+        " qualifier binary, qualifier_hex string, value binary",
+    )
+    path = str(tmp_path / "hf_overlap")
+    hfile.write_hfiles(kv, path, num_partitions=2)
+    with pytest.raises(AssertionError, match="overlap"):
+        hfile.validate_layout(spark, path)
+
+
+def test_load_hfiles_returns_written_manifest(spark, kv, tmp_path):
+    """Adoption returns the manifest its own validation pass derived; it
+    must equal the one the writer persisted."""
+    from hbase_bulkload_service_spark.api import BulkloadService
+
+    path = str(tmp_path / "hf_adopt")
+    hfile.write_hfiles(kv, path, num_partitions=8)
+    svc = BulkloadService(spark, lambda table: None, str(tmp_path))
     with open(os.path.join(path, "_manifest.json")) as f:
-        assert json.load(f) == manifest
-    # binary readback validation (H7 dispatch on container type)
-    hfile.validate_layout(None, path)
+        assert svc.load_hfiles(path) == json.load(f)
 
 
-def test_hfl2_unit_roundtrip(tmp_path):
-    """Pure-python HFL2 file: DIFF blocks + index + ROW bloom round-trip
-    exactly; bloom has no false negatives and few false positives."""
-    import hashlib
-
-    recs = []
-    for i in range(3000):
-        key = b"\x00\x01" + i.to_bytes(4, "big") + hashlib.md5(
-            str(i).encode()
-        ).digest()[:6]
-        recs.append((key, b"t", b"q%d" % (i % 7), hashlib.md5(key).digest()))
-    recs.sort(key=lambda r: r[0])
-    fn = str(tmp_path / "x.hfl2")
-    meta = hfile._write_hfl2_file(fn, recs)
-    assert meta["rows"] == 3000 and meta["encoding"] == "DIFF"
-    back, meta2 = hfile.read_hfl2_file(fn, verify_bloom=True)
-    assert back == recs
-    with open(fn, "rb") as f:
-        data = f.read()
-    _io, bloom_off, meta_off, n_blocks = struct.unpack_from(
-        ">QQQI", data, len(data) - 4 - 28
-    )
-    assert n_blocks >= 2  # actually blocked, not one giant block
-    bloom = data[bloom_off:meta_off]
-    fp = sum(
-        1
-        for i in range(1000)
-        if hfile.bloom_might_contain(bloom, b"absent-%d" % i)
-    )
-    assert fp < 50  # ~1% design rate, generous margin
-    # unsorted input must be rejected at write time
-    with pytest.raises(AssertionError, match="not sorted"):
-        hfile._write_hfl2_file(str(tmp_path / "bad.hfl2"), recs[::-1])
-
-
-def test_hfl2_distributed_write_read(spark, kv, tmp_path):
-    """H2/H3 over the binary container: write per-region HFL2 files,
-    parse them back distributed (bloom verified in-task), layout
-    validation dispatches on the container."""
-    path = str(tmp_path / "hfl2")
-    manifest = hfile.write_hfl2_files(kv, path, rollup=True, num_partitions=8)
-    assert manifest and all(m["file"].endswith(".hfl2") for m in manifest)
-    hfile.validate_layout(spark, path, rollup=True)
-    back = hfile.read_hfl2_dir(spark, path, verify_bloom=True)
-    assert back.count() == kv.count()
-    # per-region aggregates agree with the parquet writer's layout
-    a = {
-        r["region"]: (r["n"], r["lo"], r["hi"])
-        for r in back.groupBy("region")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("key_hex").alias("lo"),
-            F.max("key_hex").alias("hi"),
-        )
-        .collect()
-    }
-    b = {}
-    for m in manifest:
-        n, lo, hi = b.get(m["region"], (0, "Z" * 99, ""))
-        b[m["region"]] = (
-            n + m["rows"],
-            min(lo, m["min_key_hex"]),
-            max(hi, m["max_key_hex"]),
-        )
-    assert a == b
-    # corrupting the first block's raw_len field must surface at readback
-    victim = os.path.join(path, manifest[0]["file"])
-    blob = bytearray(open(victim, "rb").read())
-    blob[10] ^= 0xFF  # byte 10 sits inside the first block header's raw_len
-    open(victim, "wb").write(bytes(blob))
-    with pytest.raises(AssertionError, match="length mismatch"):
-        hfile.read_hfl2_file(victim)
-
-
-def test_hfl2_wrong_region_mapping_is_caught(spark, kv, tmp_path):
+def test_v3_wrong_region_mapping_is_caught(spark, kv, tmp_path):
     """A regression that maps rows to wrong-but-monotone regions (e.g.
     region = bucket div 8 while claiming rollup=False) must fail the
     bucket-prefix check — manifest spans alone stay non-overlapping."""
-    path = str(tmp_path / "hfl2_badregion")
-    hfile.write_hfl2_files(kv, path, num_partitions=8)
+    from hbase_bulkload_service_spark.sources import hfilev3
+
+    path = str(tmp_path / "v3_badregion")
+    hfilev3.write_hfilev3_files(kv, path, num_partitions=8)
     mpath = os.path.join(path, "_manifest.json")
-    manifest = json.load(open(mpath))
+    with open(mpath) as f:
+        manifest = json.load(f)
     assert any(m["region"] >= 8 for m in manifest)
     for m in manifest:
         m["region"] = m["region"] // 8  # monotone but wrong under rollup=False
-    json.dump(manifest, open(mpath, "w"))
+    hfile.write_manifest(path, manifest)
     with pytest.raises(AssertionError, match="not in region"):
         hfile.validate_layout(spark, path, rollup=False, deep=False)
 
 
-def test_hfl1_wrong_region_mapping_is_caught(spark, kv, tmp_path):
-    path = str(tmp_path / "hfl1_badregion")
-    hfile.write_hfl1_files(kv, path)
+def test_v3_wrong_region_mapping_is_caught_deep(spark, kv, tmp_path):
+    """The same wrong-but-monotone region mapping under the default
+    (deep) validation, which also parses every file back, and the
+    writer's default partitioning."""
+    from hbase_bulkload_service_spark.sources import hfilev3
+
+    path = str(tmp_path / "v3_badregion_deep")
+    hfilev3.write_hfilev3_files(kv, path)
     mpath = os.path.join(path, "_manifest.json")
-    manifest = json.load(open(mpath))
+    with open(mpath) as f:
+        manifest = json.load(f)
     bad = max(manifest, key=lambda m: m["region"])
     assert bad["region"] >= 8
     for m in manifest:
         m["region"] = m["region"] // 8
-    json.dump(manifest, open(mpath, "w"))
+    hfile.write_manifest(path, manifest)
     with pytest.raises(AssertionError, match="not in region|disagree"):
         hfile.validate_layout(spark, path, rollup=False)

@@ -1,5 +1,5 @@
 """Wave-8 operators: sketch accuracy verdicts, exact heavy hitters.
-(The HFL2 container is covered in test_bulkload_hfile.py.)"""
+(The HFile containers are covered in test_hfilev3.py and test_bulkload_hfile.py.)"""
 
 from __future__ import annotations
 

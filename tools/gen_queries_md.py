@@ -48,7 +48,8 @@ def main() -> None:
     out.append(
         "| `q116_hfl2_container` | RETIRED round 8: HFL2 stand-in container "
         "gate, superseded by the real HFile v3 gates (q167/q169/q170/q221); "
-        "layout invariants live on in tests/test_bulkload_hfile.py |\n"
+        "the stand-in container is deleted and its layout invariants live "
+        "on in tests/test_hfilev3.py and tests/test_bulkload_hfile.py |\n"
     )
     out.append(
         "| `q227_schema_evolution` | RETIRED round 8 (same session it was "

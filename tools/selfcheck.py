@@ -15,7 +15,7 @@ evidence for the full surface each round:
   round 1);
 - columns sorted by name, rows canonicalized and sorted, then hashed.
 
-Usage: ``python tools/selfcheck.py [sf_dir] [out_json] [--only q1,q2]
+Usage: ``python tools/selfcheck.py [sf_dir] [out_json] [q1,q2]
 [--enforce-max-age N [--assume-window]]``
 
 The age gate (``--enforce-max-age N``) fails when any query's
