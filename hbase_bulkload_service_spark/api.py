@@ -132,13 +132,14 @@ class BulkloadService:
     def _run_pipeline(self, req: BulkloadRequest, out: str) -> dict:
         cells = self.cells_of(req.source_table)
         sliced = tsdb.hour_range_filter(cells, req.start_time, req.end_time)
-        kv = tsdb.bulkload_kv(sliced, num_partitions=req.parallelism)
+        kv = tsdb.bulkload_kv(sliced)
         # rollup routing (TsdbBulkload.java:62-69): rollup jobs write the
-        # 8-buckets-per-region layout and skip auto-adoption (autoLoad =
-        # !rollup, :163)
-        # kv IS bulkload_kv output: its (bucket, key, qualifier) range
-        # layout already satisfies the writer (r09, guide §2.4)
-        manifest = hfile.write_hfiles(kv, out, rollup=req.rollup, presorted=True)
-        if not req.rollup:
-            hfile.validate_layout(self.spark, out, rollup=False)
+        # 8-buckets-per-region layout (autoLoad = !rollup, :163). One
+        # readback pass checks the layout and yields the manifest.
+        hfile.write_hfiles(
+            kv, out, rollup=req.rollup, num_partitions=req.parallelism,
+            manifest=False,
+        )
+        manifest = hfile.validate_layout(self.spark, out, rollup=req.rollup)
+        hfile.write_manifest(out, manifest)
         return manifest

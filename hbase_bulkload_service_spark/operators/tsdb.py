@@ -11,16 +11,18 @@ Spark design: everything is a declarative DataFrame transform —
 - dedup is a hash aggregate ``max_by(value, version_ts)`` with map-side
   partial aggregation (strictly better than the reference's per-row
   NavigableMap walk);
-- ordering for the HFile sink is expressed ONCE as
-  ``repartitionByRange(bucket, key_hex) + sortWithinPartitions`` giving
-  globally non-overlapping sorted output per bucket (SURVEY.md §4.2 — a
-  correctness upgrade over the reference's partition-local sort).
+- ordering for the HFile sink is NOT decided here: the writers own it
+  (``sources/hfile.assign_region`` range-partitions and sorts by region,
+  key, qualifier — globally non-overlapping sorted files per region,
+  SURVEY.md §4.2, a correctness upgrade over the reference's
+  partition-local sort).
 
-Scale notes (100 TB): the only shuffles are the dedup aggregate (keyed on
-(key, qualifier) — high cardinality, well-spread because the salt prefix is
-in the key) and the final range partitioning (512 buckets ≈ reference's
-region spread, HBaseProperties.java:16). Salting exists precisely to spread
-monotonically-increasing time keys; we preserve it unchanged.
+Scale notes (100 TB): the only shuffle here is the dedup aggregate (keyed
+on (key, qualifier) — high cardinality, well-spread because the salt prefix
+is in the key); the writer adds the one range exchange (512 buckets ≈
+reference's region spread, HBaseProperties.java:16). Salting exists
+precisely to spread monotonically-increasing time keys; we preserve it
+unchanged.
 """
 
 from __future__ import annotations
@@ -215,35 +217,29 @@ def latest_version_dedup(
 
 
 # ---------------------------------------------------------------------------
-# D2 + H2 ordering contract — bulkload KV stream
+# bulkload KV stream (the D2/H2 ordering is the writers', hfile.assign_region)
 # ---------------------------------------------------------------------------
 
 def bulkload_kv(
     cells: DataFrame,
     bucket_count: int = DEFAULT_BUCKET_COUNT,
     family: bytes = DEFAULT_FAMILY,
-    num_partitions: int | None = None,
     tie_col: str | None = None,
 ) -> DataFrame:
-    """Full flagship pipeline: salt → dedup-to-latest → (key, family,
-    qualifier, value) sorted per bucket range — the stream H1-H3 write.
+    """Flagship pipeline up to the sink: salt → dedup-to-latest →
+    (bucket, key, family, qualifier, value) projection — the stream H1-H3
+    write. The writers (``sources/hfile.assign_region``) lay it out; this
+    function adds no exchange beyond the dedup's.
 
-    Upgrade over the reference (SURVEY.md §4.2): ``repartitionByRange`` on
-    (bucket, key, qualifier) makes files globally non-overlapping and
-    totally ordered across partitions, not just within one.
-
-    Ordering runs on the RAW BINARY keys (round 8, VERDICT r07 item 2):
-    Spark compares BinaryType unsigned-lexicographically — exactly
-    HBase's Bytes.compareTo order — and uppercase-hex encoding is
-    order-isomorphic to it, so sorting on (key, qualifier) yields the
-    byte-identical stream the old (key_hex, qualifier_hex) sort did
-    while (a) halving the sort-key bytes the range exchange carries and
-    compares, and (b) keeping hex codec work OFF the dedup shuffle
-    entirely: the hex columns are display/oracle/manifest projections
-    computed once per SURVIVING row after the dedup instead of once per
-    input row before it (and no longer ride the exchange as a redundant
-    group key). test_composed_tsdb pins hex-order == binary-order on
-    adversarial high-bit keys.
+    Keys stay RAW BINARY (round 8, VERDICT r07 item 2): Spark compares
+    BinaryType unsigned-lexicographically — exactly HBase's
+    Bytes.compareTo order — and uppercase-hex encoding is
+    order-isomorphic to it, so the writers sort on (key, qualifier) and
+    get the byte-identical stream a (key_hex, qualifier_hex) sort would,
+    on half the sort-key bytes. The hex columns are display/oracle/
+    manifest projections computed once per SURVIVING row after the dedup
+    instead of once per input row before it. test_composed_tsdb pins
+    hex-order == binary-order on adversarial high-bit keys.
 
     ``tie_col`` is forwarded to :func:`latest_version_dedup` so callers
     with same-version collisions get a deterministic winner without a
@@ -255,7 +251,7 @@ def bulkload_kv(
         key_cols=("bucket", "salted_key", "qualifier"),
         tie_col=tie_col,
     )
-    kv = deduped.select(
+    return deduped.select(
         F.col("bucket"),
         F.col("salted_key").alias("key"),
         key_hex(F.col("salted_key")).alias("key_hex"),
@@ -263,10 +259,6 @@ def bulkload_kv(
         F.col("qualifier"),
         key_hex(F.col("qualifier")).alias("qualifier_hex"),
         F.col("value"),
-    )
-    n = num_partitions or bucket_count // 8
-    return kv.repartitionByRange(n, "bucket", "key", "qualifier").sortWithinPartitions(
-        "bucket", "key", "qualifier"
     )
 
 

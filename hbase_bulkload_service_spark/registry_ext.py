@@ -384,6 +384,32 @@ from hbase_bulkload_service_spark.operators import tsdb
 from hbase_bulkload_service_spark.sources import hfile
 
 
+def flagship_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The KV stream every bulkload gate writes: derived cells with the
+    DOUBLE value big-endian encoded, salted and deduped. Same-version
+    collisions resolve to MAX(dvalue) INSIDE the dedup aggregate (tie_col
+    orders by struct(version_ts, dvalue)) — one shuffle where a separate
+    pre-collapse groupBy would cost a second; bit-identical to collapsing
+    first and max_by'ing after."""
+    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
+    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
+    return tsdb.bulkload_kv(c1, tie_col="dvalue")
+
+
+def region_summary(back: DataFrame) -> DataFrame:
+    """Per-region n_cells, n_keys, key span and value cents of a read-back
+    KV frame — the shape the bulkload gates' oracles recompute."""
+    return back.groupBy("region").agg(
+        F.count("*").alias("n_cells"),
+        F.countDistinct("key_hex").alias("n_keys"),
+        F.min("key_hex").alias("min_key_hex"),
+        F.max("key_hex").alias("max_key_hex"),
+        F.sum(
+            F.floor(decode_double_be(F.col("value")) * 100).cast("long")
+        ).alias("sum_value_cents"),
+    )
+
+
 @register(
     "q56_bulkload_e2e",
     f"""
@@ -453,35 +479,18 @@ def q56_bulkload_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    # Same-version collisions resolve to MAX(dvalue) INSIDE the dedup
-    # aggregate (tie_col orders by struct(version_ts, dvalue)) — one
-    # shuffle where a separate pre-collapse groupBy would cost a second;
-    # bit-identical to collapsing first and max_by'ing after.
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
+    kv = flagship_kv(spark, sf_dir)
     schema = (
         "src string, region int, n_cells long, n_keys long, "
         "min_key_hex string, max_key_hex string, sum_value_cents long"
     )
 
     def summarize(back: DataFrame, src: str) -> DataFrame:
-        return back.groupBy("region").agg(
-            F.count("*").alias("n_cells"),
-            F.countDistinct("key_hex").alias("n_keys"),
-            F.min("key_hex").alias("min_key_hex"),
-            F.max("key_hex").alias("max_key_hex"),
-            F.sum(
-                F.floor(decode_double_be(F.col("value")) * 100).cast("long")
-            ).alias("sum_value_cents"),
-        ).select(F.lit(src).alias("src"), "*")
+        return region_summary(back).select(F.lit(src).alias("src"), "*")
 
     d = tempfile.mkdtemp(prefix="q56hfiles")
     try:
-        hfile.write_hfiles(
-            kv, d, rollup=True, manifest=False,
-            presorted=True,  # kv IS bulkload_kv output (r09, guide §2.4)
-        )
+        hfile.write_hfiles(kv, d, rollup=True, num_partitions=16, manifest=False)
         # full-corpus summary: native parquet readback (the sink IS parquet
         # per region; at bench scale a full Arrow transfer through the
         # Python source would dominate the query). The SAME aggregation

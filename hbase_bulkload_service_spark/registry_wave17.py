@@ -16,11 +16,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hbase_bulkload_service_spark.functions.codec import decode_double_be
-from hbase_bulkload_service_spark.operators import tsdb
 from hbase_bulkload_service_spark.registry import register
+from hbase_bulkload_service_spark.registry_ext import flagship_kv, region_summary
+from hbase_bulkload_service_spark.registry_wave4 import _scratch
 from hbase_bulkload_service_spark.registry_wave8 import HFL_CONTAINER_ORACLE
 from hbase_bulkload_service_spark.sources import hfile, hfilev3
-from hbase_bulkload_service_spark.sources.tables import load_events
+
+
+def v3_gate(spark: SparkSession, sf_dir: str, name: str, **codec) -> DataFrame:
+    """The v3 container gates' shared round trip: the flagship KV written
+    as REAL v3 files (``codec``: write_hfilev3_files' compression /
+    encoding / bloom arguments), checked at manifest level in the driver
+    (bucket-prefix spans, file caps, region disjointness), read back with
+    the per-file container invariants checked inside the distributed
+    reading tasks, and summarized per region."""
+    d = _scratch(name)
+    hfilev3.write_hfilev3_files(
+        flagship_kv(spark, sf_dir), d, rollup=True, num_partitions=16, **codec
+    )
+    summary = hfile.validate_manifest_layout(d, rollup=True)
+    # the manifest check covers no record; the readback below owes them
+    assert not summary["per_record_validated"] and summary["pending"]
+    return region_summary(hfilev3.read_hfilev3_dir(spark, d))
+
 
 # ===========================================================================
 # q167 — bulkload e2e through the REAL HFile v3 byte format
@@ -43,32 +61,7 @@ def q167_hfilev3_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing, index arithmetic, protobuf encoding, or trailer breaks the
     readback and the row (reference HBaseController.java:232-254,
     HFileOutputUtil.java:17-39)."""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
-
-    from hbase_bulkload_service_spark.registry_wave4 import _scratch
-
-    d = _scratch("q167hfilev3")
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)  # fresh layout on re-run
-    hfilev3.write_hfilev3_files(kv, d, rollup=True, num_partitions=16)
-    # manifest-level layout checks in the driver (container-agnostic:
-    # bucket-prefix spans, file caps, region disjointness); the per-file
-    # container invariants run inside the distributed reading tasks
-    summary = hfile.validate_manifest_layout(d, rollup=True)
-    assert not summary["per_record_validated"] and summary["pending"]
-    back = hfilev3.read_hfilev3_dir(spark, d)
-    return back.groupBy("region").agg(
-        F.count("*").alias("n_cells"),
-        F.countDistinct("key_hex").alias("n_keys"),
-        F.min("key_hex").alias("min_key_hex"),
-        F.max("key_hex").alias("max_key_hex"),
-        F.sum(
-            F.floor(decode_double_be(F.col("value")) * 100).cast("long")
-        ).alias("sum_value_cents"),
-    )
+    return v3_gate(spark, sf_dir, "q167hfilev3")
 
 
 # ===========================================================================
@@ -87,30 +80,7 @@ def q168_hfilev3_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the shared container-agnostic oracle. (The reference DDL's own
     SNAPPY codec is gated by q221 — round 7 added a pure-Python snappy
     implementation; GZ remains as the deflate-family codec gate.)"""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
-
-    from hbase_bulkload_service_spark.registry_wave4 import _scratch
-
-    d = _scratch("q168hfilev3gz")
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
-    hfilev3.write_hfilev3_files(
-        kv, d, rollup=True, num_partitions=16, compression="GZ"
-    )
-    hfile.validate_manifest_layout(d, rollup=True)
-    back = hfilev3.read_hfilev3_dir(spark, d)
-    return back.groupBy("region").agg(
-        F.count("*").alias("n_cells"),
-        F.countDistinct("key_hex").alias("n_keys"),
-        F.min("key_hex").alias("min_key_hex"),
-        F.max("key_hex").alias("max_key_hex"),
-        F.sum(
-            F.floor(decode_double_be(F.col("value")) * 100).cast("long")
-        ).alias("sum_value_cents"),
-    )
+    return v3_gate(spark, sf_dir, "q168hfilev3gz", compression="GZ")
 
 
 # ===========================================================================
@@ -136,30 +106,9 @@ def q169_hfilev3_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as q167/q168 — a bug in the delta codec, the bloom bit math
     (golden-tested against Hadoop's own MurmurHash), or their
     composition with the codec breaks the row."""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
-
-    from hbase_bulkload_service_spark.registry_wave4 import _scratch
-
-    d = _scratch("q169hfilev3ddl")
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
-    hfilev3.write_hfilev3_files(
-        kv, d, rollup=True, num_partitions=16,
+    return v3_gate(
+        spark, sf_dir, "q169hfilev3ddl",
         compression="GZ", encoding="DIFF", bloom=True,
-    )
-    hfile.validate_manifest_layout(d, rollup=True)
-    back = hfilev3.read_hfilev3_dir(spark, d)
-    return back.groupBy("region").agg(
-        F.count("*").alias("n_cells"),
-        F.countDistinct("key_hex").alias("n_keys"),
-        F.min("key_hex").alias("min_key_hex"),
-        F.max("key_hex").alias("max_key_hex"),
-        F.sum(
-            F.floor(decode_double_be(F.col("value")) * 100).cast("long")
-        ).alias("sum_value_cents"),
     )
 
 
@@ -218,16 +167,8 @@ def q170_hfilev3_point_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     files."""
     import os
 
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
-
-    from hbase_bulkload_service_spark.registry_wave4 import _scratch
-
+    kv = flagship_kv(spark, sf_dir)
     d = _scratch("q170hfilev3pt")
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
     manifest = hfilev3.write_hfilev3_files(
         kv, d, rollup=True, num_partitions=16,
         compression="GZ", encoding="DIFF", bloom=True,

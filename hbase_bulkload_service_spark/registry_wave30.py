@@ -13,12 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hbase_bulkload_service_spark.operators import quality, textops, tsdb
+from hbase_bulkload_service_spark.operators import quality, textops
 from hbase_bulkload_service_spark.registry import register
 from hbase_bulkload_service_spark.registry_llm import NT
 from hbase_bulkload_service_spark.registry_wave8 import HFL_CONTAINER_ORACLE
-from hbase_bulkload_service_spark.sources import hfile, hfilev3
-from hbase_bulkload_service_spark.sources.tables import load, load_events
+from hbase_bulkload_service_spark.registry_wave17 import v3_gate
+from hbase_bulkload_service_spark.sources.tables import load
 
 # ===========================================================================
 # q221 — the reference DDL byte-for-byte: DIFF + SNAPPY + ROW bloom
@@ -39,32 +39,9 @@ def q221_hfilev3_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce the same container-agnostic oracle as q167/q168/q169.
     With this gate the v3 writer has NO remaining delta against the
     reference's table DDL."""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
-
-    from hbase_bulkload_service_spark.registry_wave4 import _scratch
-
-    d = _scratch("q221hfilev3snappy")
-    import shutil
-
-    shutil.rmtree(d, ignore_errors=True)
-    hfilev3.write_hfilev3_files(
-        kv, d, rollup=True, num_partitions=16,
+    return v3_gate(
+        spark, sf_dir, "q221hfilev3snappy",
         compression="SNAPPY", encoding="DIFF", bloom=True,
-    )
-    hfile.validate_manifest_layout(d, rollup=True)
-    back = hfilev3.read_hfilev3_dir(spark, d)
-    from hbase_bulkload_service_spark.functions.codec import decode_double_be
-
-    return back.groupBy("region").agg(
-        F.count("*").alias("n_cells"),
-        F.countDistinct("key_hex").alias("n_keys"),
-        F.min("key_hex").alias("min_key_hex"),
-        F.max("key_hex").alias("max_key_hex"),
-        F.sum(
-            F.floor(decode_double_be(F.col("value")) * 100).cast("long")
-        ).alias("sum_value_cents"),
     )
 
 

@@ -191,6 +191,11 @@ def get_spark(
             "SPARK_GRAFT_SHUFFLE_PARTITIONS"
         ]
     conf.update({k: str(v) for k, v in conf_overrides.items()})
+    # Python workers import this package by name: put its parent dir on
+    # their path, so the engine runs from any cwd
+    package_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (package_parent, conf.get(key)) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -12,13 +12,13 @@ Reference writers:
 
 Spark-first design (SURVEY.md §4.2): instead of relying on each task's
 stream being sorted and hoping partitions don't overlap (the reference's
-contract), the requirement is declared once —
-``repartitionByRange(region, key) + sortWithinPartitions`` — giving
-globally non-overlapping, internally sorted files per region. This module
-writes the layout as sorted parquet (snappy) per region directory; the
-real HFile v3 byte format over the same layout lives in
-``sources/hfilev3.py`` (PySpark cannot instantiate HFileOutputFormat2
-without HBase jars, so that writer is pure Python).
+contract), the writers lay the stream out themselves, once, in
+:func:`assign_region` — ``repartitionByRange(region, key, qualifier) +
+sortWithinPartitions`` — giving globally non-overlapping, internally
+sorted files per region. This module writes the layout as sorted parquet
+(snappy) per region directory; the real HFile v3 byte format over the
+same layout lives in ``sources/hfilev3.py`` (PySpark cannot instantiate
+HFileOutputFormat2 without HBase jars, so that writer is pure Python).
 
 The adoption step (LoadIncrementalHFiles, HBaseController.java:232-254, H7)
 is an external contract: `validate_layout` is the no-op load stub that
@@ -37,11 +37,19 @@ MAX_FILES_PER_REGION = 2048  # HFileOutputUtil.java:20
 ROLLUP_BUCKETS_PER_REGION = 8  # HadoopOutputFormat3.java:24,97
 
 
-def assign_region(kv: DataFrame, rollup: bool = False) -> DataFrame:
-    """region id = bucket (raw table: 512 regions) or bucket div 8 (rollup:
-    64 regions) — mirrors the two writers' roll keys."""
+def assign_region(
+    kv: DataFrame, rollup: bool, num_partitions: int
+) -> DataFrame:
+    """The one layout step of both writers: region id = bucket (raw
+    table: 512 regions) or bucket div 8 (rollup: 64 regions) — mirrors the
+    two writers' roll keys — then range-partition and sort by (region,
+    key, qualifier)."""
     step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
-    return kv.withColumn("region", F.expr(f"bucket div {step}").cast("int"))
+    return (
+        kv.withColumn("region", F.expr(f"bucket div {step}").cast("int"))
+        .repartitionByRange(num_partitions, "region", "key", "qualifier")
+        .sortWithinPartitions("region", "key", "qualifier")
+    )
 
 
 def write_hfiles(
@@ -50,49 +58,27 @@ def write_hfiles(
     rollup: bool = False,
     num_partitions: int | None = None,
     manifest: bool = True,
-    presorted: bool = False,
 ) -> dict | None:
     """Write the KV stream as one sorted parquet directory per region +
     manifest.json. Input: columns (bucket, key, key_hex, family, qualifier,
     qualifier_hex, value) — e.g. from operators.tsdb.bulkload_kv.
 
-    Scale: range partitioning on (region, key) — raw binary, Spark's
-    unsigned-lexicographic BinaryType order == HBase Bytes.compareTo, and
-    order-isomorphic to the old hex sort (round 8) — keeps each region's data
-    in contiguous partitions; the dynamic-partition writer rolls files on
-    region change exactly like HadoopOutputFormat2.writeRecord.
-
-    ``presorted=True`` (r09, guide §2.4) declares the bulkload_kv layout
-    contract: the input is ALREADY range-partitioned and sorted by
-    (bucket, key, qualifier), and ``key`` embeds the bucket as its 2-byte
-    big-endian prefix (tsdb.with_salt), so region (= bucket or bucket div
-    8) order is a prefix coarsening of key order and the (region, key,
-    qualifier) layout this writer needs already holds — the writer then
-    skips its own repartitionByRange + sort. Catalyst does NOT collapse
-    the two back-to-back range exchanges on its own (verified: the
-    flagship plan carried ``Exchange rangepartitioning(bucket, key,
-    qualifier)`` directly under ``Exchange rangepartitioning(region, key,
-    qualifier)``, each a full shuffle of the kv payload plus a sampling
-    pass). Callers with arbitrary kv frames keep the default. The input's
-    partitioning is kept as is, so ``num_partitions`` cannot apply and
-    passing both raises ``ValueError``.
+    Scale: range partitioning on (region, key, qualifier) — raw binary,
+    Spark's unsigned-lexicographic BinaryType order == HBase
+    Bytes.compareTo, and order-isomorphic to the old hex sort (round 8) —
+    keeps each region's data in contiguous partitions; the
+    dynamic-partition writer rolls files on region change exactly like
+    HadoopOutputFormat2.writeRecord. The sort keys start with ``region``:
+    otherwise ``partitionBy("region")`` plans its own Sort on region alone,
+    which drops the key order inside each file.
 
     ``manifest=False`` skips the readback pass; a caller that re-reads the
     output anyway can derive the same stats from its own scan and persist
     them with :func:`write_manifest` (avoids scanning the data twice).
     """
-    if presorted and num_partitions is not None:
-        raise ValueError(
-            "presorted=True keeps the input's partitioning; drop num_partitions"
-        )
-    regions = assign_region(kv, rollup)
-    if not presorted:
-        n = num_partitions or 64
-        regions = regions.repartitionByRange(
-            n, "region", "key", "qualifier"
-        ).sortWithinPartitions("region", "key", "qualifier")
     (
-        regions.write.partitionBy("region")
+        assign_region(kv, rollup, num_partitions or 64)
+        .write.partitionBy("region")
         .option("compression", "snappy")
         .mode("overwrite")
         .parquet(path)
@@ -157,7 +143,9 @@ def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True):
     space, region == its keys' bucket prefix, ≤2048 files per region.
 
     Dispatches on the container. A parquet layout is checked in one
-    Spark pass and the manifest that pass derived is returned. An HFile
+    Spark pass and the manifest that pass derived is returned; that pass
+    sees region spans, not the order inside a file, which
+    :func:`assign_region` guarantees. An HFile
     v3 dir (``sources/hfilev3.py``) gets the manifest-level checks of
     :func:`validate_manifest_layout`; ``deep=True`` also parses every
     file back in the driver (adoption/test scale only). It returns the

@@ -23,10 +23,11 @@ Requires ``spark.sql.python.filterPushdown.enabled=true`` (set in
 
 Scale: at 100 TB the manifest holds one row per region (512 per table);
 planning is O(regions) on the driver exactly like the reference's
-`createInputSplits`, and each task reads one region's sorted files —
-locality comes from the storage layer (HDFS/S3 block placement) rather
-than the reference's per-split hostname hints (`TableInputSplit.java:
-51-62`), which Spark's scheduler handles natively for file sources.
+`createInputSplits`, and each task reads one region's files (sorted by
+the writer, `hfile.assign_region`) — locality comes from the storage
+layer (HDFS/S3 block placement) rather than the reference's per-split
+hostname hints (`TableInputSplit.java:51-62`), which Spark's scheduler
+handles natively for file sources.
 """
 
 from __future__ import annotations

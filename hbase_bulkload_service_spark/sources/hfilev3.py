@@ -1499,10 +1499,7 @@ def write_hfilev3_files(
     )
 
     os.makedirs(path, exist_ok=True)
-    regions = assign_region(kv, rollup)
-    sorted_kv = regions.repartitionByRange(
-        num_partitions, "region", "key", "qualifier"
-    ).sortWithinPartitions("region", "key", "qualifier")
+    sorted_kv = assign_region(kv, rollup, num_partitions)
 
     def write_region_file(region: int, pid: int, cells) -> dict:
         fname = os.path.join(path, f"region_{region:05d}_p{pid:05d}.hfile")

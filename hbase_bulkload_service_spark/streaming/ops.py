@@ -234,9 +234,10 @@ def streaming_bulkload(
     over time, each producing an adoption unit: HFile set + manifest,
     HBaseController.java:49-124) as a Structured Streaming foreachBatch:
     every micro-batch runs the FULL flagship pipeline (salt → dedup →
-    range-sorted per-region files, operators/tsdb.bulkload_kv) into its
-    own ``batch=<id>/`` staging dir — one adoption unit per batch, exactly
-    the queue's one-job-at-a-time contract (micro-batches are sequential).
+    range-sorted per-region files: tsdb.bulkload_kv, hfile.write_hfiles)
+    into its own ``batch=<id>/`` staging dir — one adoption unit per batch,
+    exactly the queue's one-job-at-a-time contract (micro-batches are
+    sequential).
 
     Cross-batch versions are NOT merged here: like the reference, each
     job's HFile set is self-consistent and HBase resolves versions at read
@@ -253,14 +254,11 @@ def streaming_bulkload(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return  # empty trigger: no adoption unit
-        kv = _tsdb.bulkload_kv(
-            batch_df, bucket_count=bucket_count, num_partitions=num_partitions
-        )
         _hfile.write_hfiles(
-            kv,
+            _tsdb.bulkload_kv(batch_df, bucket_count=bucket_count),
             os.path.join(base_path, f"batch={int(batch_id)}"),
             rollup=rollup,
-            presorted=True,  # kv IS bulkload_kv output (r09, guide §2.4)
+            num_partitions=num_partitions,
         )
 
     return write

@@ -17,7 +17,7 @@ from hbase_bulkload_service_spark.sources.tables import load_events
 @pytest.fixture(scope="module")
 def kv(spark, sf_dir):
     cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir))
-    return tsdb.bulkload_kv(cells, num_partitions=8).cache()
+    return tsdb.bulkload_kv(cells).cache()
 
 
 def test_kv_is_deduped(kv):
@@ -50,40 +50,6 @@ def test_rollup_region_step(spark, kv, tmp_path):
     bad = df.filter(F.expr("bucket div 8") != F.col("region")).count()
     assert bad == 0
     hfile.validate_layout(spark, path, rollup=True)
-
-
-def test_presorted_write_equals_default_write(spark, kv, tmp_path):
-    """r09 (guide §2.4): ``presorted=True`` on bulkload_kv output must
-    produce the same rows AND the same layout invariants as the default
-    writer path, while skipping the second range exchange (the key
-    embeds the bucket as its BE prefix, so (bucket, key, qualifier)
-    order == (region, key, qualifier) order)."""
-    p_default = str(tmp_path / "hf_default")
-    p_presorted = str(tmp_path / "hf_presorted")
-    hfile.write_hfiles(kv, p_default, rollup=True, num_partitions=8)
-    hfile.write_hfiles(kv, p_presorted, rollup=True, presorted=True)
-    a = spark.read.parquet(p_default)
-    b = spark.read.parquet(p_presorted)
-    cols = sorted(a.columns)
-    assert sorted(b.columns) == cols
-    ra = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
-                      for v in r) for r in a.select(*cols).collect())
-    rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
-                      for v in r) for r in b.select(*cols).collect())
-    assert ra == rb
-    # the presorted layout must satisfy every writer invariant the
-    # default path does (sorted within files, regions non-overlapping,
-    # region == bucket prefix, file cap)
-    hfile.validate_layout(spark, p_presorted, rollup=True)
-
-
-def test_presorted_rejects_num_partitions(kv, tmp_path):
-    """presorted=True keeps the input's partitioning, so a num_partitions
-    passed alongside it could never take effect: refuse the combination."""
-    with pytest.raises(ValueError, match="num_partitions"):
-        hfile.write_hfiles(
-            kv, str(tmp_path / "both"), num_partitions=8, presorted=True
-        )
 
 
 def test_parquet_row_in_wrong_region_dir_is_caught(spark, kv, tmp_path):
@@ -172,3 +138,45 @@ def test_v3_wrong_region_mapping_is_caught_deep(spark, kv, tmp_path):
     hfile.write_manifest(path, manifest)
     with pytest.raises(AssertionError, match="not in region|disagree"):
         hfile.validate_layout(spark, path, rollup=False)
+
+
+def _unsorted_files(path):
+    """Files under ``path/region=*/`` whose rows are not in ascending
+    (key, qualifier) byte order — the order HBase adopts a file in."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(path, "region=*", "*.parquet")))
+    assert files, path
+    bad = []
+    for f in files:
+        t = pq.read_table(f, columns=["key", "qualifier"])
+        rows = list(zip(t.column("key").to_pylist(), t.column("qualifier").to_pylist()))
+        if any(a > b for a, b in zip(rows, rows[1:])):
+            bad.append(os.path.relpath(f, path))
+    return bad, len(files)
+
+
+@pytest.mark.parametrize("layout", ["raw", "rollup", "service"])
+def test_files_are_sorted_by_key_and_qualifier(spark, sf_dir, kv, tmp_path, layout):
+    """Inside every written file, (key, qualifier) never decreases: the
+    raw and rollup writer layouts, and one service request end to end."""
+    path = str(tmp_path / layout)
+    if layout == "service":
+        from hbase_bulkload_service_spark.api import BulkloadRequest, BulkloadService
+
+        start, end = 1704067200000, 1706745600000  # 2024-01
+        svc = BulkloadService(
+            spark,
+            lambda table: tsdb.derive_tsdb_cells(load_events(spark, sf_dir)),
+            str(tmp_path),
+        )
+        svc.bulkload(BulkloadRequest("tsdb", layout, start, end))
+        svc.run_pending()
+        assert not svc.queue.failures
+        path = f"{path}/{start}"
+    else:
+        hfile.write_hfiles(kv, path, rollup=layout == "rollup")
+    bad, total = _unsorted_files(path)
+    assert not bad, f"{len(bad)} of {total} files out of order, e.g. {bad[:3]}"

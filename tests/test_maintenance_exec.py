@@ -19,7 +19,7 @@ from hbase_bulkload_service_spark.sources.tables import load_events
 def table(spark, sf_dir, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("maint") / "table")
     cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir))
-    kv = tsdb.bulkload_kv(cells, num_partitions=8)
+    kv = tsdb.bulkload_kv(cells)
     hfile.write_hfiles(kv, path, num_partitions=8)
     return path
 

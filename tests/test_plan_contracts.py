@@ -58,21 +58,32 @@ def test_revenue_query_broadcasts_small_dim(spark):
 
 
 def test_bulkload_kv_is_range_partitioned_and_sorted(spark):
+    """The writers own the KV layout: ``assign_region`` adds the one range
+    exchange, on the RAW BINARY (region, key, qualifier) — round 8:
+    binary order == hex order, half the sort-key bytes
+    (BINSORT_AB_r08.json) — with a partition-local sort on the same keys
+    directly above it. ``bulkload_kv`` itself adds none."""
     from hbase_bulkload_service_spark.operators import tsdb
+    from hbase_bulkload_service_spark.sources import hfile
     from hbase_bulkload_service_spark.sources.tables import load_events
 
     kv = tsdb.bulkload_kv(tsdb.derive_tsdb_cells(load_events(spark, SF_DIR)))
-    plan = formatted_plan(kv)
-    # final layout: range exchange on the RAW BINARY (bucket, key,
-    # qualifier) — round 8: binary order == hex order, half the sort-key
-    # bytes (BINSORT_AB_r08.json) …
+    assert "rangepartitioning(" not in formatted_plan(kv)
+    plan = formatted_plan(hfile.assign_region(kv, rollup=True, num_partitions=16))
+    assert plan.count("rangepartitioning(") == 1, plan
+    keys = (
+        r"region#\d+ ASC NULLS FIRST, key#\d+ ASC NULLS FIRST, "
+        r"qualifier#\d+ ASC NULLS FIRST"
+    )
+    exchange = re.search(
+        rf"\((\d+)\) Exchange\nInput .*\nArguments: rangepartitioning\({keys}, 16\)",
+        plan,
+    )
+    assert exchange, plan
+    above = re.search(rf"Sort \((\d+)\)\n\s*\+- Exchange \({exchange.group(1)}\)\n", plan)
+    assert above, plan
     assert re.search(
-        r"rangepartitioning\(bucket#\d+ ASC NULLS FIRST, key#\d+ ASC", plan
-    ), plan
-    # … with a partition-local sort on the same keys directly above it
-    assert re.search(
-        r"\[bucket#\d+ ASC NULLS FIRST, key#\d+ ASC NULLS FIRST, "
-        r"qualifier#\d+ ASC NULLS FIRST\], false", plan
+        rf"\({above.group(1)}\) Sort\nInput .*\nArguments: \[{keys}\], false", plan
     ), plan
 
 

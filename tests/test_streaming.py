@@ -209,7 +209,7 @@ def test_streaming_bulkload_batches_equal_batch_pipeline(spark, tmp_path):
     # union of staged cells == one-shot pipeline over the same input
     # (per-batch dedup == global dedup because batches are rowkey-disjoint)
     staged = spark.read.option("basePath", out).parquet(*batch_dirs)
-    batch_kv = tsdb.bulkload_kv(cells, num_partitions=4)
+    batch_kv = tsdb.bulkload_kv(cells)
     got = sorted(
         map(tuple, staged.select("key", "qualifier", "value").collect())
     )

@@ -117,7 +117,7 @@ def main() -> int:
             F.max("tags").alias("tags"),
         )
         c1 = c1.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-        kv = tsdb.bulkload_kv(c1, num_partitions=64)
+        kv = tsdb.bulkload_kv(c1)
         sink = os.path.join(work, "hfiles")
         hfile.write_hfiles(kv, sink, rollup=True, num_partitions=64, manifest=False)
         results["bulkload_wall_s"] = round(time.time() - t0, 1)
