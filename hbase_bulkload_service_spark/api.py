@@ -26,7 +26,14 @@ from hbase_bulkload_service_spark.sources import hfile
 
 @dataclass(frozen=True)
 class BulkloadRequest:
-    """pojo/BulkloadBean.java:8-17, field-for-field (times are epoch ms)."""
+    """pojo/BulkloadBean.java:8-17, field-for-field (times are epoch ms).
+
+    ``parallelism`` pins the writer's range-partition count (each
+    partition writes one file per region it spans). ``None`` sizes it
+    from the data: the exchange starts at the session's shuffle width and
+    AQE merges it by shuffled bytes, so a small request writes about one
+    file per region.
+    """
 
     source_table: str
     target_table: str

@@ -28,14 +28,18 @@ from pyspark.sql import functions as F
 #: plan is byte-identical to the unhinted one (cluster posture: a graph
 #: with |V| past broadcast keeps the exchange). Env-parameterized like
 #: SPARK_GRAFT_SHUFFLE_PARTITIONS so a cluster deployment can tune it
-#: without a code change.
-_BROADCAST_NODES = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_BROADCAST_NODES", "1000000")
-)
+#: without a code change; read per call, like SPARK_GRAFT_GRAPH_EDGE_CACHE,
+#: so a value set after import takes effect.
+_DEFAULT_BROADCAST_NODES = 1_000_000
 
 
 def _maybe_broadcast(df: DataFrame, n_nodes: int) -> DataFrame:
-    return F.broadcast(df) if n_nodes <= _BROADCAST_NODES else df
+    ceiling = int(
+        os.environ.get(
+            "SPARK_GRAFT_GRAPH_BROADCAST_NODES", _DEFAULT_BROADCAST_NODES
+        )
+    )
+    return F.broadcast(df) if n_nodes <= ceiling else df
 
 
 def _edge_layout(edges: DataFrame, key: str) -> DataFrame:

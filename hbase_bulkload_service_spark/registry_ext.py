@@ -490,7 +490,7 @@ def q56_bulkload_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="q56hfiles")
     try:
-        hfile.write_hfiles(kv, d, rollup=True, num_partitions=16, manifest=False)
+        hfile.write_hfiles(kv, d, rollup=True, manifest=False)
         # full-corpus summary: native parquet readback (the sink IS parquet
         # per region; at bench scale a full Arrow transfer through the
         # Python source would dominate the query). The SAME aggregation

@@ -20,6 +20,15 @@ sorted files per region. This module writes the layout as sorted parquet
 same layout lives in ``sources/hfilev3.py`` (PySpark cannot instantiate
 HFileOutputFormat2 without HBase jars, so that writer is pure Python).
 
+File count follows the data, not a literal: unless the caller pins a
+count, the range exchange starts at ``spark.sql.shuffle.partitions`` and
+AQE coalesces adjacent ranges by shuffled bytes, so a small job writes
+about one file per region (the H2 writer's one-file-per-prefix shape)
+and a big one rolls files at AQE's target partition size. Byte-based
+coalescing is the trap the dedup pins its width against, but it is right
+here: after this exchange each task runs a JVM sort and a parquet
+encode, no Python, so its cost tracks the bytes it is given.
+
 The adoption step (LoadIncrementalHFiles, HBaseController.java:232-254, H7)
 is an external contract: `validate_layout` is the no-op load stub that
 checks exactly what adoption requires — ordering, non-overlap, file caps.
@@ -38,18 +47,27 @@ ROLLUP_BUCKETS_PER_REGION = 8  # HadoopOutputFormat3.java:24,97
 
 
 def assign_region(
-    kv: DataFrame, rollup: bool, num_partitions: int
+    kv: DataFrame, rollup: bool, num_partitions: int | None
 ) -> DataFrame:
     """The one layout step of both writers: region id = bucket (raw
     table: 512 regions) or bucket div 8 (rollup: 64 regions) — mirrors the
     two writers' roll keys — then range-partition and sort by (region,
-    key, qualifier)."""
+    key, qualifier).
+
+    ``num_partitions=None`` plans the exchange without a count: it starts
+    at the session's shuffle width and AQE merges adjacent ranges by
+    shuffled bytes. Merged ranges stay contiguous and the sort runs above
+    the merged read, so files stay non-overlapping and sorted inside. A
+    count pins the width (AQE leaves a numbered exchange alone)."""
     step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
-    return (
-        kv.withColumn("region", F.expr(f"bucket div {step}").cast("int"))
-        .repartitionByRange(num_partitions, "region", "key", "qualifier")
-        .sortWithinPartitions("region", "key", "qualifier")
+    keys = ("region", "key", "qualifier")
+    kv = kv.withColumn("region", F.expr(f"bucket div {step}").cast("int"))
+    ranged = (
+        kv.repartitionByRange(*keys)
+        if num_partitions is None
+        else kv.repartitionByRange(num_partitions, *keys)
     )
+    return ranged.sortWithinPartitions(*keys)
 
 
 def write_hfiles(
@@ -72,12 +90,16 @@ def write_hfiles(
     otherwise ``partitionBy("region")`` plans its own Sort on region alone,
     which drops the key order inside each file.
 
+    ``num_partitions=None`` (the default) sizes the exchange from the
+    shuffled bytes (see :func:`assign_region`): at small scale one file
+    per region. Pass a count only to pin a layout.
+
     ``manifest=False`` skips the readback pass; a caller that re-reads the
     output anyway can derive the same stats from its own scan and persist
     them with :func:`write_manifest` (avoids scanning the data twice).
     """
     (
-        assign_region(kv, rollup, num_partitions or 64)
+        assign_region(kv, rollup, num_partitions)
         .write.partitionBy("region")
         .option("compression", "snappy")
         .mode("overwrite")
@@ -116,7 +138,13 @@ def _region_stats(spark, path: str, step: int = 1) -> list:
     """The one readback pass over a parquet layout: per region, its row
     count, key span, and the count of rows whose ``bucket div step`` is not
     the region they landed in. Sorted by region in the driver (a few
-    hundred rows), so the pass is a single aggregation job."""
+    hundred rows), so the pass is a single aggregation job. A committed
+    write (``_SUCCESS``) of a window that held no cells leaves no
+    ``region=*`` dir: that layout has no regions, and adopting it is a
+    no-op. A dir with neither still fails the read."""
+    names = os.listdir(path)
+    if "_SUCCESS" in names and not any(n.startswith("region=") for n in names):
+        return []
     rows = (
         spark.read.parquet(path)
         .groupBy("region")

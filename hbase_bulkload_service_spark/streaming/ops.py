@@ -228,7 +228,7 @@ def streaming_bulkload(
     base_path: str,
     bucket_count: int = 512,
     rollup: bool = False,
-    num_partitions: int = 16,
+    num_partitions: int | None = None,
 ):
     """J1 × H1-H3 — the reference's production loop (bulkload jobs enqueued
     over time, each producing an adoption unit: HFile set + manifest,
@@ -244,6 +244,10 @@ def streaming_bulkload(
     time (multiple files per region are expected — the 2048/region cap).
     For a merged snapshot view, compact with latest_version_dedup over the
     union of batches (see upsert_batch_writer for the snapshot pattern).
+
+    ``num_partitions=None`` lets each batch's range exchange be sized by
+    its shuffled bytes (about one file per region for a small batch); a
+    count pins every batch to that many range partitions.
 
     Returns the foreachBatch callable; wire it as
     ``stream.writeStream.foreachBatch(streaming_bulkload(...))``.

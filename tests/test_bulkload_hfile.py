@@ -180,3 +180,53 @@ def test_files_are_sorted_by_key_and_qualifier(spark, sf_dir, kv, tmp_path, layo
         hfile.write_hfiles(kv, path, rollup=layout == "rollup")
     bad, total = _unsorted_files(path)
     assert not bad, f"{len(bad)} of {total} files out of order, e.g. {bad[:3]}"
+
+
+@pytest.mark.parametrize("layout", ["raw", "rollup"])
+def test_default_write_is_one_file_per_region(spark, kv, tmp_path, layout):
+    """Without a pinned count the range exchange is sized by its shuffled
+    bytes: a small KV stream lands as exactly one file per region dir, the
+    reference's one-file-per-prefix shape."""
+    import glob
+
+    path = str(tmp_path / layout)
+    hfile.write_hfiles(kv, path, rollup=layout == "rollup")
+    region_dirs = glob.glob(os.path.join(path, "region=*"))
+    assert region_dirs, path
+    counts = {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in region_dirs
+    }
+    assert set(counts.values()) == {1}, counts
+
+
+@pytest.mark.parametrize("rollup", [False, True], ids=["raw", "rollup"])
+def test_empty_window_request_adopts_nothing(spark, sf_dir, tmp_path, rollup):
+    """A request whose window holds no cells writes no region dir; the job
+    still succeeds, and it and adoption both return an empty manifest
+    (the reference loads an empty dir as a no-op)."""
+    from hbase_bulkload_service_spark.api import BulkloadRequest, BulkloadService
+
+    start, end = 1_000_000_000_000, 1_000_003_600_000  # 2001: no events
+    svc = BulkloadService(
+        spark,
+        lambda table: tsdb.derive_tsdb_cells(load_events(spark, sf_dir)),
+        str(tmp_path),
+    )
+    job = svc.bulkload(BulkloadRequest("tsdb", "empty", start, end, rollup=rollup))
+    results = svc.run_pending()
+    assert not svc.queue.failures, svc.queue.failures
+    assert results[job] == {"regions": {}}
+    out = f"{tmp_path}/empty/{start}"
+    assert svc.load_hfiles(out, rollup=rollup) == {"regions": {}}
+    with open(os.path.join(out, "_manifest.json")) as f:
+        assert json.load(f) == {"regions": {}}
+
+
+def test_uncommitted_dir_without_regions_is_refused(spark, tmp_path):
+    """Only a committed empty write adopts as empty: a dir with no
+    ``_SUCCESS`` and no region dirs still fails adoption."""
+    path = tmp_path / "uncommitted"
+    (path / "_temporary").mkdir(parents=True)
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        hfile.validate_layout(spark, str(path))

@@ -60,7 +60,16 @@ def test_results_identical_under_both_flags(spark, pairs, monkeypatch):
 def test_broadcast_gate_respects_ceiling(spark, pairs, monkeypatch):
     # above the ceiling the hint must NOT fire (cluster posture: plan
     # byte-identical to the unhinted one)
-    hinted = graph._maybe_broadcast(pairs, graph._BROADCAST_NODES)
-    unhinted = graph._maybe_broadcast(pairs, graph._BROADCAST_NODES + 1)
+    monkeypatch.delenv("SPARK_GRAFT_GRAPH_BROADCAST_NODES", raising=False)
+    hinted = graph._maybe_broadcast(pairs, graph._DEFAULT_BROADCAST_NODES)
+    unhinted = graph._maybe_broadcast(pairs, graph._DEFAULT_BROADCAST_NODES + 1)
     assert unhinted is pairs
     assert hinted is not pairs
+
+
+def test_broadcast_ceiling_is_read_at_call_time(spark, pairs, monkeypatch):
+    """SPARK_GRAFT_GRAPH_BROADCAST_NODES set after the module was imported
+    still moves the ceiling."""
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_BROADCAST_NODES", "5")
+    assert graph._maybe_broadcast(pairs, 5) is not pairs
+    assert graph._maybe_broadcast(pairs, 6) is pairs

@@ -69,22 +69,41 @@ def test_bulkload_kv_is_range_partitioned_and_sorted(spark):
 
     kv = tsdb.bulkload_kv(tsdb.derive_tsdb_cells(load_events(spark, SF_DIR)))
     assert "rangepartitioning(" not in formatted_plan(kv)
-    plan = formatted_plan(hfile.assign_region(kv, rollup=True, num_partitions=16))
-    assert plan.count("rangepartitioning(") == 1, plan
     keys = (
         r"region#\d+ ASC NULLS FIRST, key#\d+ ASC NULLS FIRST, "
         r"qualifier#\d+ ASC NULLS FIRST"
     )
-    exchange = re.search(
-        rf"\((\d+)\) Exchange\nInput .*\nArguments: rangepartitioning\({keys}, 16\)",
-        plan,
+
+    def assert_range_then_sort(plan, width):
+        assert plan.count("rangepartitioning(") == 1, plan
+        exchange = re.search(
+            rf"\((\d+)\) Exchange\nInput .*\n"
+            rf"Arguments: rangepartitioning\({keys}, {width}\)",
+            plan,
+        )
+        assert exchange, plan
+        above = re.search(
+            rf"Sort \((\d+)\)\n\s*\+- Exchange \({exchange.group(1)}\)\n", plan
+        )
+        assert above, plan
+        assert re.search(
+            rf"\({above.group(1)}\) Sort\nInput .*\nArguments: \[{keys}\], false",
+            plan,
+        ), plan
+
+    pinned = hfile.assign_region(kv, rollup=True, num_partitions=16)
+    assert_range_then_sort(formatted_plan(pinned), 16)
+
+    # the default: no count — the exchange starts at the session's shuffle
+    # width and AQE coalesces adjacent ranges once it has run
+    sized = hfile.assign_region(kv, rollup=True, num_partitions=None)
+    assert_range_then_sort(
+        formatted_plan(sized), spark.conf.get("spark.sql.shuffle.partitions")
     )
-    assert exchange, plan
-    above = re.search(rf"Sort \((\d+)\)\n\s*\+- Exchange \({exchange.group(1)}\)\n", plan)
-    assert above, plan
-    assert re.search(
-        rf"\({above.group(1)}\) Sort\nInput .*\nArguments: \[{keys}\], false", plan
-    ), plan
+    sized._jdf.queryExecution().toRdd().count()  # runs the adaptive plan
+    final = formatted_plan(sized)
+    assert "isFinalPlan=true" in final, final
+    assert re.search(r"AQEShuffleRead\n.*\nArguments: coalesced", final), final
 
 
 def test_topk_avoids_global_sort(spark):

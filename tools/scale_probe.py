@@ -119,7 +119,7 @@ def main() -> int:
         c1 = c1.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
         kv = tsdb.bulkload_kv(c1)
         sink = os.path.join(work, "hfiles")
-        hfile.write_hfiles(kv, sink, rollup=True, num_partitions=64, manifest=False)
+        hfile.write_hfiles(kv, sink, rollup=True, manifest=False)
         results["bulkload_wall_s"] = round(time.time() - t0, 1)
 
         sc.setJobGroup("readback", "manifest + layout validation")
