@@ -104,10 +104,10 @@ class BulkloadService:
 
     # -- POST /tsdb/load (:232-254, H7 external contract) ------------------
     def load_hfiles(self, path: str, rollup: bool = False) -> dict:
-        """Adoption stub: validate the sorted/non-overlapping layout that
-        LoadIncrementalHFiles requires, return the manifest that the same
-        readback pass derived."""
-        return hfile.validate_layout(self.spark, path, rollup=rollup)
+        """Adoption stub: validate the non-overlapping layout that
+        LoadIncrementalHFiles requires from the files' footers and return
+        the manifest, which must equal the one the writer committed."""
+        return hfile.validate_layout(path, rollup=rollup)
 
     # -- maintenance crons (:126-154 → manager/HBaseManager.java) ----------
     def merge_small_regions(self, regions: DataFrame, now_ms: int) -> DataFrame:
@@ -141,12 +141,8 @@ class BulkloadService:
         sliced = tsdb.hour_range_filter(cells, req.start_time, req.end_time)
         kv = tsdb.bulkload_kv(sliced)
         # rollup routing (TsdbBulkload.java:62-69): rollup jobs write the
-        # 8-buckets-per-region layout (autoLoad = !rollup, :163). One
-        # readback pass checks the layout and yields the manifest.
+        # 8-buckets-per-region layout (autoLoad = !rollup, :163).
         hfile.write_hfiles(
-            kv, out, rollup=req.rollup, num_partitions=req.parallelism,
-            manifest=False,
+            kv, out, rollup=req.rollup, num_partitions=req.parallelism
         )
-        manifest = hfile.validate_layout(self.spark, out, rollup=req.rollup)
-        hfile.write_manifest(out, manifest)
-        return manifest
+        return hfile.validate_layout(out, rollup=req.rollup)

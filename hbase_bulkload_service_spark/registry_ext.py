@@ -490,14 +490,11 @@ def q56_bulkload_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="q56hfiles")
     try:
-        hfile.write_hfiles(kv, d, rollup=True, manifest=False)
+        hfile.write_hfiles(kv, d, rollup=True)
         # full-corpus summary: native parquet readback (the sink IS parquet
         # per region; at bench scale a full Arrow transfer through the
-        # Python source would dominate the query). The SAME aggregation
-        # also yields the manifest — one readback feeds both (write_hfiles'
-        # own manifest pass is skipped above).
+        # Python source would dominate the query)
         full_rows = summarize(spark.read.parquet(d), "all").collect()
-        hfile.write_manifest(d, hfile.manifest_from_region_stats(full_rows))
         # DSv2 readback on a rowkey range: the engine's own scan source
         # plans one split per region and ELIDES regions outside the pushed
         # [lo, hi) via the manifest — only buckets 0x0000-0x000F (2 region

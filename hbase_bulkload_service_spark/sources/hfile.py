@@ -31,14 +31,20 @@ encode, no Python, so its cost tracks the bytes it is given.
 
 The adoption step (LoadIncrementalHFiles, HBaseController.java:232-254, H7)
 is an external contract: `validate_layout` is the no-op load stub that
-checks exactly what adoption requires — ordering, non-overlap, file caps.
+checks what adoption requires — rows in their region, non-overlapping
+regions, file caps. Like H7, which reads each HFile's first and last key
+and never its cells, it reads file metadata only: parquet footers, or the
+v3 writer's per-file manifest. Both containers go through one check.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+from collections import Counter
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,11 +81,11 @@ def write_hfiles(
     path: str,
     rollup: bool = False,
     num_partitions: int | None = None,
-    manifest: bool = True,
-) -> dict | None:
+) -> dict:
     """Write the KV stream as one sorted parquet directory per region +
-    manifest.json. Input: columns (bucket, key, key_hex, family, qualifier,
-    qualifier_hex, value) — e.g. from operators.tsdb.bulkload_kv.
+    ``_manifest.json``, and return that manifest. Input: columns (bucket,
+    key, key_hex, family, qualifier, qualifier_hex, value) — e.g. from
+    operators.tsdb.bulkload_kv.
 
     Scale: range partitioning on (region, key, qualifier) — raw binary,
     Spark's unsigned-lexicographic BinaryType order == HBase
@@ -94,9 +100,9 @@ def write_hfiles(
     shuffled bytes (see :func:`assign_region`): at small scale one file
     per region. Pass a count only to pin a layout.
 
-    ``manifest=False`` skips the readback pass; a caller that re-reads the
-    output anyway can derive the same stats from its own scan and persist
-    them with :func:`write_manifest` (avoids scanning the data twice).
+    The manifest is built from the written files' parquet footers after
+    Spark's commit (:func:`build_manifest`), no data is read back; it is
+    the commit marker :func:`validate_layout` requires.
     """
     (
         assign_region(kv, rollup, num_partitions)
@@ -105,9 +111,7 @@ def write_hfiles(
         .mode("overwrite")
         .parquet(path)
     )
-    if not manifest:
-        return None
-    m = build_manifest(kv.sparkSession, path)
+    m = build_manifest(path)
     write_manifest(path, m)
     return m
 
@@ -117,67 +121,106 @@ def write_manifest(path: str, manifest: dict | list) -> None:
         json.dump(manifest, f, indent=1, sort_keys=True)
 
 
-def manifest_from_region_stats(rows) -> dict:
-    """Build the manifest dict from per-region stats rows carrying
-    ``region``, ``n_cells`` (or ``rows``), ``min_key_hex``, ``max_key_hex``
-    — lets a caller that already aggregated a readback persist the manifest
-    without a second scan."""
-    return {
-        "regions": {
-            str(r["region"]): {
-                "rows": r["n_cells"] if "n_cells" in r else r["rows"],
-                "min_key_hex": r["min_key_hex"],
-                "max_key_hex": r["max_key_hex"],
-            }
-            for r in rows
-        }
-    }
+def _span(md, col: str, file: str) -> tuple:
+    """(min, max) of ``col`` over a parquet footer's row-group statistics."""
+    j = md.schema.names.index(col)
+    stats = [md.row_group(rg).column(j).statistics for rg in range(md.num_row_groups)]
+    if any(st is None or not st.has_min_max for st in stats):
+        raise ValueError(f"{file}: no min/max statistics for {col}")
+    return min(st.min for st in stats), max(st.max for st in stats)
 
 
-def _region_stats(spark, path: str, step: int = 1) -> list:
-    """The one readback pass over a parquet layout: per region, its row
-    count, key span, and the count of rows whose ``bucket div step`` is not
-    the region they landed in. Sorted by region in the driver (a few
-    hundred rows), so the pass is a single aggregation job. A committed
-    write (``_SUCCESS``) of a window that held no cells leaves no
-    ``region=*`` dir: that layout has no regions, and adopting it is a
-    no-op. A dir with neither still fails the read."""
-    names = os.listdir(path)
-    if "_SUCCESS" in names and not any(n.startswith("region=") for n in names):
-        return []
-    rows = (
-        spark.read.parquet(path)
-        .groupBy("region")
-        .agg(
-            F.count("*").alias("rows"),
-            F.min("key_hex").alias("min_key_hex"),
-            F.max("key_hex").alias("max_key_hex"),
-            F.count_if(F.expr(f"bucket div {step}") != F.col("region")).alias(
-                "wrong_region"
-            ),
+def _file_records(path: str) -> list[dict]:
+    """One record per ``region=*/*.parquet`` file of a parquet layout:
+    ``(file, region, rows, min/max key_hex, min/max bucket)``, from the
+    row-group statistics in its footer — no row is read, as
+    LoadIncrementalHFiles reads only an HFile's first and last key. Names
+    starting with ``.`` or ``_`` are skipped, as Spark's reader does; a
+    file with no rows yields no record, as H7 skips an HFile with no
+    entries."""
+    records = []
+    for full in sorted(glob.glob(os.path.join(path, "region=*", "[!_]*.parquet"))):
+        md = pq.read_metadata(full)
+        if not md.num_rows:
+            continue
+        file = os.path.relpath(full, path)
+        (min_key, max_key), (min_bucket, max_bucket) = (
+            _span(md, "key_hex", file), _span(md, "bucket", file)
         )
-        .collect()
+        records.append({
+            "file": file,
+            "region": int(os.path.dirname(file).split("=", 1)[1]),
+            "rows": md.num_rows,
+            "min_key_hex": min_key,
+            "max_key_hex": max_key,
+            "min_bucket": min_bucket,
+            "max_bucket": max_bucket,
+        })
+    return records
+
+
+def _manifest(records: list[dict]) -> dict:
+    """``{"regions": {"<region>": {rows, min_key_hex, max_key_hex}}}``."""
+    regions: dict[str, dict] = {}
+    for r in records:
+        g = regions.setdefault(
+            str(r["region"]),
+            {"rows": 0, "min_key_hex": r["min_key_hex"], "max_key_hex": r["max_key_hex"]},
+        )
+        g["rows"] += r["rows"]
+        g["min_key_hex"] = min(g["min_key_hex"], r["min_key_hex"])
+        g["max_key_hex"] = max(g["max_key_hex"], r["max_key_hex"])
+    return {"regions": regions}
+
+
+def _check_records(records: list[dict], rollup: bool) -> dict:
+    """The adoption checks of both containers, over per-file records, in
+    order: every file's bucket span sits in its region (region = bucket,
+    or bucket div 8 under ``rollup``), ≤2048 files per region, and region
+    key spans are disjoint. Returns the records' :func:`_manifest`."""
+    step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
+    for r in records:
+        lo, hi = r["min_bucket"], r["max_bucket"]
+        if lo // step != r["region"] or hi // step != r["region"]:
+            raise AssertionError(
+                f"wrong region: {r['file']} holds buckets {lo}..{hi}, "
+                f"not in region {r['region']}"
+            )
+    for region, n in Counter(r["region"] for r in records).items():
+        if n > MAX_FILES_PER_REGION:
+            raise AssertionError(f"region {region}: {n} files > {MAX_FILES_PER_REGION}")
+    manifest = _manifest(records)
+    spans = sorted(
+        (g["min_key_hex"], g["max_key_hex"], region)
+        for region, g in manifest["regions"].items()
     )
-    return sorted(rows, key=lambda r: r["region"])
+    for (_lo_a, hi_a, ra), (lo_b, _hi_b, rb) in zip(spans, spans[1:]):
+        if lo_b < hi_a:
+            raise AssertionError(f"regions {ra} and {rb} overlap in key space")
+    return manifest
 
 
-def build_manifest(spark, path: str) -> dict:
-    return manifest_from_region_stats(_region_stats(spark, path))
+def build_manifest(path: str) -> dict:
+    """``{"regions": {"<region>": {rows, min_key_hex, max_key_hex}}}`` of
+    a parquet layout, from its file footers."""
+    return _manifest(_file_records(path))
 
 
-def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True):
+def validate_layout(path: str, rollup: bool = False, deep: bool = True):
     """No-op `load` stub (H7): assert what LoadIncrementalHFiles needs —
-    per-region files internally sorted, regions non-overlapping in key
-    space, region == its keys' bucket prefix, ≤2048 files per region.
+    regions non-overlapping in key space, each file's buckets in its
+    region, ≤2048 files per region — from file metadata, as H7 reads each
+    HFile's first and last key and never its cells. The order inside a
+    file is :func:`assign_region`'s guarantee.
 
-    Dispatches on the container. A parquet layout is checked in one
-    Spark pass and the manifest that pass derived is returned; that pass
-    sees region spans, not the order inside a file, which
-    :func:`assign_region` guarantees. An HFile
-    v3 dir (``sources/hfilev3.py``) gets the manifest-level checks of
-    :func:`validate_manifest_layout`; ``deep=True`` also parses every
-    file back in the driver (adoption/test scale only). It returns the
-    check summary."""
+    Dispatches on the container. A parquet layout must hold the
+    ``_manifest.json`` :func:`write_hfiles` writes after Spark's commit
+    (a dir without one is refused); its file footers are checked and the
+    manifest they give must equal the written one, which is returned. An
+    HFile v3 dir (``sources/hfilev3.py``) gets the same checks over its
+    per-file manifest (:func:`validate_manifest_layout`); ``deep=True``
+    also parses every file back in the driver (adoption/test scale only).
+    It returns the check summary."""
     if any(n.endswith(".hfile") for n in os.listdir(path)):
         summary = validate_manifest_layout(path, rollup)
         if deep:
@@ -194,82 +237,43 @@ def validate_layout(spark, path: str, rollup: bool = False, deep: bool = True):
             summary["pending"] = None
             summary["checked"].append("hfilev3-per-file-parse")
         return summary
-    step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
-    stats = _region_stats(spark, path, step)
-
-    bad_bucket = sum(r["wrong_region"] for r in stats)
-    if bad_bucket:
-        raise AssertionError(f"{bad_bucket} rows landed in the wrong region")
-
-    prev_hi, prev_region = None, None
-    for r in stats:
-        if prev_hi is not None and r["min_key_hex"] < prev_hi:
-            raise AssertionError(
-                f"regions {prev_region} and {r['region']} overlap in key space"
-            )
-        prev_hi, prev_region = r["max_key_hex"], r["region"]
-
-    for region_dir in sorted(os.listdir(path)):
-        if not region_dir.startswith("region="):
-            continue
-        files = [
-            f
-            for f in os.listdir(os.path.join(path, region_dir))
-            if f.endswith(".parquet")
-        ]
-        if len(files) > MAX_FILES_PER_REGION:
-            raise AssertionError(
-                f"{region_dir}: {len(files)} files > {MAX_FILES_PER_REGION}"
-            )
-    return manifest_from_region_stats(stats)
-
-
-def _check_bucket_prefix(key_hex: str, region: int, step: int, where: str) -> None:
-    """Region == bucket-prefix contract: the key's first 2 bytes are the
-    BE bucket id (tsdb.with_salt), and region = bucket div step."""
-    if int(key_hex[:4], 16) // step != region:
-        raise AssertionError(f"{where}: key {key_hex[:4]} not in region {region}")
+    mpath = os.path.join(path, "_manifest.json")
+    if not os.path.exists(mpath):
+        raise FileNotFoundError(f"{path}: no _manifest.json, the write never committed")
+    manifest = _check_records(_file_records(path), rollup)
+    with open(mpath) as f:
+        if json.load(f) != manifest:
+            raise AssertionError(f"{path}: files disagree with _manifest.json")
+    return manifest
 
 
 def validate_manifest_layout(path: str, rollup: bool = False) -> dict:
     """Adoption check over a per-file ``_manifest.json`` (the list of
     ``{file, region, rows, min_key_hex, max_key_hex}`` a rolling writer
-    emits): each file's key span sits in its region's bucket prefix (div
-    8 under ``rollup``), per-region file count ≤ 2048, and regions are
-    non-overlapping in key space. O(files) metadata, no file is opened.
+    emits): the checks of :func:`_check_records`, with each file's bucket
+    span read off its keys' 2-byte BE salt prefix (tsdb.with_salt).
+    O(files) metadata, no file is opened.
 
     Returns a summary of what WAS checked: ``per_record_validated`` is
     False and ``pending`` names the distributed step the caller still
     owes — gates assert on it instead of silently assuming full coverage
     (VERDICT r04 advice)."""
-    step = ROLLUP_BUCKETS_PER_REGION if rollup else 1
     with open(os.path.join(path, "_manifest.json")) as f:
         manifest = json.load(f)
-    per_region: dict[int, list[dict]] = {}
-    for m in manifest:
-        per_region.setdefault(m["region"], []).append(m)
-        _check_bucket_prefix(m["min_key_hex"], m["region"], step, m["file"])
-        _check_bucket_prefix(m["max_key_hex"], m["region"], step, m["file"])
-    for region, files in per_region.items():
-        if len(files) > MAX_FILES_PER_REGION:
-            raise AssertionError(
-                f"region {region}: {len(files)} files > {MAX_FILES_PER_REGION}"
-            )
-    # region key ranges must not overlap (region order = key order)
-    spans = sorted(
-        (
-            min(f["min_key_hex"] for f in files),
-            max(f["max_key_hex"] for f in files),
-            region,
-        )
-        for region, files in per_region.items()
+    checked = _check_records(
+        [
+            {
+                **m,
+                "min_bucket": int(m["min_key_hex"][:4], 16),
+                "max_bucket": int(m["max_key_hex"][:4], 16),
+            }
+            for m in manifest
+        ],
+        rollup,
     )
-    for (_lo_a, hi_a, ra), (lo_b, _hi_b, rb) in zip(spans, spans[1:]):
-        if lo_b < hi_a and ra != rb:
-            raise AssertionError(f"regions {ra} and {rb} overlap in key space")
     return {
         "files": len(manifest),
-        "regions": len(per_region),
+        "regions": len(checked["regions"]),
         "checked": [
             "manifest-span-bucket-prefix",
             "files-per-region-cap",

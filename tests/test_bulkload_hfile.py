@@ -40,7 +40,7 @@ def test_parquet_hfile_layout(spark, kv, tmp_path):
     manifest = hfile.write_hfiles(kv, path, num_partitions=8)
     assert os.path.exists(os.path.join(path, "_manifest.json"))
     assert manifest["regions"]
-    hfile.validate_layout(spark, path)  # sorted, non-overlapping, capped
+    hfile.validate_layout(path)  # in-region, non-overlapping, capped
 
 
 def test_rollup_region_step(spark, kv, tmp_path):
@@ -49,12 +49,12 @@ def test_rollup_region_step(spark, kv, tmp_path):
     df = spark.read.parquet(path)
     bad = df.filter(F.expr("bucket div 8") != F.col("region")).count()
     assert bad == 0
-    hfile.validate_layout(spark, path, rollup=True)
+    hfile.validate_layout(path, rollup=True)
 
 
 def test_parquet_row_in_wrong_region_dir_is_caught(spark, kv, tmp_path):
-    """One row copied into another region's dir must fail the
-    bucket-div-step == region count of the parquet readback."""
+    """One row copied into another region's dir must fail the footer
+    check that each file's bucket span sits in its region."""
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "hf_wrong_region")
@@ -67,7 +67,7 @@ def test_parquet_row_in_wrong_region_dir_is_caught(spark, kv, tmp_path):
     row = pq.read_table(os.path.join(src_dir, src)).slice(0, 1)
     pq.write_table(row, os.path.join(path, region_dirs[-1], "stray.parquet"))
     with pytest.raises(AssertionError, match="wrong region"):
-        hfile.validate_layout(spark, path)
+        hfile.validate_layout(path)
 
 
 def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
@@ -86,7 +86,7 @@ def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
     path = str(tmp_path / "hf_overlap")
     hfile.write_hfiles(kv, path, num_partitions=2)
     with pytest.raises(AssertionError, match="overlap"):
-        hfile.validate_layout(spark, path)
+        hfile.validate_layout(path)
 
 
 def test_load_hfiles_returns_written_manifest(spark, kv, tmp_path):
@@ -117,7 +117,7 @@ def test_v3_wrong_region_mapping_is_caught(spark, kv, tmp_path):
         m["region"] = m["region"] // 8  # monotone but wrong under rollup=False
     hfile.write_manifest(path, manifest)
     with pytest.raises(AssertionError, match="not in region"):
-        hfile.validate_layout(spark, path, rollup=False, deep=False)
+        hfile.validate_layout(path, rollup=False, deep=False)
 
 
 def test_v3_wrong_region_mapping_is_caught_deep(spark, kv, tmp_path):
@@ -137,7 +137,7 @@ def test_v3_wrong_region_mapping_is_caught_deep(spark, kv, tmp_path):
         m["region"] = m["region"] // 8
     hfile.write_manifest(path, manifest)
     with pytest.raises(AssertionError, match="not in region|disagree"):
-        hfile.validate_layout(spark, path, rollup=False)
+        hfile.validate_layout(path, rollup=False)
 
 
 def _unsorted_files(path):
@@ -225,8 +225,80 @@ def test_empty_window_request_adopts_nothing(spark, sf_dir, tmp_path, rollup):
 
 def test_uncommitted_dir_without_regions_is_refused(spark, tmp_path):
     """Only a committed empty write adopts as empty: a dir with no
-    ``_SUCCESS`` and no region dirs still fails adoption."""
+    ``_manifest.json`` and no region dirs still fails adoption."""
     path = tmp_path / "uncommitted"
     (path / "_temporary").mkdir(parents=True)
-    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
-        hfile.validate_layout(spark, str(path))
+    with pytest.raises(Exception, match="no _manifest.json"):
+        hfile.validate_layout(str(path))
+
+
+@pytest.mark.parametrize("tamper", ["deleted", "edited"])
+def test_adoption_needs_the_written_manifest(spark, kv, tmp_path, tamper):
+    """``_manifest.json`` is the commit marker: a committed write without
+    it, or with one its files disagree with, is not adopted."""
+    path = str(tmp_path / "hf")
+    hfile.write_hfiles(kv, path, num_partitions=8)
+    mpath = os.path.join(path, "_manifest.json")
+    if tamper == "deleted":
+        os.remove(mpath)
+        with pytest.raises(FileNotFoundError, match="no _manifest.json"):
+            hfile.validate_layout(path)
+    else:
+        with open(mpath) as f:
+            manifest = json.load(f)
+        next(iter(manifest["regions"].values()))["rows"] += 1
+        hfile.write_manifest(path, manifest)
+        with pytest.raises(AssertionError, match="disagree"):
+            hfile.validate_layout(path)
+
+
+@pytest.mark.parametrize("rollup", [False, True], ids=["raw", "rollup"])
+def test_adoption_runs_no_spark_job(spark, kv, tmp_path, rollup):
+    """Adoption reads file footers only: no Spark job runs under its job
+    group, and its manifest equals an aggregate over every row."""
+    import pyarrow.dataset as ds
+
+    path = str(tmp_path / "hf")
+    hfile.write_hfiles(kv, path, rollup=rollup)
+    sc = spark.sparkContext
+    group = f"adopt-{'rollup' if rollup else 'raw'}"
+    sc.setJobGroup(group, "adoption")
+    try:
+        manifest = hfile.validate_layout(path, rollup=rollup)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    rows = (
+        ds.dataset(path, format="parquet", partitioning="hive")
+        .to_table(columns=["region", "key_hex"])
+        .group_by("region")
+        .aggregate([("key_hex", "count"), ("key_hex", "min"), ("key_hex", "max")])
+        .to_pylist()
+    )
+    assert rows
+    assert manifest == {
+        "regions": {
+            str(r["region"]): {
+                "rows": r["key_hex_count"],
+                "min_key_hex": r["key_hex_min"],
+                "max_key_hex": r["key_hex_max"],
+            }
+            for r in rows
+        }
+    }
+
+
+def test_region_file_without_statistics_is_refused(spark, kv, tmp_path):
+    """A region file whose footer has no min/max statistics cannot be
+    checked from metadata: adoption fails and names the file."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "hf_nostats")
+    hfile.write_hfiles(kv, path, num_partitions=8)
+    victim = sorted(glob.glob(os.path.join(path, "region=*", "*.parquet")))[0]
+    pq.write_table(pq.read_table(victim), victim, write_statistics=False)
+    with pytest.raises(ValueError, match=os.path.relpath(victim, path)):
+        hfile.validate_layout(path)

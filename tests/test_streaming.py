@@ -204,7 +204,7 @@ def test_streaming_bulkload_batches_equal_batch_pipeline(spark, tmp_path):
     batch_dirs = sorted(glob.glob(f"{out}/batch=*"))
     assert len(batch_dirs) == 3, batch_dirs
     for d in batch_dirs:
-        hfile.validate_layout(spark, d, rollup=True)  # each unit adoptable
+        hfile.validate_layout(d, rollup=True)  # each unit adoptable
 
     # union of staged cells == one-shot pipeline over the same input
     # (per-batch dedup == global dedup because batches are rowkey-disjoint)

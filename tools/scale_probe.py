@@ -119,24 +119,12 @@ def main() -> int:
         c1 = c1.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
         kv = tsdb.bulkload_kv(c1)
         sink = os.path.join(work, "hfiles")
-        hfile.write_hfiles(kv, sink, rollup=True, manifest=False)
+        hfile.write_hfiles(kv, sink, rollup=True)
         results["bulkload_wall_s"] = round(time.time() - t0, 1)
 
-        sc.setJobGroup("readback", "manifest + layout validation")
-        back = spark.read.parquet(sink)
-        stats = (
-            back.groupBy("region")
-            .agg(
-                F.count("*").alias("n_cells"),
-                F.min("key_hex").alias("min_key_hex"),
-                F.max("key_hex").alias("max_key_hex"),
-            )
-            .collect()
-        )
-        hfile.write_manifest(sink, hfile.manifest_from_region_stats(stats))
-        hfile.validate_layout(spark, sink, rollup=True)  # non-overlap proof
-        results["bulkload_rows"] = int(sum(r["n_cells"] for r in stats))
-        results["bulkload_regions"] = len(stats)
+        regions = hfile.validate_layout(sink, rollup=True)["regions"]  # non-overlap proof
+        results["bulkload_rows"] = sum(r["rows"] for r in regions.values())
+        results["bulkload_regions"] = len(regions)
 
         # ---- q59 bucketed join at amplified scale
         sc.setJobGroup("bucket_write", "write CLUSTERED BY tables")
