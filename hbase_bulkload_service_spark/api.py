@@ -118,8 +118,8 @@ class BulkloadService:
 
     def compact_table(self, path: str, **kwargs) -> list[str]:
         """K2 file-level cron: small-file compaction over a partitioned
-        table dir (compact_small_partitions; crash-safe two-rename
-        swap). Returns rewritten partition dirs."""
+        table dir (compact_small_partitions; each partition commits
+        through ``hfile.commit_dir``). Returns rewritten partition dirs."""
         return maintenance.compact_small_partitions(self.spark, path, **kwargs)
 
     def backup_hfiles(self, regions: DataFrame, now_ms: int) -> DataFrame:

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 #: plan is byte-identical to the unhinted one (cluster posture: a graph
 #: with |V| past broadcast keeps the exchange). Env-parameterized like
 #: SPARK_GRAFT_SHUFFLE_PARTITIONS so a cluster deployment can tune it
-#: without a code change; read per call, like SPARK_GRAFT_GRAPH_EDGE_CACHE,
-#: so a value set after import takes effect.
+#: without a code change; read per call, so a value set after import
+#: takes effect.
 _DEFAULT_BROADCAST_NODES = 1_000_000
 
 
@@ -40,30 +40,6 @@ def _maybe_broadcast(df: DataFrame, n_nodes: int) -> DataFrame:
         )
     )
     return F.broadcast(df) if n_nodes <= ceiling else df
-
-
-def _edge_layout(edges: DataFrame, key: str) -> DataFrame:
-    """Cluster-scale opt-in (VERDICT r08 item 7): pre-partition + persist
-    the loop-invariant edge table on the per-round join key, so that when
-    |V| is past the broadcast ceiling (the hint above does not fire) each
-    round's sort-merge join reuses ONE edge layout instead of
-    re-exchanging the edge table every round.
-
-    DEFAULT OFF: at bench scale the |V|-row side broadcasts, the edge
-    table is never exchanged, and the upfront repartition is pure cost —
-    the r08 experiment measured exactly this shape 1.27x SLOWER at
-    sf0.1, which is why this is an env opt-in
-    (``SPARK_GRAFT_GRAPH_EDGE_CACHE=1``, same parameterization pattern
-    as SPARK_GRAFT_SHUFFLE_PARTITIONS) rather than the default plan.
-    The persist is registered under the bounded cache registry like
-    every operator-internal persist."""
-    if os.environ.get("SPARK_GRAFT_GRAPH_EDGE_CACHE") != "1":
-        return edges
-    from hbase_bulkload_service_spark import cachereg
-
-    cached = edges.repartition(key).persist()
-    cachereg.register(cached, family="graph")
-    return cached
 
 
 def degrees(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
@@ -223,7 +199,6 @@ def pagerank(
         ),
         "src",
     ).localCheckpoint(eager=False)
-    edges_wd = _edge_layout(edges_wd, "src")
     ranks = deg.select("node", F.lit(PR_MASS // n).alias("r"))
     for _ in range(iters):
         contrib = (
@@ -288,7 +263,6 @@ def connected_components_rounds(
     # every round's contribution join (r09, guide §3.1) — the edge table
     # is never exchanged and each round plans one shuffle (the min agg).
     n = labels.count()
-    edges = _edge_layout(edges, "src")
     for _ in range(rounds):
         nbr = _maybe_broadcast(labels, n).join(
             edges, F.col("node") == F.col("src")
@@ -434,7 +408,6 @@ def label_propagation_rounds(
     # same static-broadcast gate as connected_components_rounds (r09,
     # guide §3.1): one count up front, edge table never exchanged.
     n = labels.count()
-    edges = _edge_layout(edges, "src")
     for _ in range(rounds):
         counts = (
             _maybe_broadcast(labels, n)

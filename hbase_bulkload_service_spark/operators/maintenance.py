@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from hbase_bulkload_service_spark.session import local_frame
+from hbase_bulkload_service_spark.sources.hfile import commit_dir, recover_dirs
 from pyspark.sql import functions as F
 
 LOWER_SIZE = 100 * 1024 * 1024  # 100 MB — HBaseProperties.java:18
@@ -186,26 +187,14 @@ def compact_small_partitions(
     (``max_concurrent`` driver threads submitting independent Spark
     jobs — a small compaction job uses few task slots, so serial
     submission leaves the cluster idle; HBase likewise compacts regions
-    in parallel). Partitions are independent, so concurrency does not
-    change the crash contract: a leftover ``*_old`` dir from a crash
-    between a partition's two renames is restored on entry before any
-    new rewrite, and no partition is ever lost to a mid-swap failure.
+    in parallel). Each rewrite commits through ``hfile.commit_dir``, so a
+    partition always holds its old files or its compacted ones; the root
+    is swept once with ``hfile.recover_dirs`` before the partitions are
+    listed, which restores any partition a crash left mid-swap.
     """
-    import os
-    import shutil
     from concurrent.futures import ThreadPoolExecutor
 
-    # recover partitions orphaned by a crash between rename(full, _old)
-    # and rename(_compact, full): the _old dir is the authoritative copy.
-    for d in sorted(os.listdir(path)):
-        if d.endswith("_old"):
-            orig = os.path.join(path, d[: -len("_old")])
-            if not os.path.exists(orig):
-                os.rename(os.path.join(path, d), orig)
-            else:
-                shutil.rmtree(os.path.join(path, d))
-        elif d.endswith("_compact"):
-            shutil.rmtree(os.path.join(path, d))
+    recover_dirs(path)
 
     def rewrite(d: str) -> str | None:
         full = os.path.join(path, d)
@@ -215,11 +204,7 @@ def compact_small_partitions(
             return None
         df = spark.read.parquet(full)
         n = max(1, -(size // -target_bytes))  # ceil
-        df.coalesce(int(n)).write.mode("overwrite").parquet(full + "_compact")
-        # two-rename swap; a crash in between is recovered on re-entry
-        os.rename(full, full + "_old")
-        os.rename(full + "_compact", full)
-        shutil.rmtree(full + "_old")
+        commit_dir(full, lambda staging: df.coalesce(int(n)).write.parquet(staging))
         return d
 
     dirs = [
@@ -293,46 +278,17 @@ def execute_backup(table_path: str, regions: list[int], backup_path: str) -> lis
     analog: directory-level copy, idempotent overwrite like -update).
     Returns one manifest entry per region: name, files, bytes.
 
-    Crash safety: copy lands in a temp sibling first, then replaces the
-    prior backup via rename — a mid-copy failure never destroys the last
-    good backup (same atomic-rename pattern as streaming/ops.py's
-    upsert_batch_writer). The two-rename swap itself is NOT crash-atomic:
-    a failure between ``rename(dst, old)`` and ``rename(tmp, dst)``
-    leaves no ``region=N`` dir — so on entry this function first RECOVERS
-    from leftover ``.old`` siblings (renaming them back when ``dst`` is
-    missing) before copying, making a re-run after any crash converge to
-    a good state. Leftover ``.inprogress`` dirs are always discarded."""
-    # crash recovery sweep over the WHOLE backup root, not just the regions
-    # in this call: any `X.old` whose `X` is missing is a backup orphaned
-    # by a crash mid-swap — rename it back so execute_restore sees it
-    if os.path.isdir(backup_path):
-        for entry in os.listdir(backup_path):
-            if entry.endswith(".old"):
-                orphan = os.path.join(backup_path, entry)
-                base = orphan[: -len(".old")]
-                if os.path.isdir(orphan) and not os.path.isdir(base):
-                    os.rename(orphan, base)
+    Each region's copy commits through ``hfile.commit_dir``, so a failure
+    at any point never destroys the last good backup; the backup root is
+    swept once with ``hfile.recover_dirs`` first, for ALL regions, not
+    only this call's, so a re-run after any crash converges and
+    execute_restore sees every backup."""
+    recover_dirs(backup_path)
     out = []
     for region in regions:
         src = _region_dir(table_path, region)
         dst = _region_dir(backup_path, region)
-        tmp = dst + ".inprogress"
-        old = dst + ".old"
-        # per-region recovery (covers a backup_path created this call)
-        if os.path.isdir(old):
-            if not os.path.isdir(dst):
-                os.rename(old, dst)
-            else:
-                shutil.rmtree(old)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        shutil.copytree(src, tmp)
-        if os.path.isdir(dst):
-            os.rename(dst, old)
-            os.rename(tmp, dst)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, dst)
+        commit_dir(dst, lambda staging: shutil.copytree(src, staging))
         n, size = _dir_stats(dst)
         out.append(
             {"backup_name": f"region={int(region)}", "region": int(region),

@@ -55,6 +55,11 @@ class JobQueue:
     failures: dict[str, Exception] = field(default_factory=dict)
 
     def submit(self, job_id: str, fn: Callable[[], object]) -> None:
+        """Enqueue ``fn`` under ``job_id``. A job id already pending is
+        refused: results are keyed on it, and the service derives the
+        job's output dir from the same request fields."""
+        if any(job_id == pending for pending, _ in self.jobs):
+            raise ValueError(f"job {job_id} is already pending")
         self.jobs.append((job_id, fn))
 
     def run_all(self, spark=None) -> dict[str, object]:

@@ -1170,8 +1170,9 @@ def q99_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins BOTH content (count/sum per region unchanged by the rewrite)
     and layout (``n_files`` counted via input_file_name == 1). The
     driver-side dir walk is bounded metadata (one entry per partition);
-    each rewrite is a distributed read→write. Crash-recovery of the
-    two-rename swap is pinned in test_maintenance_exec."""
+    each rewrite is a distributed read→write committed through
+    ``hfile.commit_dir``; its crash recovery is pinned in
+    test_maintenance_exec."""
     import shutil
     import tempfile
 

@@ -35,6 +35,18 @@ checks what adoption requires — rows in their region, non-overlapping
 regions, file caps. Like H7, which reads each HFile's first and last key
 and never its cells, it reads file metadata only: parquet footers, or the
 v3 writer's per-file manifest. Both containers go through one check.
+
+Every directory writer of the engine commits through :func:`commit_dir`,
+so the adopted dir holds either the last complete output or the new
+complete one, never a mix: the callback writes the whole output,
+``_manifest.json`` included, into ``<final>.inprogress``, and the staging
+dir is then swapped into place (``final → final.old``, ``staging →
+final``, delete ``final.old``). The manifest is written before the swap
+because it is the commit marker adoption requires: a dir renamed into
+place is complete by construction. A crash at any point leaves a state
+the next commit (or :func:`recover_dirs`) rolls back: a ``.old`` whose
+``final`` is missing is renamed back, any other ``.old`` and any
+``.inprogress`` are deleted.
 """
 
 from __future__ import annotations
@@ -42,6 +54,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -102,18 +115,70 @@ def write_hfiles(
 
     The manifest is built from the written files' parquet footers after
     Spark's commit (:func:`build_manifest`), no data is read back; it is
-    the commit marker :func:`validate_layout` requires.
+    the commit marker :func:`validate_layout` requires. Files and manifest
+    land in a staging dir that :func:`commit_dir` swaps into ``path``, so
+    a write that fails at any step leaves the previous output adoptable
+    and a retry replaces it whole.
     """
-    (
-        assign_region(kv, rollup, num_partitions)
-        .write.partitionBy("region")
-        .option("compression", "snappy")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    m = build_manifest(path)
-    write_manifest(path, m)
-    return m
+
+    def write(staging: str) -> dict:
+        (
+            assign_region(kv, rollup, num_partitions)
+            .write.partitionBy("region")
+            .option("compression", "snappy")
+            .parquet(staging)
+        )
+        m = build_manifest(staging)
+        write_manifest(staging, m)
+        return m
+
+    return commit_dir(path, write)
+
+
+def _recover(final: str) -> None:
+    """Roll back what a crashed :func:`commit_dir` on ``final`` left: a
+    ``.old`` is the last complete output when ``final`` is missing (crash
+    between the two renames) and stale otherwise; an ``.inprogress`` is
+    always incomplete."""
+    old, staging = final + ".old", final + ".inprogress"
+    if os.path.exists(old):
+        if os.path.exists(final):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, final)
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+
+
+def commit_dir(final: str, write):
+    """The engine's one directory commit: recover ``final``, call
+    ``write(final + ".inprogress")`` to write the complete output, then
+    swap it into place and return ``write``'s result (see the module
+    docstring). A failing ``write`` leaves ``final`` untouched and its
+    staging dir for the next commit to delete."""
+    final = os.path.normpath(final)
+    _recover(final)
+    staging, old = final + ".inprogress", final + ".old"
+    result = write(staging)
+    if os.path.exists(final):
+        os.rename(final, old)
+        os.rename(staging, final)
+        shutil.rmtree(old)
+    else:
+        os.rename(staging, final)
+    return result
+
+
+def recover_dirs(root: str) -> None:
+    """:func:`commit_dir`'s recovery for every ``*.old`` and
+    ``*.inprogress`` entry directly under ``root`` — for writers that
+    commit many sibling dirs concurrently and sweep the root once first."""
+    if not os.path.isdir(root):
+        return
+    for entry in sorted(os.listdir(root)):
+        for suffix in (".old", ".inprogress"):
+            if entry.endswith(suffix):
+                _recover(os.path.join(root, entry[: -len(suffix)]))
 
 
 def write_manifest(path: str, manifest: dict | list) -> None:

@@ -1492,35 +1492,42 @@ def write_hfilev3_files(
     value); cell timestamp is fixed at 0 (bulk loads carry the version in
     the value/qualifier per the reference's TSDB layout). Returns the
     per-file manifest (``file, region, rows, min_key_hex, max_key_hex``),
-    also written to ``_manifest.json``."""
+    also written to ``_manifest.json``. Files and manifest are written to
+    a staging dir that ``hfile.commit_dir`` swaps into ``path``, so the
+    dir never mixes this write's files with a previous write's."""
     from hbase_bulkload_service_spark.sources.hfile import (
         assign_region,
+        commit_dir,
         write_manifest,
     )
 
-    os.makedirs(path, exist_ok=True)
     sorted_kv = assign_region(kv, rollup, num_partitions)
 
-    def write_region_file(region: int, pid: int, cells) -> dict:
-        fname = os.path.join(path, f"region_{region:05d}_p{pid:05d}.hfile")
-        meta = write_hfile_v3(
-            fname,
-            ((k, f, q, 0, v) for k, f, q, v in cells),
-            compression=compression,
-            encoding=encoding,
-            bloom=bloom,
-        )
-        return {
-            "file": os.path.basename(fname),
-            "region": region,
-            "rows": meta["rows"],
-            "min_key_hex": meta["min_key_hex"],
-            "max_key_hex": meta["max_key_hex"],
-        }
+    def write(staging: str) -> list[dict]:
+        os.makedirs(staging)
 
-    manifest = _rolling_write_arrow(sorted_kv, write_region_file)
-    write_manifest(path, manifest)
-    return manifest
+        def write_region_file(region: int, pid: int, cells) -> dict:
+            fname = os.path.join(staging, f"region_{region:05d}_p{pid:05d}.hfile")
+            meta = write_hfile_v3(
+                fname,
+                ((k, f, q, 0, v) for k, f, q, v in cells),
+                compression=compression,
+                encoding=encoding,
+                bloom=bloom,
+            )
+            return {
+                "file": os.path.basename(fname),
+                "region": region,
+                "rows": meta["rows"],
+                "min_key_hex": meta["min_key_hex"],
+                "max_key_hex": meta["max_key_hex"],
+            }
+
+        manifest = _rolling_write_arrow(sorted_kv, write_region_file)
+        write_manifest(staging, manifest)
+        return manifest
+
+    return commit_dir(path, write)
 
 
 def read_hfilev3_dir(spark, path: str):

@@ -11,7 +11,6 @@ stateful-latest operator stores one (version_ts, value) pair per key.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -152,7 +151,10 @@ def streaming_latest_version(cells):
 def upsert_batch_writer(path: str, key_cols: tuple[str, ...] = ("key", "qualifier")):
     """H4/H6 sink analog for parquet fixtures: a foreachBatch function that
     merges each micro-batch into a keyed snapshot with latest-version-wins
-    semantics (read old snapshot ∪ batch → arg-max per key → atomic swap).
+    semantics (old snapshot ∪ batch → arg-max per key), committed through
+    ``hfile.commit_dir``. The old snapshot is read inside the commit, after
+    its recovery, so replaying a batch after a crash mid-swap merges into
+    the restored snapshot instead of an empty one.
 
     The reference buffers Puts and flushes at 2 MB / 1000 rows / 1 s
     (HBase2DynamicTableFactory.java:76-102); micro-batches ARE that buffer
@@ -160,40 +162,28 @@ def upsert_batch_writer(path: str, key_cols: tuple[str, ...] = ("key", "qualifie
     MERGE INTO on a table format with row-level upserts; the per-batch
     dedup logic is identical.
     """
+    from hbase_bulkload_service_spark.sources.hfile import commit_dir
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        keys = [F.col(c) for c in key_cols]
-        latest = (
-            batch_df.groupBy(*keys)
-            .agg(
-                F.max_by(F.struct("version_ts", "value"), F.col("version_ts")).alias(
-                    "s"
-                )
-            )
-            .select(*key_cols, "s.version_ts", "s.value")
-        )
-        if os.path.isdir(path):
-            old = spark.read.parquet(path)
-            latest = (
-                old.unionByName(latest)
-                .groupBy(*keys)
+        cells = batch_df.select(*key_cols, "version_ts", "value")
+
+        def merge(staging: str) -> None:
+            merged = cells
+            if os.path.isdir(path):
+                merged = spark.read.parquet(path).unionByName(cells)
+            (
+                merged.groupBy(*key_cols)
                 .agg(
                     F.max_by(
                         F.struct("version_ts", "value"), F.col("version_ts")
                     ).alias("s")
                 )
                 .select(*key_cols, "s.version_ts", "s.value")
+                .write.parquet(staging)
             )
-        tmp = path + f"_tmp{batch_id}"
-        latest.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(path):
-            old_dir = path + f"_old{batch_id}"
-            os.rename(path, old_dir)
-            os.rename(tmp, path)
-            shutil.rmtree(old_dir)
-        else:
-            os.rename(tmp, path)
+
+        commit_dir(path, merge)
 
     return write
 
@@ -235,9 +225,10 @@ def streaming_bulkload(
     HBaseController.java:49-124) as a Structured Streaming foreachBatch:
     every micro-batch runs the FULL flagship pipeline (salt → dedup →
     range-sorted per-region files: tsdb.bulkload_kv, hfile.write_hfiles)
-    into its own ``batch=<id>/`` staging dir — one adoption unit per batch,
+    into its own ``batch=<id>/`` dir — one adoption unit per batch,
     exactly the queue's one-job-at-a-time contract (micro-batches are
-    sequential).
+    sequential). ``write_hfiles`` commits each unit through
+    ``hfile.commit_dir``, so a replayed batch replaces its unit whole.
 
     Cross-batch versions are NOT merged here: like the reference, each
     job's HFile set is self-consistent and HBase resolves versions at read

@@ -108,3 +108,22 @@ def test_compact_cron_rewrites_partition_dirs(service, spark, tmp_path):
             f for f in os.listdir(os.path.join(d, sub)) if f.endswith(".parquet")
         ]
         assert len(files) == 1
+
+
+def test_duplicate_pending_request_is_refused(service):
+    """Two requests with the same target and start share a job id and an
+    output dir: the second is refused while the first is pending."""
+    service.bulkload(BulkloadRequest("tsdb", "bucket-tsdb", START, END))
+    with pytest.raises(ValueError, match="already pending"):
+        service.bulkload(BulkloadRequest("tsdb", "bucket-tsdb", START, END + 1))
+    assert len(service.queue.jobs) == 1
+
+
+def test_job_id_is_free_again_after_its_run():
+    from hbase_bulkload_service_spark.plans.jobs import JobQueue
+
+    queue = JobQueue()
+    queue.submit("j", lambda: 1)
+    queue.run_all()
+    queue.submit("j", lambda: 2)
+    assert queue.run_all() == {"j": 2}

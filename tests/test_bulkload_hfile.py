@@ -302,3 +302,58 @@ def test_region_file_without_statistics_is_refused(spark, kv, tmp_path):
     pq.write_table(pq.read_table(victim), victim, write_statistics=False)
     with pytest.raises(ValueError, match=os.path.relpath(victim, path)):
         hfile.validate_layout(path)
+
+
+def test_failed_rewrite_keeps_the_committed_output(spark, kv, tmp_path, monkeypatch):
+    """A write that fails after Spark's commit (here: building the
+    manifest) must leave the previously committed output adoptable, and
+    on a fresh path leave no final dir at all; the next good write
+    leaves no staging or ``.old`` entry behind."""
+    from hbase_bulkload_service_spark.api import BulkloadService
+
+    path = str(tmp_path / "hf_committed")
+    fresh = str(tmp_path / "hf_fresh")
+    first = hfile.write_hfiles(kv, path, num_partitions=8)
+
+    def fail(_path):
+        raise RuntimeError("manifest build failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(hfile, "build_manifest", fail)
+        for target in (path, fresh):
+            with pytest.raises(RuntimeError, match="manifest build failed"):
+                hfile.write_hfiles(kv, target)
+    svc = BulkloadService(spark, lambda table: None, str(tmp_path))
+    assert svc.load_hfiles(path) == first
+    assert not os.path.exists(fresh)
+    hfile.write_hfiles(kv, path)
+    hfile.write_hfiles(kv, fresh)
+    assert not [
+        e for e in os.listdir(tmp_path) if e.endswith((".inprogress", ".old"))
+    ]
+
+
+def test_retry_gives_the_same_output(spark, kv, tmp_path):
+    """Writing the same KV twice to one path gives an equal manifest and
+    equal rows in every region."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "hf_retry")
+
+    def write_and_read():
+        manifest = hfile.write_hfiles(kv, path)
+        rows = {
+            d: pq.read_table(os.path.join(path, d)).sort_by(
+                [("key_hex", "ascending"), ("qualifier_hex", "ascending")]
+            )
+            for d in sorted(os.listdir(path))
+            if d.startswith("region=")
+        }
+        return manifest, rows
+
+    first_manifest, first_rows = write_and_read()
+    second_manifest, second_rows = write_and_read()
+    assert second_manifest == first_manifest
+    assert second_rows.keys() == first_rows.keys()
+    for d, table in first_rows.items():
+        assert second_rows[d].equals(table), d

@@ -1,12 +1,6 @@
-"""SPARK_GRAFT_GRAPH_EDGE_CACHE (r09, VERDICT r08 item 7): the
-cluster-scale opt-in edge layout for the iterative graph loops.
-
-Pins both plan shapes: flag OFF (default — bench posture, the r08 A/B
-measured the pre-partitioned layout 1.27x slower locally because AQE
-broadcasts the |V| side and the edge table is never exchanged) leaves
-the edge frame untouched; flag ON pre-partitions it on the round-join
-key and persists it under the bounded cache registry. Results must be
-identical under both flags.
+"""Iterative graph loops over a pair table: connected-components
+results, and the static broadcast gate on the |V|-row side of each
+round's join (SPARK_GRAFT_GRAPH_BROADCAST_NODES, read per call).
 """
 
 from __future__ import annotations
@@ -27,32 +21,9 @@ def pairs(spark):
     return spark.createDataFrame(PAIRS, "doc_a long, doc_b long")
 
 
-def test_flag_off_is_a_passthrough(spark, pairs, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_EDGE_CACHE", raising=False)
-    out = graph._edge_layout(pairs, "doc_a")
-    assert out is pairs  # no hidden exchange, no persist
-
-
-def test_flag_on_partitions_and_persists(spark, pairs, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_EDGE_CACHE", "1")
-    out = graph._edge_layout(pairs, "doc_a")
-    try:
-        assert out.storageLevel.useMemory  # persisted (cachereg-bounded)
-        plan = out._jdf.queryExecution().analyzed().toString()
-        assert "repartitionbyexpression" in plan.lower().replace(" ", "")
-    finally:
-        out.unpersist()
-
-
-def test_results_identical_under_both_flags(spark, pairs, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_EDGE_CACHE", raising=False)
-    off = sorted(
-        graph.connected_components_rounds(pairs, rounds=3).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_EDGE_CACHE", "1")
-    on = sorted(graph.connected_components_rounds(pairs, rounds=3).collect())
-    assert off == on
-    assert {(r["node"], r["component"]) for r in off} == {
+def test_results_identical_under_both_flags(spark, pairs):
+    got = sorted(graph.connected_components_rounds(pairs, rounds=3).collect())
+    assert {(r["node"], r["component"]) for r in got} == {
         (1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10), (20, 20), (21, 20)
     }
 

@@ -150,9 +150,7 @@ def test_vlong_roundtrip():
 # Spark rolling writer + distributed reader (H2/H3 contract over v3)
 # ---------------------------------------------------------------------------
 
-def test_rolling_writer_and_distributed_reader(spark, tmp_path):
-    from pyspark.sql import functions as F
-
+def _spark_kv(spark):
     rows = []
     for b in range(4):
         for i in range(50):
@@ -166,6 +164,11 @@ def test_rolling_writer_and_distributed_reader(spark, tmp_path):
         "bucket int, key binary, key_hex string, family binary,"
         " qualifier binary, qualifier_hex string, value binary",
     )
+    return rows, kv
+
+
+def test_rolling_writer_and_distributed_reader(spark, tmp_path):
+    rows, kv = _spark_kv(spark)
     d = str(tmp_path / "v3dir")
     manifest = h3.write_hfilev3_files(kv, d, rollup=False, num_partitions=4)
     assert {m["region"] for m in manifest} == {0, 1, 2, 3}
@@ -186,6 +189,20 @@ def test_rolling_writer_and_distributed_reader(spark, tmp_path):
     open(p, "wb").write(bytes(blob))
     with pytest.raises(Exception):
         h3.read_hfilev3_dir(spark, d).collect()
+
+
+def test_rewrite_with_fewer_regions_leaves_no_stale_file(spark, tmp_path):
+    """A second write into a used dir replaces it whole: the dir holds
+    exactly the files of the new manifest, since adoption takes every
+    file in it."""
+    d = str(tmp_path / "v3dir")
+    _, kv = _spark_kv(spark)
+    h3.write_hfilev3_files(kv, d, num_partitions=4)
+    manifest = h3.write_hfilev3_files(kv.filter("bucket < 2"), d, num_partitions=2)
+    assert {m["region"] for m in manifest} == {0, 1}
+    assert {f for f in os.listdir(d) if f.endswith(".hfile")} == {
+        m["file"] for m in manifest
+    }
 
 
 # ---------------------------------------------------------------------------

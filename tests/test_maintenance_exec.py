@@ -138,16 +138,16 @@ def test_compaction_recovers_from_crash_orphaned_old(spark, sf_dir, tmp_path):
     )
     ev.repartition(3).write.partitionBy("region").parquet(path)
     total = spark.read.parquet(path).count()
-    # simulate a crash between rename(full, _old) and rename(_compact, full):
-    # region=1 exists only as the _old copy
-    os.rename(os.path.join(path, "region=1"), os.path.join(path, "region=1_old"))
-    # plus a stale half-written _compact for region=2
+    # simulate a crash between rename(full, .old) and rename(.inprogress,
+    # full): region=1 exists only as the .old copy
+    os.rename(os.path.join(path, "region=1"), os.path.join(path, "region=1.old"))
+    # plus a stale half-written .inprogress for region=2
     shutil.copytree(
-        os.path.join(path, "region=2"), os.path.join(path, "region=2_compact")
+        os.path.join(path, "region=2"), os.path.join(path, "region=2.inprogress")
     )
     mnt.compact_small_partitions(spark, path)
     assert not any(
-        d.endswith(("_old", "_compact")) for d in os.listdir(path)
+        d.endswith((".old", ".inprogress")) for d in os.listdir(path)
     )
     assert spark.read.parquet(path).count() == total
 

@@ -131,7 +131,35 @@ def test_upsert_batch_writer(spark, tmp_path):
         ("k2", "q1"): (300, 7.0),
         ("k3", "q2"): (50, 0.5),
     }
-    assert not os.path.isdir(path + "_tmp1")
+    assert not os.path.isdir(path + ".inprogress")
+
+
+def test_upsert_batch_writer_replay_after_crash_mid_swap(spark, tmp_path):
+    """A crash between the commit's two renames leaves the snapshot only
+    as ``.old``; replaying the batch must merge into the recovered
+    snapshot, so every key of earlier batches survives."""
+    path = str(tmp_path / "snapshot")
+    writer = st.upsert_batch_writer(path)
+    writer(
+        spark.createDataFrame(
+            [("k1", "q1", 100, 1.0), ("k2", "q1", 100, 5.0)], st.CELL_SCHEMA
+        ),
+        0,
+    )
+    b2 = spark.createDataFrame([("k3", "q2", 50, 0.5)], st.CELL_SCHEMA)
+    writer(b2, 1)
+    os.rename(path, path + ".old")
+    writer(b2, 1)  # replay
+    snap = {
+        (r.key, r.qualifier): (r.version_ts, r.value)
+        for r in spark.read.parquet(path).collect()
+    }
+    assert snap == {
+        ("k1", "q1"): (100, 1.0),
+        ("k2", "q1"): (100, 5.0),
+        ("k3", "q2"): (50, 0.5),
+    }
+    assert not os.path.exists(path + ".old")
 
 
 def test_streaming_lookup_join_inner_drops_misses(spark, tmp_path):

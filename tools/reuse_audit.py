@@ -73,7 +73,6 @@ ALLOWLIST: dict[tuple[str, str], dict] = {
     ("token_tvd", "totals"): {"note": "derived-from-cache (sw is persisted; totals is a sources-bounded agg over the cache)", "fn_sha": "ca5b88a0f317"},
     ("stale_series", "last"): {"note": "reuse-covered (q158 probe: no duplicated scan)", "fn_sha": "1017cedaa281"},
     ("vocab_concentration", "counts"): {"note": "reuse-covered (q224 probe: no duplicated scan — totals and the TakeOrdered cut share the word-keyed exchange; re-adjudicated r08 after the empty-corpus filter, which sits ABOVE the fan-out and does not change it)", "fn_sha": "c1444c58c161"},
-    ("write", "latest"): {"note": "not-a-fanout (rebound inside the if branch; one consumption per path, per-micro-batch frame)", "fn_sha": "66110ecafbf4"},
     # registry-level (fixture/gate construction; the q204 class lives here)
     ("q95_bloom_dim_join", "out"): {"note": "not-a-fanout (one reference forces optimizedPlan under pinned runtime-filter confs — memoized by QueryExecution — the other is the return; the dim's two scans are the bloom creation + join build, by design)", "fn_sha": "206a4389621b"},
 }
