@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hbase_bulkload_service_spark import registry  # noqa: E402
+from hbase_bulkload_service_spark import obs, registry  # noqa: E402
 from hbase_bulkload_service_spark.session import get_spark  # noqa: E402
 
 # Harness-bound gates excluded from the DEFAULT bench run (set
@@ -39,7 +39,7 @@ from hbase_bulkload_service_spark.session import get_spark  # noqa: E402
 # full sweep passed ~630 s on this VM — past plausible driver budgets —
 # so the cut list is explicit and shipped in the output JSON
 # ("skipped"), never silent. Every skipped query still has its wall
-# recorded per-round in STAGE_AUDIT (which always runs the full
+# recorded per-round by tools/profile_stages.py (which runs the full
 # registry) and its correctness driven via selfcheck + the driver
 # window.
 BENCH_SKIP = {
@@ -93,50 +93,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM + parquet footer caches with the cheapest query
-    registry.QUERIES["q04_point_get"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # warm the Python workers + Arrow path so the first pandas-UDF query
-    # isn't charged worker-spawn cost
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    ident = pandas_udf(lambda s: s, "long")
-    spark.range(0, 100000).repartition(int(cpus)).select(
-        ident(F.col("id")).alias("x")
-    ).write.format("noop").mode("overwrite").save()
-    # materialize every table once (all columns) so no query is charged
-    # first-scan footer/decode costs
-    from hbase_bulkload_service_spark.sources.tables import TABLES, load
-
-    for t in TABLES:
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-
-    # warm the Python DSv2 source (hfilescan) the same way as the pandas
-    # path: its first use pays one-time Python planner + reader spawn
-    # (~2-3 s) that is session overhead, not query cost — q56 measures
-    # the pipeline, not the interpreter boot
-    import shutil
-    import tempfile
-
-    from hbase_bulkload_service_spark.sources import hfile, hfilescan
-
-    wd = tempfile.mkdtemp(prefix="benchwarm")
-    try:
-        tiny = spark.createDataFrame(
-            [(0, b"\x00k", "006b", b"t", b"\x00\x01", "0001", b"\x00" * 8)],
-            "bucket int, key binary, key_hex string, family binary, "
-            "qualifier binary, qualifier_hex string, value binary",
-        )
-        hfile.write_hfiles(tiny.coalesce(1), wd, num_partitions=1)
-        hfilescan.register(spark)
-        spark.read.format("hfilescan").option("path", wd).load().write.format(
-            "noop"
-        ).mode("overwrite").save()
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
+    obs.warm_up(spark, sf_dir)
 
     run_all = os.environ.get("SPARK_GRAFT_BENCH_ALL") == "1"
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1"))
@@ -183,19 +140,11 @@ def main() -> None:
         for name in sorted(registry.QUERIES):
             if name in skipped:
                 continue
-            t0 = time.perf_counter()
-            df = registry.QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            sec = round(time.perf_counter() - t0, 3)
-            samples.setdefault(name, []).append(sec)
+            rec = obs.run_query(spark, name, sf_dir)
+            if rec["err"]:
+                raise RuntimeError(f"{name}: {rec['err']}")
+            samples.setdefault(name, []).append(rec["wall_s"])
             times[name] = min(samples[name])
-            # operators persist() intermediates (LSH signatures, gram
-            # index); drop them so later queries aren't measured under
-            # cache pressure
-            from hbase_bulkload_service_spark import cachereg
-
-            cachereg.release_all()
-            spark.catalog.clearCache()
 
     emit(truncated=False)
 

@@ -15,6 +15,7 @@ package re-expresses its full query + data-processing surface Spark-first:
 - ``sources``    — cell-table (long-form KV) source/sink + HFile-layout writer.
 - ``plans``      — job orchestration (queue, time slicing).
 - ``streaming``  — Structured Streaming variants (windowed rollup, dedup).
+- ``obs``        — one query-run path and its Spark counters (bench, tools).
 """
 
 __version__ = "0.1.0"

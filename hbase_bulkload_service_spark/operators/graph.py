@@ -11,35 +11,34 @@ star-shaped false-positive hubs).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Node-count ceiling under which the iterative operators statically
-#: broadcast-hint the |V|-row side of their per-round joins (guide §3.1:
-#: hint when YOU know a side is small — the planner's estimate for a
-#: post-agg localCheckpoint is unreliable). At two longs per row, 1M rows
-#: is ≈ the session's own 64 MB autoBroadcastJoinThreshold. Without the
-#: hint AQE still ends up broadcasting at bench scale, but only AFTER
-#: planning and materializing BOTH sides' shuffle-map stages every round
-#: — measured 5 AQE jobs per pagerank round (31 jobs / 3.3 s of
-#: inter-job driver gap per q114 run at sf0.1). Above the ceiling the
-#: plan is byte-identical to the unhinted one (cluster posture: a graph
-#: with |V| past broadcast keeps the exchange). Env-parameterized like
-#: SPARK_GRAFT_SHUFFLE_PARTITIONS so a cluster deployment can tune it
-#: without a code change; read per call, so a value set after import
-#: takes effect.
-_DEFAULT_BROADCAST_NODES = 1_000_000
+#: Bytes per row of a |V|-row side: two longs (node, value).
+_NODE_ROW_BYTES = 16
 
 
 def _maybe_broadcast(df: DataFrame, n_nodes: int) -> DataFrame:
-    ceiling = int(
-        os.environ.get(
-            "SPARK_GRAFT_GRAPH_BROADCAST_NODES", _DEFAULT_BROADCAST_NODES
-        )
+    """Broadcast-hint the |V|-row side of an iterative operator's per-round
+    join when its ``n_nodes`` two-long rows fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (guide §3.1: hint when YOU
+    know a side is small — the planner's estimate for a post-agg
+    localCheckpoint is unreliable). Without the hint AQE still ends up
+    broadcasting at bench scale, but only AFTER planning and
+    materializing BOTH sides' shuffle-map stages every round — measured
+    5 AQE jobs per pagerank round (31 jobs / 3.3 s of inter-job driver
+    gap per q114 run at sf0.1). Above the ceiling the plan is
+    byte-identical to the unhinted one (cluster posture: a graph with |V|
+    past broadcast keeps the exchange); a threshold <= 0 turns the hint
+    off, as it turns broadcast joins off. The threshold is read per call
+    as the parsed long, so a size string like ``10MB`` counts in bytes."""
+    threshold = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf().autoBroadcastJoinThreshold()
     )
-    return F.broadcast(df) if n_nodes <= ceiling else df
+    if threshold > 0 and n_nodes * _NODE_ROW_BYTES <= threshold:
+        return F.broadcast(df)
+    return df
 
 
 def degrees(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:

@@ -271,7 +271,7 @@ def build_manifest(path: str) -> dict:
     return _manifest(_file_records(path))
 
 
-def validate_layout(path: str, rollup: bool = False, deep: bool = True):
+def validate_layout(path: str, rollup: bool = False):
     """No-op `load` stub (H7): assert what LoadIncrementalHFiles needs —
     regions non-overlapping in key space, each file's buckets in its
     region, ≤2048 files per region — from file metadata, as H7 reads each
@@ -283,24 +283,23 @@ def validate_layout(path: str, rollup: bool = False, deep: bool = True):
     (a dir without one is refused); its file footers are checked and the
     manifest they give must equal the written one, which is returned. An
     HFile v3 dir (``sources/hfilev3.py``) gets the same checks over its
-    per-file manifest (:func:`validate_manifest_layout`); ``deep=True``
-    also parses every file back in the driver (adoption/test scale only).
-    It returns the check summary."""
+    per-file manifest (:func:`validate_manifest_layout`), then every file
+    is parsed back in the driver (adoption/test scale only) and must agree
+    with its manifest entry. It returns the check summary."""
     if any(n.endswith(".hfile") for n in os.listdir(path)):
-        summary = validate_manifest_layout(path, rollup)
-        if deep:
-            from hbase_bulkload_service_spark.sources import hfilev3
+        from hbase_bulkload_service_spark.sources import hfilev3
 
-            with open(os.path.join(path, "_manifest.json")) as f:
-                for m in json.load(f):
-                    _, meta = hfilev3.read_hfile_v3(os.path.join(path, m["file"]))
-                    if (meta["rows"], meta["min_key_hex"], meta["max_key_hex"]) != (
-                        m["rows"], m["min_key_hex"], m["max_key_hex"]
-                    ):
-                        raise AssertionError(f"{m['file']}: manifest/meta disagree")
-            summary["per_record_validated"] = True
-            summary["pending"] = None
-            summary["checked"].append("hfilev3-per-file-parse")
+        summary = validate_manifest_layout(path, rollup)
+        with open(os.path.join(path, "_manifest.json")) as f:
+            for m in json.load(f):
+                _, meta = hfilev3.read_hfile_v3(os.path.join(path, m["file"]))
+                if (meta["rows"], meta["min_key_hex"], meta["max_key_hex"]) != (
+                    m["rows"], m["min_key_hex"], m["max_key_hex"]
+                ):
+                    raise AssertionError(f"{m['file']}: manifest/meta disagree")
+        summary["per_record_validated"] = True
+        summary["pending"] = None
+        summary["checked"].append("hfilev3-per-file-parse")
         return summary
     mpath = os.path.join(path, "_manifest.json")
     if not os.path.exists(mpath):

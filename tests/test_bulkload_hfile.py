@@ -117,13 +117,12 @@ def test_v3_wrong_region_mapping_is_caught(spark, kv, tmp_path):
         m["region"] = m["region"] // 8  # monotone but wrong under rollup=False
     hfile.write_manifest(path, manifest)
     with pytest.raises(AssertionError, match="not in region"):
-        hfile.validate_layout(path, rollup=False, deep=False)
+        hfile.validate_layout(path, rollup=False)
 
 
 def test_v3_wrong_region_mapping_is_caught_deep(spark, kv, tmp_path):
-    """The same wrong-but-monotone region mapping under the default
-    (deep) validation, which also parses every file back, and the
-    writer's default partitioning."""
+    """The same wrong-but-monotone region mapping under the writer's
+    default partitioning."""
     from hbase_bulkload_service_spark.sources import hfilev3
 
     path = str(tmp_path / "v3_badregion_deep")

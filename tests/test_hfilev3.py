@@ -634,7 +634,7 @@ def test_rolling_writer_full_ddl_config_and_validate(spark, tmp_path):
     from hbase_bulkload_service_spark.sources import hfile
 
     # validate_layout's real-HFile dispatch must parse DIFF+bloom files
-    summary = hfile.validate_layout(d, rollup=False, deep=True)
+    summary = hfile.validate_layout(d, rollup=False)
     assert summary["per_record_validated"]
     back = h3.read_hfilev3_dir(spark, d)
     got = {

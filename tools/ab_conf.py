@@ -6,8 +6,8 @@ Usage::
         --queries q01_pricing_summary,q02_revenue_by_nation \
         [--runs 2] [--sf /root/testdata/sf0.1]
 
-Methodology mirrors bench.py (noop sink, cachereg release + clearCache
-between queries, per-query MIN across runs) but interleaves A (session
+Methodology is bench.py's (``obs.warm_up``, then ``obs.run_query`` per
+query, per-query MIN across runs) but interleaves A (session
 defaults) and B (defaults + the given confs) inside ONE session so both
 arms see the same JVM/VM state. Prints per-query A/B mins and the total.
 Only confs that are runtime-settable (planner/AQE/arrow) are valid here —
@@ -21,39 +21,18 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hbase_bulkload_service_spark import cachereg, registry  # noqa: E402
+from hbase_bulkload_service_spark import obs  # noqa: E402
 from hbase_bulkload_service_spark.session import get_spark  # noqa: E402
 
 
 def _run_one(spark, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = registry.QUERIES[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    sec = time.perf_counter() - t0
-    cachereg.release_all()
-    spark.catalog.clearCache()
-    return round(sec, 3)
-
-
-def _warm(spark, sf_dir: str) -> None:
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    registry.QUERIES["q04_point_get"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    ident = pandas_udf(lambda s: s, "long")
-    spark.range(0, 100000).repartition(8).select(
-        ident(F.col("id")).alias("x")
-    ).write.format("noop").mode("overwrite").save()
-    from hbase_bulkload_service_spark.sources.tables import TABLES, load
-
-    for t in TABLES:
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
+    rec = obs.run_query(spark, name, sf_dir)
+    if rec["err"]:
+        raise RuntimeError(f"{name}: {rec['err']}")
+    return rec["wall_s"]
 
 
 def main() -> None:
@@ -74,14 +53,14 @@ def main() -> None:
     if args.fresh_session:
         spark = get_spark(app_name="ab_conf_A")
         spark.sparkContext.setLogLevel("ERROR")
-        _warm(spark, args.sf)
+        obs.warm_up(spark, args.sf)
         for _ in range(args.runs):
             for n in names:
                 a[n].append(_run_one(spark, n, args.sf))
         spark.stop()
         spark = get_spark(app_name="ab_conf_B", **confs)
         spark.sparkContext.setLogLevel("ERROR")
-        _warm(spark, args.sf)
+        obs.warm_up(spark, args.sf)
         for _ in range(args.runs):
             for n in names:
                 b[n].append(_run_one(spark, n, args.sf))
@@ -89,7 +68,7 @@ def main() -> None:
     else:
         spark = get_spark(app_name="ab_conf")
         spark.sparkContext.setLogLevel("ERROR")
-        _warm(spark, args.sf)
+        obs.warm_up(spark, args.sf)
         base = {k: spark.conf.get(k, None) for k in confs}
         for _ in range(args.runs):
             for n in names:

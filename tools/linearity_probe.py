@@ -23,10 +23,11 @@ import os
 import shutil
 import sys
 import tempfile
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from hbase_bulkload_service_spark import obs  # noqa: E402
+from hbase_bulkload_service_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -187,33 +188,18 @@ PROBE_QUERIES_PERTURBED = [
 # SCALE.md and q122/q124's gates.
 
 
-def _api(spark, path):
-    base = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{base}/api/v1/{path}") as r:
-        return json.load(r)
-
-
-def _group_metrics(spark):
-    app = _api(spark, "applications")[0]["id"]
-    jobs = _api(spark, f"applications/{app}/jobs?status=succeeded")
-    stages = {
-        s["stageId"]: s
-        for s in _api(spark, f"applications/{app}/stages?status=COMPLETE")
+def _run(spark, name: str, sf_dir: str, group: str) -> dict:
+    """Wall (s) and input/shuffle MB of one query run; a failed run
+    keeps its error."""
+    rec = obs.run_query(spark, name, sf_dir, group=group)
+    out = {
+        k.replace("_bytes", "_mb"): round(rec[k] / 1e6, 2)
+        for k in ("shuffle_write_bytes", "shuffle_read_bytes", "input_bytes")
     }
-    out: dict[str, dict] = {}
-    for j in jobs:
-        g = j.get("jobGroup") or "ungrouped"
-        p = out.setdefault(
-            g, {"shuffle_write_mb": 0.0, "shuffle_read_mb": 0.0, "input_mb": 0.0}
-        )
-        for sid in j["stageIds"]:
-            s = stages.pop(sid, None)
-            if s is None:
-                continue
-            p["shuffle_write_mb"] += s["shuffleWriteBytes"] / 1e6
-            p["shuffle_read_mb"] += s["shuffleReadBytes"] / 1e6
-            p["input_mb"] += s["inputBytes"] / 1e6
-    return {g: {k: round(v, 2) for k, v in p.items()} for g, p in out.items()}
+    out["wall_s"] = rec["wall_s"]
+    if rec["err"]:
+        out["err"] = rec["err"]
+    return out
 
 
 def _amplify(spark, work: str, amp: int) -> str:
@@ -360,36 +346,22 @@ def main() -> int:
     # optional comma-separated query filter (argv[3]) for fast iteration
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 
-    from pyspark.sql import SparkSession
-
-    from hbase_bulkload_service_spark import registry
-
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("linearity-probe")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        # 20 queries x 2 scales in ONE session: localCheckpoint blocks
-        # accumulate until the ContextCleaner reclaims them, and the 1g
-        # default heap OOMs around stage ~550 at 10x scale
-        .config("spark.driver.memory", "12g")
-        # VERDICT r05 item 4: the default 1000-stage UI retention evicts
-        # early queries' stages before the end-of-run metrics collection,
-        # leaving shuffle_ratio null exactly for the q74-q100 block —
-        # retain enough for a full 64-query x 2-scale sweep
-        .config("spark.ui.retainedStages", "40000")
-        .config("spark.ui.retainedJobs", "20000")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="linearity-probe",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        **{
+            "spark.sql.shuffle.partitions": "64",
+            # 20 queries x 2 scales in ONE session: localCheckpoint blocks
+            # accumulate until the ContextCleaner reclaims them, and the
+            # 1g default heap OOMs around stage ~550 at 10x scale
+            "spark.driver.memory": "12g",
+        },
     )
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
+    spark.sparkContext.setLogLevel("ERROR")
 
     work = tempfile.mkdtemp(prefix="linprobe")
     results: dict = {"amplification": amp, "queries": {}}
     try:
-        sc.setJobGroup("amplify", "build amplified inputs")
         amp_dir = _amplify(spark, work, amp)
         pert1_dir = _amplify_perturbed(spark, work, 1)
         pertk_dir = _amplify_perturbed(spark, work, amp)
@@ -399,40 +371,21 @@ def main() -> int:
         ]
         if only is not None:
             plan = [p for p in plan if p[0] in only]
-        from hbase_bulkload_service_spark import cachereg
 
         for name, d1, dk in plan:
-            fn = registry.QUERIES[name]
-            walls = {}
+            # run_query releases cachereg-registered frames BEFORE each
+            # run: a PRIOR query's/scale's persists otherwise contaminate
+            # this run's baseline (q105's r05 x1 read ~0 shuffle because
+            # the x1 corpus shingle table was still persisted)
+            rec = {"perturbed": name in PROBE_QUERIES_PERTURBED}
             for tag, d in (("x1", d1), (f"x{amp}", dk)):
-                # release BEFORE each run too: cachereg-registered frames
-                # from a PRIOR query/scale otherwise contaminate this
-                # run's baseline (q105's r05 x1 read ~0 shuffle because
-                # the x1 corpus shingle table was still persisted —
-                # VERDICT r05 item 4)
-                cachereg.release_all()
-                spark.catalog.clearCache()
-                sc.setJobGroup(f"{name}:{tag}", name)
-                t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                walls[tag] = round(time.time() - t0, 2)
-                cachereg.release_all()
-                spark.catalog.clearCache()  # drop leftover persists per run
-            results["queries"][name] = {
-                "wall_s": walls,
-                "perturbed": name in PROBE_QUERIES_PERTURBED,
-            }
-
-        groups = _group_metrics(spark)
-        for name, rec in results["queries"].items():
-            for tag in ("x1", f"x{amp}"):
-                g = groups.get(f"{name}:{tag}", {})
-                rec[tag] = g
-            w1, wk = rec["wall_s"]["x1"], rec["wall_s"][f"x{amp}"]
-            s1 = rec["x1"].get("shuffle_write_mb", 0.0)
-            sk = rec[f"x{amp}"].get("shuffle_write_mb", 0.0)
+                rec[tag] = _run(spark, name, d, f"{name}:{tag}")
+            w1, wk = rec["x1"]["wall_s"], rec[f"x{amp}"]["wall_s"]
+            s1 = rec["x1"]["shuffle_write_mb"]
+            sk = rec[f"x{amp}"]["shuffle_write_mb"]
             rec["wall_ratio"] = round(wk / w1, 2) if w1 else None
             rec["shuffle_ratio"] = round(sk / s1, 2) if s1 else None
+            results["queries"][name] = rec
 
         # Baseline-size floor (round-5, VERDICT r04 item 8): a small x1
         # denominator can fake a superlinear reading (q149 in r03 read
@@ -448,26 +401,15 @@ def main() -> int:
             if (r.get("shuffle_ratio") or 0) > 1.5 * amp and amp > 3
         ]
         if flagged:
-            sc.setJobGroup("amplify-esc", "build 3x escalation inputs")
             amp3 = _amplify(spark, work, 3)
             pert3 = _amplify_perturbed(spark, work, 3)
             for name, rec in flagged:
                 d3 = pert3 if rec["perturbed"] else amp3
-                cachereg.release_all()
-                spark.catalog.clearCache()
-                sc.setJobGroup(f"{name}:x3esc", name)
-                t0 = time.time()
-                registry.QUERIES[name](spark, d3).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                w3 = round(time.time() - t0, 2)
-                cachereg.release_all()
-                spark.catalog.clearCache()
-                g3 = _group_metrics(spark).get(f"{name}:x3esc", {})
-                s3 = g3.get("shuffle_write_mb", 0.0)
-                sk = rec[f"x{amp}"].get("shuffle_write_mb", 0.0)
+                x3 = _run(spark, name, d3, f"{name}:x3esc")
+                s3 = x3["shuffle_write_mb"]
+                sk = rec[f"x{amp}"]["shuffle_write_mb"]
                 rec["escalation"] = {
-                    "x3": {**g3, "wall_s": w3},
+                    "x3": x3,
                     "shuffle_ratio_3_to_k": (
                         round(sk / s3, 2) if s3 else None
                     ),

@@ -1,12 +1,13 @@
-"""Round-3 scale probe (VERDICT item 6): run the two wave-3 flagships —
-the q56 bulkload pipeline and the q59 zero-Exchange bucketed join — at an
-sf1-equivalent scale (10× amplification of sf0.1, built in /tmp; the
-read-only testdata tree is never touched) and record per-stage shuffle
-sizes, proving the range-exchange and bucketed-join claims hold beyond
-sf0.1.
+"""Scale probe: run the two wave-3 flagships — the q56 bulkload pipeline
+and the q59 zero-Exchange bucketed join — at an sf1-equivalent scale
+(10× amplification of sf0.1, built in a temp dir; the read-only testdata tree
+is never touched) and record per-phase shuffle sizes, proving the
+range-exchange and bucketed-join claims hold beyond sf0.1.
 
-Metrics come from Spark's own REST status API (/api/v1) — per-stage
-shuffle read/write bytes, grouped into pipeline phases via job groups.
+The bulkload phase runs q56's own pipeline (``registry_ext.flagship_kv``
+into ``hfile.write_hfiles(..., rollup=True)``) over amplified events.
+Metrics are ``obs.group_record`` counters per job group (one group per
+phase).
 
 Usage: python tools/scale_probe.py [amplification] [out_json]
 """
@@ -19,66 +20,45 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from hbase_bulkload_service_spark import obs  # noqa: E402
+from hbase_bulkload_service_spark.session import get_spark  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
+PHASES = ("amplify", "bulkload", "bucket_write", "bucket_join")
 
 
-def _api(spark, path):
-    base = spark.sparkContext.uiWebUrl
-    with urllib.request.urlopen(f"{base}/api/v1/{path}") as r:
-        return json.load(r)
-
-
-def _phase_metrics(spark):
-    """shuffle bytes + task time per job group, from the status API."""
-    app = _api(spark, "applications")[0]["id"]
-    jobs = _api(spark, f"applications/{app}/jobs?status=succeeded")
-    stages = {
-        s["stageId"]: s
-        for s in _api(spark, f"applications/{app}/stages?status=COMPLETE")
-    }
-    phases: dict[str, dict] = {}
-    for j in jobs:
-        g = j.get("jobGroup") or "ungrouped"
-        p = phases.setdefault(
-            g, {"shuffle_write_mb": 0.0, "shuffle_read_mb": 0.0,
-                "input_mb": 0.0, "output_mb": 0.0, "n_stages": 0}
-        )
-        for sid in j["stageIds"]:
-            s = stages.pop(sid, None)  # pop: a stage counts once
-            if s is None:
-                continue
-            p["n_stages"] += 1
-            p["shuffle_write_mb"] += s["shuffleWriteBytes"] / 1e6
-            p["shuffle_read_mb"] += s["shuffleReadBytes"] / 1e6
-            p["input_mb"] += s["inputBytes"] / 1e6
-            p["output_mb"] += s["outputBytes"] / 1e6
-    return {
-        g: {k: (round(v, 1) if isinstance(v, float) else v) for k, v in p.items()}
-        for g, p in phases.items()
-    }
+def _phase_metrics(spark) -> dict:
+    """Stage count and input/shuffle/output MB per phase."""
+    out = {}
+    for g in PHASES:
+        rec = obs.group_record(spark, g)
+        out[g] = {
+            k.replace("_bytes", "_mb"): round(rec[k] / 1e6, 1)
+            for k in ("shuffle_write_bytes", "shuffle_read_bytes",
+                      "input_bytes", "output_bytes")
+        }
+        out[g]["n_stages"] = rec["stages"]
+    return out
 
 
 def main() -> int:
     amp = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/scale_probe.json"
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from hbase_bulkload_service_spark.operators import maintenance as mnt
-    from hbase_bulkload_service_spark.operators import tsdb
+    from hbase_bulkload_service_spark.registry_ext import flagship_kv
     from hbase_bulkload_service_spark.sources import hfile
-    from hbase_bulkload_service_spark.sources.tables import load, load_events
+    from hbase_bulkload_service_spark.sources.tables import load
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("scale-probe")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "64")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="scale-probe",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        **{"spark.sql.shuffle.partitions": "64"},
     )
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
@@ -86,40 +66,30 @@ def main() -> int:
 
     work = tempfile.mkdtemp(prefix="scale_probe")
     try:
-        # ---- amplify events ×amp (shifted ids keep key cardinality real)
+        # ---- amplify events ×amp into a scratch sf dir (shifted ids keep
+        # key cardinality real; the source's ts column is kept as is)
         sc.setJobGroup("amplify", "build sf1-equivalent inputs")
-        ev = load_events(spark, SF_DIR, spread=True)
+        ev = load(spark, SF_DIR, "events")
         n_ev = ev.count()
         reps = spark.range(amp).select(F.col("id").cast("int").alias("rep"))
-        ev_amp_path = os.path.join(work, "events_amp")
+        shifts = {"event_id": n_ev, "user_id": 100000}
+        amp_dir = os.path.join(work, "sf_amp")
         (
             ev.crossJoin(reps)
-            .select(
-                (F.col("event_id") + F.col("rep") * F.lit(n_ev)).alias("event_id"),
-                (F.col("user_id") + F.col("rep") * F.lit(100000)).alias("user_id"),
-                "event_type",
-                "ts_ms",  # load_events' normalized epoch-millis column
-                "value",
-            )
-            .write.mode("overwrite").parquet(ev_amp_path)
+            .select(*[
+                (F.col(c) + F.col("rep") * F.lit(shifts[c])).alias(c)
+                if c in shifts else F.col(c)
+                for c in ev.columns
+            ])
+            .write.mode("overwrite").parquet(os.path.join(amp_dir, "events.parquet"))
         )
-        ev_amp = spark.read.parquet(ev_amp_path)
-        results["events_rows"] = ev_amp.count()
+        results["events_rows"] = n_ev * amp
 
-        # ---- q56 pipeline phases at amplified scale
+        # ---- q56 pipeline at amplified scale
         t0 = time.time()
-        sc.setJobGroup("bulkload", "derive+dedup+salt+range-sort+write")
-        cells = tsdb.derive_tsdb_cells(ev_amp)
-        c1 = cells.groupBy("rowkey", "qualifier", "version_ts").agg(
-            F.max("dvalue").alias("dvalue"),
-            F.max("metric_id").alias("metric_id"),
-            F.max("ts_hour").alias("ts_hour"),
-            F.max("tags").alias("tags"),
-        )
-        c1 = c1.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-        kv = tsdb.bulkload_kv(c1)
+        sc.setJobGroup("bulkload", "derive+salt+dedup+range-sort+write")
         sink = os.path.join(work, "hfiles")
-        hfile.write_hfiles(kv, sink, rollup=True)
+        hfile.write_hfiles(flagship_kv(spark, amp_dir), sink, rollup=True)
         results["bulkload_wall_s"] = round(time.time() - t0, 1)
 
         regions = hfile.validate_layout(sink, rollup=True)["regions"]  # non-overlap proof
