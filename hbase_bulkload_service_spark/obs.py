@@ -22,7 +22,7 @@ from hbase_bulkload_service_spark import cachereg, registry
 #: Summed counters of a record; ``cpu_ms`` is executor CPU time.
 COUNTERS = (
     "jobs", "stages", "tasks", "run_ms", "cpu_ms", "input_bytes",
-    "shuffle_read_bytes", "shuffle_write_bytes", "output_bytes",
+    "input_records", "shuffle_read_bytes", "shuffle_write_bytes", "output_bytes",
 )
 
 
@@ -66,6 +66,7 @@ def group_record(spark: SparkSession, *groups: str) -> dict:
                 "run_ms": st.executorRunTime(),
                 "cpu_ms": round(st.executorCpuTime() / 1e6),
                 "input_bytes": st.inputBytes(),
+                "input_records": st.inputRecords(),
                 "shuffle_read_bytes": st.shuffleReadBytes(),
                 "shuffle_write_bytes": st.shuffleWriteBytes(),
                 "output_bytes": st.outputBytes(),

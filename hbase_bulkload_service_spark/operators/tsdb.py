@@ -27,8 +27,19 @@ unchanged.
 
 from __future__ import annotations
 
+import datetime
+import threading
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from hbase_bulkload_service_spark.functions.codec import (
     encode_double_be,
@@ -40,28 +51,84 @@ from hbase_bulkload_service_spark.functions.hashes import (
     int_byte_ints,
     salt_bucket,
 )
+from hbase_bulkload_service_spark.session import local_frame
+from hbase_bulkload_service_spark.sources.tables import TS_LINEAGE, derived_from_ts
 
 DEFAULT_BUCKET_COUNT = 512  # configuration/HBaseProperties.java:16
 DEFAULT_FAMILY = b"t"  # manager/HBaseManager.java:372 (column family "t")
 HOUR_SEC = 3600
 HOUR_MS = 3600 * 1000
+_EPOCH = datetime.datetime(1970, 1, 1)
 
 
 # ---------------------------------------------------------------------------
 # fixture derivation: events → long-form OpenTSDB cells (FIXTURES.md §2)
 # ---------------------------------------------------------------------------
 
+#: Metric dictionary rows ``(event_type, metric_id)`` by source
+#: (:func:`_source_key`), oldest first; guarded by ``_DICTIONARIES_LOCK``.
+_DICTIONARIES: dict[tuple, tuple[tuple, ...]] = {}
+_DICTIONARIES_MAX = 8
+_DICTIONARIES_LOCK = threading.Lock()
+
+
+def _source_key(events: DataFrame) -> tuple | None:
+    """What a dictionary of ``events`` depends on: the analyzed plan's
+    semantic hash (so a filtered frame has its own key) plus the size and
+    mtime of every input file (so a rewritten source has a new one).
+    ``None`` for a frame that reads no files."""
+    files = sorted(events.inputFiles())
+    if not files:
+        return None
+    jvm = events.sparkSession._jvm
+    conf = events.sparkSession._jsc.hadoopConfiguration()
+    stamps = []
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        stamps.append((f, st.getLen(), st.getModificationTime()))
+    return events.semanticHash(), tuple(stamps)
+
+
+def _remember(key: tuple, rows: tuple[tuple, ...]) -> None:
+    """Store ``rows`` under ``key``, dropping the oldest entry when full."""
+    with _DICTIONARIES_LOCK:
+        _DICTIONARIES.pop(key, None)
+        if len(_DICTIONARIES) >= _DICTIONARIES_MAX:
+            _DICTIONARIES.pop(next(iter(_DICTIONARIES)))
+        _DICTIONARIES[key] = rows
+
+
 def metric_dictionary(events: DataFrame) -> DataFrame:
     """Dense ids for event_type, deterministic (ordered by name).
+
+    The dictionary is whole-source, so ids stay stable across time
+    windows, like the reference's tsdb-uid table. A file-backed source's
+    dictionary is computed once per source version (:func:`_source_key`)
+    and served after that as a driver-local relation, with no scan.
+    Frames that read no files compute it every time.
 
     Scale note: the dictionary is tiny (distinct metric names); the ranking
     window runs over a handful of rows and the result broadcast-joins back.
     """
-    w = Window.orderBy("event_type")
-    return (
-        events.select("event_type").distinct()
-        .withColumn("metric_id", (F.row_number().over(w) - 1).cast("int"))
-    )
+    key = _source_key(events)
+    with _DICTIONARIES_LOCK:
+        rows = _DICTIONARIES.get(key) if key is not None else None
+    if rows is None:
+        w = Window.orderBy("event_type")
+        ranked = (
+            events.select("event_type").distinct()
+            .withColumn("metric_id", (F.row_number().over(w) - 1).cast("int"))
+        )
+        if key is None:
+            return ranked
+        rows = tuple(tuple(r) for r in ranked.collect())
+        _remember(key, rows)
+    schema = StructType([
+        StructField("event_type", events.schema["event_type"].dataType),
+        StructField("metric_id", IntegerType(), nullable=False),
+    ])
+    return local_frame(events.sparkSession, rows, schema)
 
 
 def derive_tsdb_cells(events: DataFrame, dup_fraction_mod: int = 20) -> DataFrame:
@@ -73,41 +140,54 @@ def derive_tsdb_cells(events: DataFrame, dup_fraction_mod: int = 20) -> DataFram
     (TsdbBulkload.java:84-113), qualifier is the 2-byte offset-in-hour,
     value is the big-endian double. Every 1/dup_fraction_mod event gets a
     synthetic newer duplicate version (value*2, version_ts+1000) to
-    exercise latest-version dedup (D3).
+    exercise latest-version dedup (D3); both versions come from one scan
+    (an ``explode``). The raw ``ts`` is passed through, and ``ts_sec``
+    keeps the :data:`TS_LINEAGE` mark when ``ts_ms`` has it, so
+    :func:`hour_range_filter` can bound the scan.
     """
     dict_df = F.broadcast(metric_dictionary(events))
-    base = (
-        events.join(dict_df, "event_type")
-        .withColumn("ts_sec", F.expr("ts_ms div 1000"))
-        .withColumn("ts_hour", F.col("ts_sec") - F.col("ts_sec") % HOUR_SEC)
-        .withColumn("tags", F.concat(F.lit("user="), F.col("user_id")))
-        .withColumn("offset_sec", (F.col("ts_sec") - F.col("ts_hour")).cast("int"))
-        .withColumn("version_ts", F.col("ts_ms"))
+    raw_ts = ["ts"] if "ts" in events.columns else []
+    ts_sec = F.expr("ts_ms div 1000").alias(
+        "ts_sec",
+        metadata=(
+            {TS_LINEAGE: "ts_sec"}
+            if derived_from_ts(events, "ts_ms", "ts_ms")
+            else {}
+        ),
     )
-    dup = (
-        base.filter(F.col("event_id") % dup_fraction_mod == 0)
-        .withColumn("version_ts", F.col("version_ts") + 1000)
-        .withColumn("value", F.col("value") * 2)
-    )
-    cells = base.unionByName(dup).select(
+    versions = F.when(
+        F.col("event_id") % dup_fraction_mod == 0, F.array(F.lit(0), F.lit(1))
+    ).otherwise(F.array(F.lit(0)))
+    base = events.join(dict_df, "event_type").select(
         "event_id",
         "metric_id",
-        "ts_hour",
+        ts_sec,
+        F.concat(F.lit("user="), F.col("user_id")).alias("tags"),
+        "ts_ms",
+        "value",
+        *raw_ts,
+        F.explode(versions).alias("version"),
+    )
+    ts_hour = F.col("ts_sec") - F.col("ts_sec") % HOUR_SEC
+    offset_sec = (F.col("ts_sec") % HOUR_SEC).cast("int")
+    dvalue = F.when(F.col("version") == 1, F.col("value") * 2).otherwise(F.col("value"))
+    return base.select(
+        "event_id",
+        "metric_id",
+        ts_hour.alias("ts_hour"),
         "ts_sec",
         "tags",
-        "offset_sec",
-        "version_ts",
-        F.col("value").alias("dvalue"),
-    )
-    return cells.withColumn(
-        "rowkey",
+        offset_sec.alias("offset_sec"),
+        (F.col("ts_ms") + 1000 * F.col("version")).alias("version_ts"),
+        dvalue.alias("dvalue"),
+        *raw_ts,
         F.concat(
             encode_int_be(F.col("metric_id"), 3),
-            encode_int_be(F.col("ts_hour"), 4),
+            encode_int_be(ts_hour, 4),
             F.encode(F.col("tags"), "UTF-8"),
-        ),
-    ).withColumn("qualifier", encode_int_be(F.col("offset_sec"), 2)).withColumn(
-        "value", encode_double_be(F.col("dvalue"))
+        ).alias("rowkey"),
+        encode_int_be(offset_sec, 2).alias("qualifier"),
+        encode_double_be(dvalue).alias("value"),
     )
 
 
@@ -115,16 +195,71 @@ def derive_tsdb_cells(events: DataFrame, dup_fraction_mod: int = 20) -> DataFram
 # B1 — whole-hour time-range filter (TsdbScanner.java:16-57)
 # ---------------------------------------------------------------------------
 
+#: Widening of the raw-``ts`` bound on each side of the hour window. A kept
+#: row's ``ts_ms`` lies less than an hour and a second from its hour's
+#: start (``div`` and ``%`` truncate toward zero, at the second and at the
+#: hour), so this bound is a superset of the window for every ``ts`` type.
+_BOUND_PAD_MS = HOUR_MS + 60_000
+
+
+def _ts_literal(dt, ms: int) -> Column | None:
+    """A literal of ``ts``'s type at epoch millis ``ms``, or None when that
+    type cannot hold it."""
+    if isinstance(dt, LongType):  # nanos read as long
+        nanos = ms * 1_000_000
+        return F.lit(nanos) if -(2**63) <= nanos < 2**63 else None
+    try:
+        wall = (_EPOCH + datetime.timedelta(milliseconds=ms)).isoformat(" ")
+    except OverflowError:
+        return None
+    if isinstance(dt, TimestampNTZType):  # wall clock = UTC (load_events)
+        return F.expr(f"TIMESTAMP_NTZ '{wall}'")
+    if isinstance(dt, TimestampType):
+        return F.expr(f"TIMESTAMP '{wall}Z'")
+    return None
+
+
+def _raw_ts_bound(df: DataFrame, ts_sec_col: str, lo_ms: int, hi_ms: int) -> Column | None:
+    """``lo_ms <= ts < hi_ms`` on ``df``'s raw ``ts`` when ``ts_sec_col`` is
+    marked as derived from it and ``ts``'s type can hold both ends, else
+    None.
+
+    Spark 4.1 lists this bound in ``PushedFilters`` for all three types,
+    but prunes row groups only on a UTC-adjusted ``ts`` (LTZ). On a
+    TIMESTAMP(MICROS, isAdjustedToUTC=false) file (NTZ: the fixtures' and
+    the benchmark's type) and on nanos read as long it reads every row
+    group. Either way the bound is cheap to test and, placed first, spares
+    the rows outside it the hour expression.
+    """
+    if not derived_from_ts(df, ts_sec_col, "ts_sec"):
+        return None
+    dt = df.schema["ts"].dataType
+    lo, hi = _ts_literal(dt, lo_ms), _ts_literal(dt, hi_ms)
+    if lo is None or hi is None:
+        return None
+    return (F.col("ts") >= lo) & (F.col("ts") < hi)
+
+
 def hour_range_filter(df: DataFrame, start_ms: int, end_ms: int, ts_sec_col: str = "ts_sec") -> DataFrame:
     """Reference FuzzyRowFilter semantics: one pattern per whole hour in
     [floor_hour(start), floor_hour(end)) — rows match iff their hour bucket
     falls in that half-open hour range, regardless of sub-hour offsets
     (TsdbScanner.java:22-43; hours floored :55-57).
 
-    Pushes down to parquet as a simple range predicate on the hour column.
+    The exact test is an expression of ``ts_sec``, so parquet cannot prune
+    on it. When ``ts_sec_col`` is marked as derived from the frame's raw
+    ``ts`` (``load_events`` → ``derive_tsdb_cells``), a bound on ``ts``
+    about an hour wider than the window is filtered first: it reaches the
+    scan's ``PushedFilters``, and the exact test, which stays on top, runs
+    only on the rows inside it.
     """
     start_hour = (start_ms - start_ms % HOUR_MS) // 1000
     end_hour = (end_ms - end_ms % HOUR_MS) // 1000
+    bound = _raw_ts_bound(
+        df, ts_sec_col, start_hour * 1000 - _BOUND_PAD_MS, end_hour * 1000 + _BOUND_PAD_MS
+    )
+    if bound is not None:
+        df = df.filter(bound)
     hour = F.col(ts_sec_col) - F.col(ts_sec_col) % HOUR_SEC
     return df.filter((hour >= F.lit(start_hour)) & (hour < F.lit(end_hour)))
 

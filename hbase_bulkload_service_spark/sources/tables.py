@@ -27,10 +27,20 @@ TABLES = (
 )
 
 
+#: Column-metadata key that ties a column of a ``load_events`` frame to
+#: that frame's raw ``ts``: ``"ts"`` marks ``ts`` itself, ``"ts_ms"`` its
+#: epoch-millis derivation (``tsdb.derive_tsdb_cells`` adds ``"ts_sec"``).
+#: A column keeps its metadata only while it is passed through unchanged,
+#: so a recomputed, replaced or hand-built column carries no mark.
+TS_LINEAGE = "tsdb.ts_lineage"
+
+
 def load(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS) which the vectorized
-        # parquet reader rejects; read nanos as raw long instead.
+        # The fixtures and the benchmark's events files store ``ts`` as
+        # TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
+        # TIMESTAMP_NTZ. A file written with TIMESTAMP(NANOS) is rejected
+        # by the vectorized reader unless nanos are read as raw longs.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     return spread_scan(df) if spread else df
@@ -57,7 +67,10 @@ def spread_scan(df: DataFrame) -> DataFrame:
 
 def load_events(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
     """events with a normalized ``ts_ms`` epoch-millis column, robust to the
-    session's parquet timestamp representation (nanos-as-long, NTZ, LTZ)."""
+    session's parquet timestamp representation (nanos-as-long, NTZ, LTZ).
+
+    ``ts`` and ``ts_ms`` carry the :data:`TS_LINEAGE` mark, so a time filter
+    further down can also bound the raw ``ts`` the scan reads."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -69,7 +82,25 @@ def load_events(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataF
         ts_ms = F.expr("timestampdiff(MILLISECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
     else:
         ts_ms = F.unix_millis(F.col("ts"))
-    return df.withColumn("ts_ms", ts_ms)
+    return df.select(
+        *[
+            F.col(c).alias(c, metadata={TS_LINEAGE: "ts"}) if c == "ts" else c
+            for c in df.columns
+        ],
+        ts_ms.alias("ts_ms", metadata={TS_LINEAGE: "ts_ms"}),
+    )
+
+
+def derived_from_ts(df: DataFrame, col: str, step: str) -> bool:
+    """True when ``df[col]`` is marked as the ``step`` derivation of a raw
+    ``ts`` that ``df`` still holds, marked as such (:data:`TS_LINEAGE`)."""
+    fields = {f.name: f for f in df.schema.fields}
+    return (
+        col in fields
+        and "ts" in fields
+        and fields[col].metadata.get(TS_LINEAGE) == step
+        and fields["ts"].metadata.get(TS_LINEAGE) == "ts"
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

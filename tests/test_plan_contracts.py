@@ -568,3 +568,95 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# -- the service read: a raw-``ts`` bound ahead of the hour expression -----
+
+_WINDOW_DAY0_MS = 1704067200000  # 2024-01-01T00:00Z
+_DAY_MS = 86_400_000
+
+
+def _write_events(path, ts_type, n=4000, days=8, row_group_size=None):
+    """``n`` events evenly over ``days`` days from 2024-01-01, in time order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    step_ms = days * _DAY_MS // n
+    ms = [_WINDOW_DAY0_MS + i * step_ms for i in range(n)]
+    scale = 1_000_000 if ts_type.unit == "ns" else 1000
+    table = pa.table({
+        "event_id": pa.array(range(n), pa.int64()),
+        "ts": pa.array([m * scale for m in ms], ts_type),
+        "user_id": pa.array([i % 2 for i in range(n)], pa.int64()),
+        "event_type": ["view" if i % 3 else "click" for i in range(n)],
+        "value": pa.array([float(i % 97) for i in range(n)]),
+        "props": ["{}"] * n,
+    })
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(
+        table, os.path.join(path, "events.parquet"), row_group_size=row_group_size
+    )
+
+
+def _service_kv(spark, src, start_ms, end_ms):
+    """The frame a bulkload request writes (``api._run_pipeline``)."""
+    from hbase_bulkload_service_spark.operators import tsdb
+    from hbase_bulkload_service_spark.sources.tables import load_events
+
+    cells = tsdb.derive_tsdb_cells(load_events(spark, src))
+    return tsdb.bulkload_kv(tsdb.hour_range_filter(cells, start_ms, end_ms))
+
+
+@pytest.mark.parametrize("kind", ["ntz", "ltz", "nanos"])
+def test_service_scan_bounds_raw_ts_before_the_hour_test(spark, tmp_path, kind):
+    """The window reaches the scan as a bound on the raw ``ts`` (a
+    ``timestamp_ntz``, ``timestamp`` or long literal), and the scan's filter
+    tests it BEFORE the ``div`` hour expression: the bound spares the rows
+    outside it that expression, which is most of the request's scan time
+    on a file Spark cannot prune (NTZ)."""
+    import pyarrow as pa
+
+    ts_type = {
+        "ntz": pa.timestamp("us"),
+        "ltz": pa.timestamp("us", tz="UTC"),
+        "nanos": pa.timestamp("ns"),
+    }[kind]
+    src = str(tmp_path / kind)
+    _write_events(src, ts_type)
+    start = _WINDOW_DAY0_MS + 2 * _DAY_MS
+    plan = formatted_plan(_service_kv(spark, src, start, start + _DAY_MS))
+    assert re.search(r"PushedFilters: \[.*GreaterThanOrEqual\(ts,", plan), plan
+    assert re.search(r"PushedFilters: \[.*LessThan\(ts,", plan), plan
+    conds = [
+        c for c in re.findall(r"\) Filter\nInput \[.*?\]\nCondition : (.*)\n", plan)
+        if " div " in c
+    ]
+    assert len(conds) == 1, plan
+    c = conds[0]
+    lo, hi = re.search(r"ts#\d+L? >= ", c), re.search(r"ts#\d+L? < ", c)
+    assert lo and hi, c
+    assert max(lo.start(), hi.start()) < c.index(" div "), c
+
+
+def test_service_scan_prunes_row_groups_of_a_utc_ts(spark, tmp_path):
+    """On a UTC-adjusted ``ts`` (LTZ) parquet prunes by row-group stats: a
+    window inside one of four row groups reads that group only."""
+    import pyarrow as pa
+
+    from hbase_bulkload_service_spark import obs
+
+    src = str(tmp_path / "ltz")
+    _write_events(src, pa.timestamp("us", tz="UTC"), n=4000, row_group_size=1000)
+    # row group 1 holds days 2-3; the window and its hour of slack stay inside
+    start = _WINDOW_DAY0_MS + 2 * _DAY_MS + 12 * 3_600_000
+    kv = _service_kv(spark, src, start, start + _DAY_MS)
+    sc = spark.sparkContext
+    sc.setJobGroup("ltz-prune", "ltz-prune")
+    try:
+        kv.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    records = obs.group_record(spark, "ltz-prune")["input_records"]
+    assert 0 < records <= 1000, records

@@ -6,8 +6,12 @@ range-exchange and bucketed-join claims hold beyond sf0.1.
 
 The bulkload phase runs q56's own pipeline (``registry_ext.flagship_kv``
 into ``hfile.write_hfiles(..., rollup=True)``) over amplified events.
+The window phase then runs one ``BulkloadService`` request per window
+width over the same events and records its scan stage (the longest
+stage that reads the file): the rows it reads and its task time, which
+should grow with the window, not with the month.
 Metrics are ``obs.group_record`` counters per job group (one group per
-phase).
+phase, one per request).
 
 Usage: python tools/scale_probe.py [amplification] [out_json]
 """
@@ -28,6 +32,9 @@ from hbase_bulkload_service_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 PHASES = ("amplify", "bulkload", "bucket_write", "bucket_join")
+MONTH_START_MS = 1704067200000  # 2024-01-01T00:00Z, the events' month
+DAY_MS = 86_400_000
+WINDOW_DAYS = (1, 4, 16)
 
 
 def _phase_metrics(spark) -> dict:
@@ -41,6 +48,49 @@ def _phase_metrics(spark) -> dict:
                       "input_bytes", "output_bytes")
         }
         out[g]["n_stages"] = rec["stages"]
+    return out
+
+
+def _window_requests(spark, events_dir: str, work: str) -> list[dict]:
+    """One bulkload request per ``WINDOW_DAYS`` width, from the month's
+    start: its wall, cells written and scan stage (the longest stage that
+    reads the file)."""
+    from hbase_bulkload_service_spark.api import BulkloadRequest, BulkloadService
+    from hbase_bulkload_service_spark.operators import tsdb
+    from hbase_bulkload_service_spark.sources.tables import load_events
+
+    svc = BulkloadService(
+        spark,
+        lambda _source: tsdb.derive_tsdb_cells(load_events(spark, events_dir)),
+        os.path.join(work, "service"),
+    )
+    out = []
+    for days in WINDOW_DAYS:
+        req = BulkloadRequest(
+            "events", f"w{days}d", MONTH_START_MS, MONTH_START_MS + days * DAY_MS
+        )
+        t0 = time.time()
+        job = svc.bulkload(req)  # the queue runs it under job group ``job``
+        svc.run_pending()
+        wall = time.time() - t0
+        if job in svc.queue.failures:
+            raise svc.queue.failures[job]
+        rec = obs.group_record(spark, job)
+        # the first request also runs the dictionary scan: take the longer
+        scan = max(
+            (st for st in rec["per_stage"] if st["input_records"]),
+            key=lambda st: st["run_ms"],
+        )
+        manifest = svc.queue.results[job]
+        out.append({
+            "days": days,
+            "wall_s": round(wall, 1),
+            "cells": sum(r["rows"] for r in manifest["regions"].values()),
+            "jobs": rec["jobs"],
+            "scan_input_records": scan["input_records"],
+            "scan_run_ms": scan["run_ms"],
+            "scan_tasks": scan["tasks"],
+        })
     return out
 
 
@@ -95,6 +145,9 @@ def main() -> int:
         regions = hfile.validate_layout(sink, rollup=True)["regions"]  # non-overlap proof
         results["bulkload_rows"] = sum(r["rows"] for r in regions.values())
         results["bulkload_regions"] = len(regions)
+
+        # ---- one service request per window width
+        results["windows"] = _window_requests(spark, amp_dir, work)
 
         # ---- q59 bucketed join at amplified scale
         sc.setJobGroup("bucket_write", "write CLUSTERED BY tables")
