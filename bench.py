@@ -54,7 +54,7 @@ BENCH_SKIP = {
     # verify) stay; these are codec/seek VARIANTS of the same pipeline
     # (q168: GZ blocks — per-task gzip CPU, same plan; q169: DIFF+bloom
     # enabled, same plan; q170: per-file byte-seek gate, correctness-
-    # only harness; q221: q169 under snappy — pure-Python codec CPU).
+    # only harness; q221: q169 under snappy — per-task snappy CPU).
     "q168_hfilev3_gz": "variant:q167",
     "q169_hfilev3_ddl": "variant:q167",
     "q170_hfilev3_point_reads": "harness-only:q167",

@@ -78,8 +78,8 @@ def q168_hfilev3_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-disk terms, trailer codec ordinal 1) is exercised end-to-end and
     must reproduce the same per-region summary as the uncompressed gate
     and the shared container-agnostic oracle. (The reference DDL's own
-    SNAPPY codec is gated by q221 — round 7 added a pure-Python snappy
-    implementation; GZ remains as the deflate-family codec gate.)"""
+    SNAPPY codec is gated by q221; GZ remains as the deflate-family
+    codec gate.)"""
     return v3_gate(spark, sf_dir, "q168hfilev3gz", compression="GZ")
 
 

@@ -1,11 +1,11 @@
 """Registry wave 30 (round 7, capped at the window's 4 free slots):
 q221 closes the last reference-DDL delta — the REAL HFile v3 container
-under the DDL's own SNAPPY codec (pure-Python raw snappy + Hadoop
-BlockCompressorStream framing, sources/hfilev3.py) — and three new
-pipeline operators: q222 winnowing fingerprints (the MOSS positional
-near-dup primitive), q223 majority-vote label aggregation (annotation
-consolidation), q224 vocabulary concentration (the integer Zipf-shape
-corpus-health curve).
+under the DDL's own SNAPPY codec (raw snappy chunks from pyarrow's
+codec under Hadoop BlockCompressorStream framing, sources/hfilev3.py) —
+and three new pipeline operators: q222 winnowing fingerprints (the MOSS
+positional near-dup primitive), q223 majority-vote label aggregation
+(annotation consolidation), q224 vocabulary concentration (the integer
+Zipf-shape corpus-health curve).
 """
 
 from __future__ import annotations
@@ -32,8 +32,7 @@ def q221_hfilev3_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataBlockEncoding.DIFF, Compression.Algorithm.SNAPPY, and the ROW
     compound bloom — this gate writes exactly that (trailer codec
     ordinal 3; every block's payload is raw snappy under Hadoop's
-    BlockCompressorStream framing, implemented pure-Python in
-    sources/hfilev3.py because no snappy library exists here), reads it
+    BlockCompressorStream framing, sources/hfilev3.py), reads it
     back distributedly through the full decode stack (snappy → DIFF →
     cells, bloom checked against each block's first row), and must
     reproduce the same container-agnostic oracle as q167/q168/q169.

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import struct
+import zlib
 
 import pytest
 
@@ -118,25 +119,80 @@ def test_unsorted_and_empty_rejected(tmp_path):
 # corruption detection
 # ---------------------------------------------------------------------------
 
+def _flip(b: bytes, pos: int) -> bytes:
+    out = bytearray(b)
+    out[pos] ^= 0x01
+    return bytes(out)
+
+
+def _recrc(data: bytearray, boff: int) -> None:
+    """Recompute the CRC32 chunk checksums of the block at ``boff`` in
+    place, so a test's edit reaches the check behind the checksum."""
+    (odwh,) = struct.unpack_from(">I", data, boff + 29)
+    checked = bytes(data[boff : boff + odwh])
+    for c in range(-(-odwh // h3.BYTES_PER_CHECKSUM)):
+        chunk = checked[c * h3.BYTES_PER_CHECKSUM : (c + 1) * h3.BYTES_PER_CHECKSUM]
+        struct.pack_into(
+            ">I", data, boff + odwh + 4 * c, zlib.crc32(chunk) & 0xFFFFFFFF
+        )
+
+
+def _assert_both_refuse(tmp_path, data, row, match=None):
+    """The full read and the point seek both refuse the file ``data``:
+    they open it through the same checks."""
+    fn2 = str(tmp_path / "bad.hfile")
+    open(fn2, "wb").write(bytes(data))
+    with pytest.raises(AssertionError, match=match):
+        h3.read_hfile_v3(fn2)
+    with pytest.raises(AssertionError, match=match):
+        h3.seek_row_hfile_v3(fn2, row)
+
+
+def _set_codec_ordinal(b: bytes, ordinal: int) -> bytes:
+    # the trailer proto's last field is the codec ordinal (tag 12, varint)
+    toff = len(b) - 4096
+    tlen, pos = h3._pb_read_varint(b, toff + 8)
+    assert b[pos + tlen - 2] == 12 << 3
+    out = bytearray(b)
+    out[pos + tlen - 1] = ordinal
+    return bytes(out)
+
+
+def _empty_trailer_proto(b: bytes) -> bytes:
+    toff = len(b) - 4096
+    assert b[toff + 8] < 0x80  # one-byte varint length
+    out = bytearray(b)
+    out[toff + 8] = 0
+    return bytes(out)
+
+
+def _drop_pbuf_magic(b: bytes) -> bytes:
+    out = bytearray(b)
+    fi = bytes(out).index(h3.BLOCK_MAGIC_FILE_INFO)
+    assert out[fi + 33 : fi + 37] == h3.PB_MAGIC
+    out[fi + 33 : fi + 37] = b"XXXX"
+    _recrc(out, fi)
+    return bytes(out)
+
+
 @pytest.mark.parametrize(
     "mutate",
     [
-        lambda b: (40, b[40] ^ 0x01),          # data byte -> CRC
-        lambda b: (8, b[8] ^ 0x01),            # header field -> CRC
-        lambda b: (len(b) - 1, b[-1] ^ 0x01),  # version word
-        lambda b: (len(b) - 4096, b[len(b) - 4096] ^ 0x01),  # trailer magic
+        lambda b: _flip(b, 40),               # data byte -> CRC
+        lambda b: _flip(b, 8),                # header field -> CRC
+        lambda b: _flip(b, len(b) - 1),       # version word
+        lambda b: _flip(b, len(b) - 4096),    # trailer magic
+        lambda b: b[:3],                      # truncated to 3 bytes
+        lambda b: _set_codec_ordinal(b, 7),   # unknown codec ordinal
+        lambda b: _empty_trailer_proto(b),    # trailer without its fields
+        lambda b: _drop_pbuf_magic(b),        # file info without PBUF
     ],
 )
 def test_corruption_detected(tmp_path, mutate):
     fn = str(tmp_path / "c.hfile")
-    h3.write_hfile_v3(fn, _cells(100), block_size=1024)
-    blob = bytearray(open(fn, "rb").read())
-    pos, val = mutate(bytes(blob))
-    blob[pos] = val
-    fn2 = str(tmp_path / "cbad.hfile")
-    open(fn2, "wb").write(bytes(blob))
-    with pytest.raises(AssertionError):
-        h3.read_hfile_v3(fn2)
+    cells = _cells(100)
+    h3.write_hfile_v3(fn, cells, block_size=1024)
+    _assert_both_refuse(tmp_path, mutate(open(fn, "rb").read()), cells[0][0])
 
 
 def test_vlong_roundtrip():
@@ -210,7 +266,6 @@ def test_rewrite_with_fewer_regions_leaves_no_stale_file(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 def test_gz_roundtrip_and_trailer_codec(tmp_path):
-    import zlib
     cells = _cells(2000)
     fn = str(tmp_path / "gz.hfile")
     w = h3.write_hfile_v3(fn, cells, block_size=4096, compression="GZ")
@@ -240,6 +295,20 @@ def test_gz_corruption_detected_before_decompress(tmp_path):
     open(fn2, "wb").write(bytes(blob))
     with pytest.raises(AssertionError, match="CRC"):
         h3.read_hfile_v3(fn2)
+
+
+def test_gz_codec_fault_is_assertion(tmp_path):
+    """A gzip member that passes its block CRC but fails its own length
+    check surfaces as the reader's AssertionError."""
+    fn = str(tmp_path / "gzf.hfile")
+    cells = _cells(500)
+    h3.write_hfile_v3(fn, cells, block_size=2048, compression="GZ")
+    data = bytearray(open(fn, "rb").read())
+    (on_disk_wo,) = struct.unpack_from(">I", data, 8)
+    n_chunks = -(-struct.unpack_from(">I", data, 29)[0] // 16384)
+    data[33 + on_disk_wo - 4 * n_chunks - 1] ^= 0xFF  # gzip ISIZE byte
+    _recrc(data, 0)
+    _assert_both_refuse(tmp_path, data, cells[0][0], "does not decode")
 
 
 def test_unknown_codec_rejected(tmp_path):
@@ -530,19 +599,7 @@ def test_bloom_meta_tamper_detected(tmp_path):
     for i in range(start, start + 64):
         data[i] = 0  # clear a stretch of the bitmap
     # fix the chunk's CRC so only the bloom CONTENT is wrong
-    from hbase_bulkload_service_spark.sources.hfilev3 import (
-        BYTES_PER_CHECKSUM, HEADER_SIZE,
-    )
-    import zlib
-    boff = start - HEADER_SIZE
-    (odwh,) = struct.unpack_from(">I", data, boff + 29)
-    checked = bytes(data[boff : boff + odwh])
-    n_chunks = -(-odwh // BYTES_PER_CHECKSUM)
-    for c in range(n_chunks):
-        chunk = checked[c * BYTES_PER_CHECKSUM : (c + 1) * BYTES_PER_CHECKSUM]
-        struct.pack_into(
-            ">I", data, boff + odwh + 4 * c, zlib.crc32(chunk) & 0xFFFFFFFF
-        )
+    _recrc(data, start - h3.HEADER_SIZE)
     fn2 = str(tmp_path / "bltbad.hfile")
     open(fn2, "wb").write(bytes(data))
     with pytest.raises(AssertionError, match="false-negative"):
@@ -645,13 +702,15 @@ def test_rolling_writer_full_ddl_config_and_validate(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# round 7: pure-Python SNAPPY codec (the reference DDL's own compression)
+# SNAPPY codec (the reference DDL's own compression): raw snappy chunks
+# under Hadoop's BlockCompressorStream framing
 # ---------------------------------------------------------------------------
 
 import random as _random
 
 
 def test_snappy_raw_roundtrip_varied():
+    """Raw snappy chunks round-trip through the Hadoop framing."""
     _random.seed(7)
     cases = [
         b"",
@@ -662,16 +721,16 @@ def test_snappy_raw_roundtrip_varied():
         b"x" * 70000,                                     # RLE: overlapping copies
     ]
     for c in cases:
-        raw = h3._snappy_compress_raw(c)
-        assert h3._snappy_decompress_raw(raw) == c
+        framed = h3._snappy_hadoop_compress(c)
+        assert h3._snappy_hadoop_decompress(framed) == c
     # repetitive input genuinely compresses
-    assert len(h3._snappy_compress_raw(b"abcd" * 5000)) < 2000
+    assert len(h3._snappy_hadoop_compress(b"abcd" * 5000)) < 2000
 
 
 def test_snappy_decoder_reads_external_literal_only_stream():
     """A conforming literal-only stream (what a 'stored' external encoder
-    may emit) decodes identically — the decoder is format-complete, not
-    paired to our encoder."""
+    may emit), wrapped in Hadoop framing, decodes identically — the
+    decoder is format-complete, not paired to our encoder."""
     def literal_only(data: bytes) -> bytes:
         out = bytearray()
         v = len(data)
@@ -688,7 +747,9 @@ def test_snappy_decoder_reads_external_literal_only_stream():
         return bytes(out)
 
     for c in (b"", b"hello world", b"abc" * 999):
-        assert h3._snappy_decompress_raw(literal_only(c)) == c
+        raw = literal_only(c)
+        framed = struct.pack(">II", len(c), len(raw)) + raw
+        assert h3._snappy_hadoop_decompress(framed) == c
 
 
 def test_snappy_hadoop_framing_multi_chunk():
@@ -713,6 +774,40 @@ def test_snappy_container_corruption_detected(tmp_path):
     open(fn2, "wb").write(bytes(blob))
     with pytest.raises(AssertionError):
         h3.read_hfile_v3(fn2)
+
+
+def _snappy_first_block(tmp_path):
+    """A SNAPPY file's bytes, its first row, and the position of the
+    first data block's raw chunk preamble: header (33 bytes), then the
+    frame's BE4 ulen and BE4 clen."""
+    fn = str(tmp_path / "snc.hfile")
+    cells = _cells(200)
+    h3.write_hfile_v3(fn, cells, block_size=512, compression="SNAPPY")
+    return bytearray(open(fn, "rb").read()), cells[0][0], 33 + 8
+
+
+def test_snappy_codec_fault_is_assertion(tmp_path):
+    """A chunk that passes its CRC but does not decode: the codec's own
+    error surfaces as the reader's AssertionError, not the CRC's."""
+    data, row, vpos = _snappy_first_block(tmp_path)
+    _, epos = h3._pb_read_varint(data, vpos)
+    # first element -> a copy whose 16-bit offset reaches before the start
+    data[epos : epos + 3] = bytes([(63 << 2) | 2, 0xFF, 0xFF])
+    _recrc(data, 0)
+    _assert_both_refuse(tmp_path, data, row, "does not decode")
+
+
+@pytest.mark.parametrize("delta", [1, -1])
+def test_snappy_chunk_length_disagrees_with_frame(tmp_path, delta):
+    data, row, vpos = _snappy_first_block(tmp_path)
+    (ulen,) = struct.unpack_from(">I", data, vpos - 8)
+    n, epos = h3._pb_read_varint(data, vpos)
+    assert n == ulen  # one chunk per frame below the 256 KiB buffer
+    varint = h3._pb_varint(n + delta)
+    assert len(varint) == epos - vpos
+    data[vpos:epos] = varint
+    _recrc(data, 0)
+    _assert_both_refuse(tmp_path, data, row, "ulen|does not decode")
 
 
 def test_snappy_trailer_ordinal_is_hbase_algorithm_ordinal(tmp_path):
@@ -751,7 +846,7 @@ def test_snappy_raw_roundtrip_hypothesis():
     @settings(max_examples=200, deadline=None)
     @given(st.binary(max_size=5000))
     def roundtrip(data):
-        assert h3._snappy_decompress_raw(h3._snappy_compress_raw(data)) == data
+        assert h3._snappy_hadoop_decompress(h3._snappy_hadoop_compress(data)) == data
 
     roundtrip()
 
