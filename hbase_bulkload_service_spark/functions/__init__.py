@@ -17,5 +17,4 @@ from hbase_bulkload_service_spark.functions.hashes import (  # noqa: F401
     ascii_byte_ints,
     int_byte_ints,
     java_arrays_hashcode,
-    java_string_hashcode,
 )

@@ -8,8 +8,9 @@ Implementation strategy: keep the accumulator as an unsigned 64-bit value
 reduced mod 2**32 at every step (``pmod`` handles negative byte addends), and
 convert to signed 32-bit once at the end. ``31*acc + b`` with ``acc < 2**32``
 fits comfortably in a long, so the fold is exact. Everything runs JVM-side
-inside whole-stage codegen via ``aggregate`` over an int array — no Python in
-the hot path, so salting scales to 100 TB.
+via ``aggregate`` over an int array — no Python in the hot path, so salting
+scales to 100 TB. ``aggregate`` and ``transform`` are ``CodegenFallback``
+expressions: whole-stage codegen evaluates them interpreted, per row.
 """
 
 from __future__ import annotations
@@ -32,9 +33,8 @@ def _to_signed_byte(b: Column) -> Column:
 def ascii_byte_ints(s: Column) -> Column:
     """UTF-8 bytes of an ASCII string as array<long> of signed byte values.
 
-    ASCII-only fast path (codepoint == byte). The TSDB tag strings the
-    reference hashes are ASCII; for general binary use ``binary_byte_ints``
-    (pandas-UDF fallback in codec.py).
+    ASCII only (codepoint == byte): the TSDB tag strings the reference
+    hashes are ASCII, and there is no path for general binary input.
     """
     idx = F.sequence(F.lit(1), F.length(s))
     chars = F.transform(idx, lambda i: _to_signed_byte(F.ascii(s.substr(i, F.lit(1)))).cast("long"))
@@ -65,24 +65,6 @@ def java_arrays_hashcode(byte_ints: Column) -> Column:
         byte_ints,
         F.lit(1).cast("long"),
         lambda acc, b: F.pmod(acc * F.lit(31) + b, F.lit(_MOD32)),
-    )
-    return _to_signed32(h).cast("int")
-
-
-def java_string_hashcode(s: Column) -> Column:
-    """``String.hashCode()`` (h = 31*h + char, init 0) for ASCII strings.
-
-    Used as the deterministic rolling-hash document fingerprint
-    (the reference has no fingerprinting; this is north-star surface).
-    """
-    idx = F.sequence(F.lit(1), F.length(s))
-    chars = F.when(F.length(s) == 0, F.array().cast("array<long>")).otherwise(
-        F.transform(idx, lambda i: F.ascii(s.substr(i, F.lit(1))).cast("long"))
-    )
-    h = F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, c: F.pmod(acc * F.lit(31) + c, F.lit(_MOD32)),
     )
     return _to_signed32(h).cast("int")
 

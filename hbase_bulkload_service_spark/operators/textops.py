@@ -1391,7 +1391,7 @@ def phrase_decontamination(
     overlap. Overlapping occurrences all count.
 
     Scale shape for 100 TB — this operator was probe-hardened twice
-    (LINEARITY_r06_waves21_26 + SCALE.md):
+    (artifacts/LINEARITY_r06_waves21_26.json + SCALE.md):
     - a positional-postings alignment join (token stream x phrase
       tokens, vote per start) measured QUADRATIC SHUFFLE under a
       saturated vocabulary — votes grow as |phrases| x |tokens| /

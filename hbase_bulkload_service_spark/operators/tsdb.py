@@ -8,9 +8,11 @@ latest version + per-qualifier KeyValue, D3) → HFile output.
 Spark design: everything is a declarative DataFrame transform —
 - salting is a pure column-expression chain (bit-exact Java Arrays.hashCode),
   no shuffle;
-- dedup is a hash aggregate ``max_by(value, version_ts)`` with map-side
+- dedup is one aggregate ``max_by(value, version_ts)`` with map-side
   partial aggregation (strictly better than the reference's per-row
-  NavigableMap walk);
+  NavigableMap walk); over the bulkload's binary values Spark plans it
+  as a SortAggregate, because a hash aggregate cannot hold a binary
+  ``max_by`` buffer;
 - ordering for the HFile sink is NOT decided here: the writers own it
   (``sources/hfile.assign_region`` range-partitions and sorts by region,
   key, qualifier — globally non-overlapping sorted files per region,
@@ -314,8 +316,10 @@ def latest_version_dedup(
     """Keep only the newest version per cell: ``max_by(value, version_ts)``.
 
     The reference walks the time-ascending NavigableMap and takes the last
-    element (TsdbBulkload.java:135-136); the Spark-first equivalent is a
-    hash aggregate with map-side combine — one shuffle keyed on the cell.
+    element (TsdbBulkload.java:135-136); the Spark-first equivalent is an
+    aggregate with map-side combine — one shuffle keyed on the cell. Over
+    a binary value (``bulkload_kv``) it plans as a SortAggregate: the
+    ``max_by`` buffer is not fixed-width, so a hash aggregate cannot hold it.
     Also keeps the max version_ts for auditability.
 
     ``max_by`` on version alone is non-deterministic when two rows carry
@@ -329,7 +333,7 @@ def latest_version_dedup(
     is exempt from AQE's byte-based coalescing): the dedup's shuffle
     payload is byte-small binary keys, but the reduce side carries the
     post-agg codec expressions, and AQE was serializing ~15 s of that
-    CPU onto 3 tasks at sf0.1 (STAGE_AUDIT_r07; same class as the q69
+    CPU onto 3 tasks at sf0.1 (artifacts/STAGE_AUDIT_r07.json; same class as the q69
     trap's CPU sibling). Width scales with the cluster via
     session.pinned_width.
     """

@@ -1,7 +1,10 @@
 """Query registry — the driver-facing correctness surface.
 
 Each entry pairs a Spark implementation (built from engine operators) with
-an equivalent ANSI-SQL oracle string for DuckDB. Conventions that keep the
+an equivalent ANSI-SQL oracle string for DuckDB. The queries themselves
+live in the domain modules of ``hbase_bulkload_service_spark.queries``;
+this module holds only the table they register into and the Spark-side
+helpers that more than one domain uses. Conventions that keep the
 cross-engine value-hash stable:
 
 - money/metric aggregates are computed in integer *cents*
@@ -10,7 +13,17 @@ cross-engine value-hash stable:
 - timestamps are compared/output as epoch integers (``unix_millis`` /
   ``epoch_ms``) — timezone-proof;
 - every computed column is aliased identically on both sides;
-- ties near LIMIT boundaries are broken by a unique key.
+- ties near LIMIT boundaries are broken by a unique key;
+- every DuckDB ``SUM``/``COUNT`` output is ``CAST(.. AS BIGINT)``: DuckDB
+  promotes it to HUGEINT, which the pandas fetch path renders as float64;
+- float outputs are floored to integer micros/cents before any cast,
+  never rounded (a double → BIGINT cast truncates in Spark and rounds
+  in DuckDB; round half-even vs half-up varies across engines);
+- float folds are sequential left-to-right in both engines (``aggregate``
+  with a 0.0 init vs ``list_reduce``);
+- DuckDB ``regexp_replace`` needs the 'g' flag to match Spark's
+  replace-all default; hex → int is ``conv(h, 16, 10)`` in Spark and
+  ``('0x' || h)::BIGINT`` in DuckDB; text round trips compare by md5.
 """
 
 from __future__ import annotations
@@ -18,18 +31,8 @@ from __future__ import annotations
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from hbase_bulkload_service_spark.functions.codec import (
-    decode_double_be,
-    decode_int_be,
-    epoch_millis,
-    ts_at_most_ms,
-)
-from hbase_bulkload_service_spark.operators import tsdb
-from hbase_bulkload_service_spark.plans.jobs import time_slices
-from hbase_bulkload_service_spark.sources.tables import load, load_events
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -51,71 +54,6 @@ def cents(col) -> F.Column:
     return F.floor(col * 100).cast("long")
 
 
-# ---------------------------------------------------------------------------
-# shared fixture SQL: events → tsdb_cells (FIXTURES.md §2), mirrored by
-# operators/tsdb.derive_tsdb_cells
-# ---------------------------------------------------------------------------
-
-TSDB_CELLS_CTE = """
-dict AS (
-  SELECT event_type,
-         CAST(row_number() OVER (ORDER BY event_type) - 1 AS INT) AS metric_id
-  FROM (SELECT DISTINCT event_type FROM events)
-),
-base AS (
-  SELECT e.event_id, d.metric_id,
-         epoch_ms(e.ts) AS ts_ms,
-         epoch_ms(e.ts) // 1000 AS ts_sec,
-         'user=' || CAST(e.user_id AS VARCHAR) AS tags,
-         e.value AS dvalue
-  FROM events e JOIN dict d USING (event_type)
-),
-base2 AS (
-  SELECT event_id, metric_id, ts_ms, ts_sec, tags, dvalue,
-         ts_sec - ts_sec % 3600 AS ts_hour,
-         CAST(ts_sec % 3600 AS INT) AS offset_sec,
-         ts_ms AS version_ts
-  FROM base
-),
-cells AS (
-  SELECT event_id, metric_id, ts_hour, ts_sec, tags, offset_sec, version_ts, dvalue
-  FROM base2
-  UNION ALL
-  SELECT event_id, metric_id, ts_hour, ts_sec, tags, offset_sec,
-         version_ts + 1000 AS version_ts, dvalue * 2 AS dvalue
-  FROM base2 WHERE event_id % 20 = 0
-)
-"""
-
-# Java Arrays.hashCode over salt_base = 3-byte metric ‖ ascii(tags), as a
-# DuckDB expression (32-bit wraparound via mod-2^32 fold; % keeps dividend
-# sign exactly like Java). Mirrors functions/hashes.java_arrays_hashcode.
-_DUCK_SALT_BYTES = (
-    "[CASE WHEN b > 127 THEN b - 256 ELSE b END FOR b IN list_concat("
-    "[(metric_id >> 16) & 255, (metric_id >> 8) & 255, metric_id & 255], "
-    "list_transform(range(1, length(tags) + 1), i -> ascii(substr(tags, i, 1))))]"
-)
-_DUCK_JAVA_HASH_U = (
-    f"list_reduce(list_prepend(CAST(1 AS BIGINT), {_DUCK_SALT_BYTES}), "
-    "(acc, x) -> ((acc * 31 + x) % 4294967296 + 4294967296) % 4294967296)"
-)
-DUCK_SALT_BUCKET = (
-    f"abs((CASE WHEN {_DUCK_JAVA_HASH_U} >= 2147483648 "
-    f"THEN {_DUCK_JAVA_HASH_U} - 4294967296 ELSE {_DUCK_JAVA_HASH_U} END) % 512)"
-)
-
-# time constants (UTC) for the hour-filter / slicing queries
-HOUR_FILTER_START_MS = 1704868200000  # 2024-01-10 06:30:00Z
-HOUR_FILTER_END_MS = 1705776300000  # 2024-01-20 18:45:00Z
-SLICE_START_MS = 1704067200000  # 2024-01-01
-SLICE_END_MS = 1706659200000  # 2024-01-31
-SLICE_INTERVAL_MS = 7 * 24 * 3600 * 1000
-
-
-# ===========================================================================
-# E3 — documented SQL scan+agg surface (AbstractHBaseTableSource.java:54-65)
-# ===========================================================================
-
 @contextmanager
 def _scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily size shuffle/state partitions for a tiny-state streaming
@@ -128,837 +66,13 @@ def _scoped_shuffle_partitions(spark: SparkSession, n: int):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-@register(
-    "q01_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(FLOOR(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS sum_disc_cents,
-           CAST(SUM(CAST(FLOOR(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100) AS BIGINT)) AS BIGINT) AS sum_charge_cents,
-           COUNT(*) AS cnt
-    FROM lineitem
-    WHERE epoch_ms(l_shipdate) <= 904694400000
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship scan+aggregate (Q1-style pricing summary).
-
-    Catalyst plan: parquet scan with the shipdate range PUSHED to the scan
-    (typed-literal comparison — wrapping the column in epoch arithmetic
-    would defeat row-group pruning) + column pruning → partial hash agg →
-    final hash agg. No custom code.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(ts_at_most_ms(li, "l_shipdate", 904694400000))  # 1998-09-02Z
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(cents(F.col("l_quantity"))).alias("sum_qty_cents"),
-            F.sum(cents(F.col("l_extendedprice"))).alias("sum_base_cents"),
-            F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
-                "sum_disc_cents"
-            ),
-            F.sum(
-                cents(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                )
-            ).alias("sum_charge_cents"),
-            F.count("*").alias("cnt"),
-        )
-    )
-
-
-@register(
-    "q02_revenue_by_nation",
-    """
-    SELECT n.n_name,
-           CAST(SUM(CAST(FLOOR(o.o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-           COUNT(*) AS order_cnt
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def q02_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-join aggregate; nation is broadcast (small dim)."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
-            F.count("*").alias("order_cnt"),
-        )
-    )
-
-
-@register(
-    "q03_topk_orders",
-    """
-    SELECT o_orderkey, o_custkey,
-           CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS totalprice_cents
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 10
-    """,
-)
-def q03_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G4 LIMIT/top-k — Spark TakeOrderedAndProject (no full sort at scale).
-    Ties broken by unique o_orderkey for cross-engine determinism."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            cents(F.col("o_totalprice")).alias("totalprice_cents"),
-        )
-    )
-
-
-@register(
-    "q04_point_get",
-    """
-    SELECT c_custkey, c_name, c_nationkey,
-           CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS acctbal_cents
-    FROM customer WHERE c_custkey = 42
-    """,
-)
-def q04_point_get(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 point get (HBaseSerde.createGet:198-214) — an equality filter on
-    the key column; pushes down to the scan."""
-    c = load(spark, sf_dir, "customer")
-    return c.filter(F.col("c_custkey") == 42).select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        cents(F.col("c_acctbal")).alias("acctbal_cents"),
-    )
-
-
-@register(
-    "q05_lookup_join",
-    """
-    SELECT o.o_orderkey, o.o_custkey, c.c_name,
-           CAST(FLOOR(o.o_totalprice * 100) AS BIGINT) AS totalprice_cents
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    WHERE o.o_orderkey % 3 = 0 AND c.c_custkey < 500
-    """,
-)
-def q05_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 lookup join (HBaseRowDataLookupFunction.java:76-86): per-probe-row
-    point get with *inner* semantics (misses emit nothing). Spark-first
-    replacement: broadcast hash join on the rowkey — no per-row RPC."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0)
-    dim = load(spark, sf_dir, "customer").filter(F.col("c_custkey") < 500)
-    return o.join(F.broadcast(dim), o.o_custkey == dim.c_custkey, "inner").select(
-        "o_orderkey",
-        "o_custkey",
-        "c_name",
-        cents(F.col("o_totalprice")).alias("totalprice_cents"),
-    )
-
-
-# ===========================================================================
-# TSDB core — D1 salting, D3/E1 dedup, B1 hour filter, E2 rollup, J2 slices
-# ===========================================================================
-
-@register(
-    "q10_salt_bucket",
-    f"""
-    WITH {TSDB_CELLS_CTE}
-    SELECT DISTINCT metric_id, tags, {DUCK_SALT_BUCKET} AS bucket
-    FROM cells
-    """,
-)
-def q10_salt_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D1 — bit-exact Java Arrays.hashCode salting (TsdbBulkload.java:81-114)."""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    salted = tsdb.with_salt(cells)
-    return salted.select("metric_id", "tags", "bucket").distinct()
-
-
-@register(
-    "q11_latest_version_dedup",
-    f"""
-    WITH {TSDB_CELLS_CTE},
-    c1 AS (
-      SELECT metric_id, ts_hour, tags, offset_sec, version_ts,
-             MAX(dvalue) AS dvalue
-      FROM cells
-      GROUP BY metric_id, ts_hour, tags, offset_sec, version_ts
-    )
-    SELECT metric_id, ts_hour, tags, offset_sec,
-           MAX(version_ts) AS version_ts,
-           CAST(FLOOR(arg_max(dvalue, version_ts) * 100) AS BIGINT) AS value_cents
-    FROM c1
-    GROUP BY metric_id, ts_hour, tags, offset_sec
-    """,
-)
-def q11_latest_version_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D3/E1 — newest-version-wins dedup (TsdbBulkload.java:129-139), done
-    through the *binary* rowkey/qualifier/value codecs and decoded back —
-    exercises I1/I5 end-to-end. Same-version collisions are collapsed
-    deterministically (max value) first."""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.groupBy("rowkey", "qualifier", "version_ts").agg(
-        F.max("dvalue").alias("dvalue")
-    )
-    c1 = c1.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    deduped = tsdb.latest_version_dedup(c1, key_cols=("rowkey", "qualifier"))
-    return deduped.select(
-        decode_int_be(F.expr("substring(rowkey, 1, 3)"), 3).cast("int").alias("metric_id"),
-        decode_int_be(F.expr("substring(rowkey, 4, 4)"), 4).alias("ts_hour"),
-        F.decode(F.expr("substring(rowkey, 8, length(rowkey) - 7)"), "UTF-8").alias("tags"),
-        decode_int_be(F.col("qualifier"), 2).cast("int").alias("offset_sec"),
-        F.col("version_ts"),
-        F.floor(decode_double_be(F.col("value")) * 100).cast("long").alias("value_cents"),
-    )
-
-
-@register(
-    "q12_hour_range_filter",
-    f"""
-    SELECT event_id, epoch_ms(ts) // 1000 AS ts_sec
-    FROM events
-    WHERE (epoch_ms(ts) // 1000) - (epoch_ms(ts) // 1000) % 3600
-          >= {(HOUR_FILTER_START_MS - HOUR_FILTER_START_MS % 3600000) // 1000}
-      AND (epoch_ms(ts) // 1000) - (epoch_ms(ts) // 1000) % 3600
-          < {(HOUR_FILTER_END_MS - HOUR_FILTER_END_MS % 3600000) // 1000}
-    """,
-)
-def q12_hour_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B1 — FuzzyRowFilter whole-hour semantics (TsdbScanner.java:16-57):
-    rows match iff their *hour bucket* ∈ [floor_hour(start), floor_hour(end)),
-    regardless of sub-hour offsets."""
-    ev = load_events(spark, sf_dir).withColumn("ts_sec", F.expr("ts_ms div 1000"))
-    return tsdb.hour_range_filter(ev, HOUR_FILTER_START_MS, HOUR_FILTER_END_MS).select(
-        "event_id", "ts_sec"
-    )
-
-
-@register(
-    "q13_rollup_5m",
-    """
-    SELECT (epoch_ms(ts) // 1000) - (epoch_ms(ts) // 1000) % 300 AS window_start_sec,
-           event_type,
-           COUNT(*) AS cnt,
-           CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents,
-           MIN(CAST(FLOOR(value * 100) AS BIGINT)) AS min_value_cents,
-           MAX(CAST(FLOOR(value * 100) AS BIGINT)) AS max_value_cents
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def q13_rollup_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2 — 5-minute tumbling rollup (rollup table layout,
-    HBaseProperties.java:24; aggregation made explicit)."""
-    return tsdb.rollup_5m(load_events(spark, sf_dir))
-
-
-_N_SLICES = -(-(SLICE_END_MS - SLICE_START_MS) // SLICE_INTERVAL_MS)
-
-
-@register(
-    "q14_time_slices",
-    f"""
-    SELECT CAST(k AS INT) AS slice_idx,
-           {SLICE_END_MS} - (k + 1) * {SLICE_INTERVAL_MS} AS slice_start,
-           {SLICE_END_MS} - k * {SLICE_INTERVAL_MS} AS slice_end
-    FROM (SELECT unnest(range(0, {_N_SLICES})) AS k)
-    """,
-)
-def q14_time_slices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2 — newest-first batch time slicing (HBaseController.java:209-229);
-    the oldest slice may overshoot start, faithfully."""
-    slices = time_slices(SLICE_START_MS, SLICE_END_MS, SLICE_INTERVAL_MS)
-    # inline VALUES → LocalRelation: no Python-RDD conversion path, no job
-    rows = ", ".join(
-        f"({s.slice_idx}, CAST({s.slice_start} AS BIGINT), CAST({s.slice_end} AS BIGINT))"
-        for s in slices
-    )
-    return spark.sql(
-        "SELECT slice_idx, slice_start, slice_end "
-        f"FROM (VALUES {rows}) AS t(slice_idx, slice_start, slice_end)"
-    )
-
-
-@register(
-    "q22_interval_join",
-    f"""
-    WITH slices AS (
-      SELECT CAST(k AS INT) AS slice_idx,
-             {SLICE_END_MS} - (k + 1) * {SLICE_INTERVAL_MS} AS slice_start,
-             {SLICE_END_MS} - k * {SLICE_INTERVAL_MS} AS slice_end
-      FROM (SELECT unnest(range(0, {_N_SLICES})) AS k)
-    )
-    SELECT e.event_id, epoch_ms(e.ts) AS ts_ms, s.slice_idx
-    FROM events e JOIN slices s
-      ON epoch_ms(e.ts) >= s.slice_start AND epoch_ms(e.ts) < s.slice_end
-    """,
-)
-def q22_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-containment join: assign every event to its J2 time slice
-    (HBaseController.java:209-229 slices × scanned rows, made a first-class
-    operator). Bucketed equi-join — never BroadcastNestedLoopJoin; see
-    operators/table.py:interval_join. Day-sized buckets against week-sized
-    slices: each slice explodes to 8 bucket rows, each event owns one."""
-    from hbase_bulkload_service_spark.operators.table import interval_join
-
-    slices = q14_time_slices(spark, sf_dir)
-    ev = load_events(spark, sf_dir).select("event_id", "ts_ms")
-    return interval_join(
-        ev, "ts_ms", slices, "slice_start", "slice_end", 24 * 3600 * 1000
-    ).select("event_id", "ts_ms", "slice_idx")
-
-
-@register(
-    "q19_streaming_rollup",
-    """
-    WITH e AS (
-      SELECT epoch_ms(ts) // 1000 AS ts_sec, event_type,
-             CAST(FLOOR(value * 100) AS BIGINT) AS cents
-      FROM events
-    )
-    SELECT ts_sec - ts_sec % 300 AS window_start_sec, event_type,
-           COUNT(*) AS cnt, CAST(SUM(cents) AS BIGINT) AS sum_value_cents,
-           MIN(cents) AS min_value_cents, MAX(cents) AS max_value_cents
-    FROM e GROUP BY 1, 2
-    """,
-)
-def q19_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E2 streaming variant driven end-to-end: file-source stream →
-    watermark + tumbling 5-min window agg → memory sink (availableNow).
-    Complete output mode makes the finite-stream result equal the batch
-    rollup, so the SAME SQL oracle gates the streaming operator."""
-    from pyspark.sql.types import LongType, TimestampNTZType
-
-    from hbase_bulkload_service_spark.streaming import ops as st
-
-    schema = load(spark, sf_dir, "events").schema  # sets nanosAsLong first
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    dt = schema["ts"].dataType
-    if isinstance(dt, LongType):  # TIMESTAMP(NANOS) read as long
-        ts_evt = F.timestamp_micros(F.expr("ts div 1000"))
-    elif isinstance(dt, TimestampNTZType):
-        # wall-clock-as-UTC via pure wall-clock arithmetic (epoch_millis
-        # convention). to_utc_timestamp(ntz, 'UTC') is NOT that: Spark
-        # first casts NTZ→instant through the SESSION timezone, shifting
-        # every window by the zone offset (caught by the TZ probe).
-        ts_evt = F.timestamp_millis(
-            F.expr(
-                "timestampdiff(MILLISECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-            )
-        )
-    else:
-        ts_evt = F.col("ts")
-    rolled = st.streaming_rollup_5m(
-        stream.withColumn("ts_evt", ts_evt), ts_col="ts_evt"
-    )
-    with _scoped_shuffle_partitions(spark, 8):
-        q = (
-            rolled.writeStream.format("memory")
-            .queryName("q19_rollup_mem")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        st.await_finite(q, 300)
-    return spark.table("q19_rollup_mem")
-
-
-@register(
-    "q20_streaming_upsert",
-    f"""
-    WITH {TSDB_CELLS_CTE},
-    clk AS (
-      SELECT CAST(metric_id AS VARCHAR) || '/' || CAST(ts_hour AS VARCHAR)
-               || '/' || tags AS key,
-             CAST(offset_sec AS VARCHAR) AS qualifier,
-             version_ts, MAX(dvalue) AS dvalue
-      FROM cells
-      WHERE metric_id = 0
-        AND ts_hour >= 1704672000 AND ts_hour < 1705276800
-      GROUP BY 1, 2, version_ts
-    )
-    SELECT key, qualifier, MAX(version_ts) AS version_ts,
-           CAST(FLOOR(max_by(dvalue, version_ts) * 100) AS BIGINT) AS value_cents
-    FROM clk GROUP BY key, qualifier
-    """,
-)
-def q20_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D3/E1/H4 streaming variant driven end-to-end: the custom stateful
-    latest-version operator (applyInPandasWithState) over a finite cell
-    stream equals the batch max_by dedup — same SQL oracle. Subset to one
-    metric to keep per-key state volume bench-sane; plumbing is identical
-    at any width."""
-    import shutil
-    import tempfile
-
-    from hbase_bulkload_service_spark.streaming import ops as st
-
-    ev = load_events(spark, sf_dir, spread=True)
-    # metric_id 0 is the alphabetically-first event_type (the dictionary
-    # ranks by name); filtering the events FIRST lets derive_tsdb_cells
-    # skip the full-corpus dictionary join — same cells, smaller scan.
-    # The min itself reads the UNSPREAD single-column scan (r09, guide
-    # §2.4): the spread round-robin exchange buys nothing for a
-    # one-column MIN and was the probe job's whole cost.
-    min_type = (
-        load(spark, sf_dir, "events").agg(F.min("event_type")).first()[0]
-    )
-    cells = tsdb.derive_tsdb_cells(ev.filter(F.col("event_type") == min_type))
-    slim = (
-        cells.filter(
-            (F.col("metric_id") == 0)
-            & (F.col("ts_hour") >= 1704672000)  # one week: 2024-01-08 ..
-            & (F.col("ts_hour") < 1705276800)  # .. 2024-01-15 (UTC)
-        )
-        .select(
-            F.concat_ws(
-                "/",
-                F.col("metric_id").cast("string"),
-                F.col("ts_hour").cast("string"),
-                F.col("tags"),
-            ).alias("key"),
-            F.col("offset_sec").cast("string").alias("qualifier"),
-            "version_ts",
-            F.col("dvalue"),
-        )
-        # deterministic same-version collapse, mirrored by the oracle
-        .groupBy("key", "qualifier", "version_ts")
-        .agg(F.max("dvalue").alias("value"))
-    )
-    d = tempfile.mkdtemp(prefix="q20cells")
-    try:
-        slim.coalesce(8).write.mode("overwrite").parquet(d)
-        stream = spark.readStream.schema(st.CELL_SCHEMA).parquet(d)
-        out = st.streaming_latest_version(stream)
-        # tiny keyed state: 8 state-store partitions beat the session's 32
-        # (each costs a Python worker round per micro-batch)
-        with _scoped_shuffle_partitions(spark, 8):
-            q = (
-                out.writeStream.format("memory")
-                .queryName("q20_upsert_mem")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            st.await_finite(q, 300)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    # update-mode changelog → final snapshot (last change per key wins)
-    return spark.sql(
-        """
-        SELECT key, qualifier,
-               max_by(version_ts, version_ts) AS version_ts,
-               CAST(FLOOR(max_by(value, version_ts) * 100) AS BIGINT) AS value_cents
-        FROM q20_upsert_mem GROUP BY key, qualifier
-        """
-    )
-
-
-@register(
-    "q23_streaming_dedup",
-    f"""
-    WITH {TSDB_CELLS_CTE}
-    SELECT DISTINCT
-           CAST(metric_id AS VARCHAR) || '/' || CAST(ts_hour AS VARCHAR)
-             || '/' || tags AS key,
-           CAST(offset_sec AS VARCHAR) AS qualifier
-    FROM cells
-    WHERE metric_id = 0
-      AND ts_hour >= 1704672000 AND ts_hour < 1705276800
-    """,
-)
-def q23_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark dedup driven end-to-end: `dropDuplicatesWithinWatermark`
-    over a finite cell stream — at-least-once ingestion dedup with state
-    bounded by the watermark window (the streaming answer to D3's
-    at-most-one-cell contract). Output projects only the dedup key, so the
-    nondeterministic which-duplicate-wins choice is invisible and the
-    batch oracle is exact (SELECT DISTINCT). Single input file → single
-    micro-batch → no cross-batch late-arrival drops to model."""
-    import shutil
-    import tempfile
-
-    from hbase_bulkload_service_spark.streaming import ops as st
-
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    slim = cells.filter(
-        (F.col("metric_id") == 0)
-        & (F.col("ts_hour") >= 1704672000)
-        & (F.col("ts_hour") < 1705276800)
-    ).select(
-        F.concat_ws(
-            "/",
-            F.col("metric_id").cast("string"),
-            F.col("ts_hour").cast("string"),
-            F.col("tags"),
-        ).alias("key"),
-        F.col("offset_sec").cast("string").alias("qualifier"),
-        "version_ts",
-        F.col("dvalue").alias("value"),
-    )
-    d = tempfile.mkdtemp(prefix="q23cells")
-    try:
-        slim.coalesce(1).write.mode("overwrite").parquet(d)
-        stream = spark.readStream.schema(st.CELL_SCHEMA).parquet(d)
-        deduped = st.streaming_first_seen_dedup(
-            stream.withColumn("event_time", F.timestamp_millis(F.col("version_ts"))),
-            key_cols=("key", "qualifier"),
-        )
-        with _scoped_shuffle_partitions(spark, 8):
-            q = (
-                deduped.select("key", "qualifier")
-                .writeStream.format("memory")
-                .queryName("q23_dedup_mem")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            st.await_finite(q, 300)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table("q23_dedup_mem")
-
-
-@register(
-    "q21_streaming_lookup",
-    """
-    SELECT e.event_id, e.user_id, c.c_name,
-           CAST(FLOOR(e.value * 100) AS BIGINT) AS value_cents
-    FROM events e JOIN customer c
-      ON e.user_id = c.c_custkey
-    WHERE c.c_custkey % 3 = 0
-    """,
-)
-def q21_streaming_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 streaming variant driven end-to-end: event file-stream →
-    stream-static broadcast lookup join on the rowkey → memory sink.
-    Inner semantics: probe rows missing in the dim emit nothing (the
-    filtered dim makes misses real). The stateless join means the finite
-    stream equals the batch join — same SQL oracle."""
-    from hbase_bulkload_service_spark.streaming import ops as st
-
-    schema = load(spark, sf_dir, "events").schema  # sets nanosAsLong first
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    dim = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 3 == 0)
-        .select(F.col("c_custkey").alias("rowkey"), "c_name")
-    )
-    joined = st.streaming_lookup_join(stream, "user_id", dim).select(
-        "event_id",
-        "user_id",
-        "c_name",
-        F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("q21_lookup_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    st.await_finite(q, 300)
-    return spark.table("q21_lookup_mem")
-
-
-@register(
-    "q17_asof_join",
-    """
-    WITH probe AS (
-      SELECT event_id, user_id, epoch_ms(ts) AS ts_ms
-      FROM events WHERE event_type = 'click'
-    ),
-    build AS (
-      SELECT user_id, epoch_ms(ts) AS bts,
-             MAX(CAST(FLOOR(value * 100) AS BIGINT)) AS pc
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY user_id, epoch_ms(ts)
-    )
-    SELECT p.event_id, p.user_id, p.ts_ms AS click_ms,
-           b.bts AS purchase_ms, b.pc AS purchase_cents
-    FROM probe p ASOF LEFT JOIN build b
-      ON p.user_id = b.user_id AND p.ts_ms >= b.bts
-    """,
-)
-def q17_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 event-time upgrade — as-of join (latest purchase at-or-before each
-    click, per user). The reference's lookup join is the processing-time
-    special case (HBaseRowDataLookupFunction.java:76-86)."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ev = load_events(spark, sf_dir, spread=True)
-    probe = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts_ms"
-    )
-    build = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts_ms", cents(F.col("value")).alias("purchase_cents")
-    )
-    return tbl.asof_join(build=build, probe=probe, key="user_id", ts="ts_ms").select(
-        "event_id",
-        "user_id",
-        F.col("ts_ms").alias("click_ms"),
-        F.col("asof_ts_ms").alias("purchase_ms"),
-        F.col("asof_purchase_cents").alias("purchase_cents"),
-    )
-
-
-@register(
-    "q18_session_windows",
-    """
-    WITH e AS (
-      SELECT user_id, epoch_ms(ts) AS ts_ms, value FROM events
-    ),
-    m AS (
-      SELECT user_id, ts_ms, value,
-             CASE WHEN lag(ts_ms) OVER w IS NULL
-                    OR ts_ms - lag(ts_ms) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS new_s
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_ms)
-    ),
-    s AS (
-      SELECT user_id, ts_ms, value,
-             SUM(new_s) OVER (
-               PARTITION BY user_id ORDER BY ts_ms ROWS UNBOUNDED PRECEDING
-             ) AS session_seq
-      FROM m
-    )
-    SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-           MIN(ts_ms) AS session_start_ms, MAX(ts_ms) AS session_end_ms,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-    FROM s GROUP BY user_id, session_seq
-    """,
-)
-def q18_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 new-capability — session windows (30-min gap) via gaps-and-islands;
-    session membership is tie-order-independent, so cross-engine stable."""
-    ev = load_events(spark, sf_dir, spread=True)
-    return tsdb.sessionize(ev).select(
-        "user_id",
-        F.col("session_seq").cast("long").alias("session_seq"),
-        "session_start_ms",
-        "session_end_ms",
-        "n_events",
-        "sum_value_cents",
-    )
-
-
-# ===========================================================================
-# htable surface — A4/A7/C1/C2 scans, A8 point get, E3 SQL agg, serde
-# round-trip (FIXTURES.md §3)
-# ===========================================================================
-
-HTABLE_CTE = """
-htable AS (
-  SELECT lpad(CAST(c_custkey AS VARCHAR), 12, '0') AS rowkey,
-         c_name, c_acctbal, c_nationkey, n_name, c_mktsegment
-  FROM customer JOIN nation ON c_nationkey = n_nationkey
-)
-"""
-
-
-@register(
-    "q06_htable_scan_project",
-    f"""
-    WITH {HTABLE_CTE}
-    SELECT rowkey, c_name AS f1_c_name, n_name AS f2_n_name
-    FROM htable WHERE rowkey < lpad('500', 12, '0')
-    """,
-)
-def q06_htable_scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7/C1/C2 — projected scan with rowkey range; qualifier-level nested
-    projection (exceeds the reference's family-granularity pushdown,
-    AbstractHBaseDynamicTableSource.java:86-90)."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ht = tbl.build_htable(spark, sf_dir).filter(
-        F.col("rowkey") < tbl.rowkey_of_custkey(F.lit(500))
-    )
-    return tbl.scan(ht, {"f1": ["c_name"], "f2": ["n_name"]})
-
-
-@register(
-    "q07_htable_sql_agg",
-    f"""
-    WITH {HTABLE_CTE}
-    SELECT n_name AS f2_n_name,
-           CAST(SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS sum_acctbal_cents,
-           COUNT(*) AS cnt
-    FROM htable GROUP BY n_name
-    """,
-)
-def q07_htable_sql_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3 — the documented SQL surface
-    (AbstractHBaseTableSource.java:54-65: SELECT t.fam2.col1,
-    SUM(t.fam1.col2) FROM hTable t GROUP BY t.fam2.col1)."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ht = tbl.build_htable(spark, sf_dir)
-    return ht.groupBy(F.col("f2.n_name").alias("f2_n_name")).agg(
-        F.sum(cents(F.col("f1.c_acctbal"))).alias("sum_acctbal_cents"),
-        F.count("*").alias("cnt"),
-    )
-
-
-@register(
-    "q08_htable_point_get",
-    f"""
-    WITH {HTABLE_CTE}
-    SELECT rowkey, c_name AS f1_c_name,
-           CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS f1_acctbal_cents,
-           n_name AS f2_n_name
-    FROM htable WHERE rowkey = lpad('42', 12, '0')
-    """,
-)
-def q08_htable_point_get(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 — point get on the nested table (HBaseSerde.createGet:198-214)."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ht = tbl.build_htable(spark, sf_dir)
-    return tbl.point_get(ht, "0" * 10 + "42").select(
-        "rowkey",
-        F.col("f1.c_name").alias("f1_c_name"),
-        cents(F.col("f1.c_acctbal")).alias("f1_acctbal_cents"),
-        F.col("f2.n_name").alias("f2_n_name"),
-    )
-
-
-@register(
-    "q16_delete_rows",
-    f"""
-    WITH {HTABLE_CTE}
-    SELECT rowkey, c_name AS f1_c_name, n_name AS f2_n_name
-    FROM htable h
-    WHERE NOT EXISTS (
-      SELECT 1 FROM customer d
-      WHERE d.c_custkey % 7 = 0 AND lpad(CAST(d.c_custkey AS VARCHAR), 12, '0') = h.rowkey
-    )
-    """,
-)
-def q16_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H5 — delete mutation (HBaseSerde.createDeleteMutation:151-173) as a
-    broadcast left-anti join over the snapshot."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ht = tbl.build_htable(spark, sf_dir)
-    doomed = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 7 == 0)
-        .select(tbl.rowkey_of_custkey(F.col("c_custkey")).alias("rowkey"))
-    )
-    return tbl.delete_rows(ht, doomed).select(
-        "rowkey",
-        F.col("f1.c_name").alias("f1_c_name"),
-        F.col("f2.n_name").alias("f2_n_name"),
-    )
-
-
-@register(
-    "q15_upsert_put",
-    f"""
-    WITH {HTABLE_CTE},
-    puts AS (
-      SELECT lpad(CAST(c_custkey AS VARCHAR), 12, '0') AS rowkey,
-             c_name, c_acctbal + 1000.0 AS c_acctbal, c_nationkey,
-             n_name, 'UPSERTED' AS c_mktsegment
-      FROM customer JOIN nation ON c_nationkey = n_nationkey
-      WHERE c_custkey % 10 = 0
-    ),
-    merged AS (
-      SELECT * FROM htable h
-      WHERE NOT EXISTS (SELECT 1 FROM puts p WHERE p.rowkey = h.rowkey)
-      UNION ALL
-      SELECT * FROM puts
-    )
-    SELECT rowkey, c_name AS f1_c_name,
-           CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS f1_acctbal_cents,
-           c_mktsegment AS f2_mktseg
-    FROM merged
-    """,
-)
-def q15_upsert_put(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H4 — upsert Put mutation batch (HBaseSerde.createPutMutation:119-144)
-    applied to a snapshot: matched keys replaced whole-row, new values win."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ht = tbl.build_htable(spark, sf_dir)
-    puts = ht.filter(
-        F.col("rowkey").cast("long") % 10 == 0
-    ).select(
-        "rowkey",
-        F.struct(
-            F.col("f1.c_name").alias("c_name"),
-            (F.col("f1.c_acctbal") + 1000.0).alias("c_acctbal"),
-            F.col("f1.c_nationkey").alias("c_nationkey"),
-        ).alias("f1"),
-        F.struct(
-            F.col("f2.n_name").alias("n_name"),
-            F.lit("UPSERTED").alias("c_mktsegment"),
-        ).alias("f2"),
-    )
-    return tbl.upsert_rows(ht, puts).select(
-        "rowkey",
-        F.col("f1.c_name").alias("f1_c_name"),
-        cents(F.col("f1.c_acctbal")).alias("f1_acctbal_cents"),
-        F.col("f2.c_mktsegment").alias("f2_mktseg"),
-    )
-
-
-@register(
-    "q09_cells_roundtrip",
-    f"""
-    WITH {HTABLE_CTE}
-    SELECT rowkey, c_name,
-           CAST(FLOOR(c_acctbal * 100) AS BIGINT) AS acctbal_cents,
-           c_nationkey, n_name, c_mktsegment
-    FROM htable
-    """,
-)
-def q09_cells_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/A5 + H4 — nested rows → long-form binary cells (Put serde) →
-    pivot back to nested rows (scan serde); proves the byte codecs
-    round-trip every declared type on real data."""
-    from hbase_bulkload_service_spark.operators import table as tbl
-
-    ht = tbl.build_htable(spark, sf_dir, spread=True)
-    cells = tbl.encode_htable_cells(ht, tbl.HTABLE_SCHEMA)
-    back = tbl.decode_cells_htable(cells, tbl.HTABLE_SCHEMA)
-    return back.select(
-        "rowkey",
-        F.col("f1.c_name").alias("c_name"),
-        cents(F.col("f1.c_acctbal")).alias("acctbal_cents"),
-        F.col("f1.c_nationkey").alias("c_nationkey"),
-        F.col("f2.n_name").alias("n_name"),
-        F.col("f2.c_mktsegment").alias("c_mktsegment"),
-    )
-
-
-# The wave registries (registry_llm, registry_ext, registry_wave4..13)
-# register on import. The chain lives in the PACKAGE __init__, not here:
-# Python initializes the parent package before any submodule, so routing
-# the chain through __init__ guarantees every wave is fully initialized
-# in dependency order even when a test imports one wave directly —
-# chain-at-the-bottom-of-registry left cross-wave fragment imports
-# (DOCS_NORM_CTE, _FUZZY_EDGES_CTE, ...) exposed to partial-init crashes
-# whenever the first import hit a mid-chain module.
+def _orders_row_checks():
+    """The orders row-check suite — shared by q130 (batch audit) and
+    q137 (streaming monitor), whose contract is bit-for-bit equality
+    with this exact suite; a single definition removes drift risk."""
+    return [
+        ("orders_key_not_null", F.col("o_orderkey").isNotNull()),
+        ("orders_status_domain", F.col("o_orderstatus").isin("F", "O", "P")),
+        ("orders_price_positive", F.col("o_totalprice") > 0),
+        ("orders_priority_urgent", F.col("o_orderpriority") == "1-URGENT"),
+    ]

@@ -67,9 +67,11 @@ from __future__ import annotations
 
 import bisect
 import json
+import mmap
 import os
 import struct
 import zlib
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import functions as F
@@ -1094,17 +1096,28 @@ def write_hfile_v3(
 
 # --- verifying reader -------------------------------------------------------
 
-def _open_hfile_v3(fname: str):
-    """Open an HFile v3 the way ``HFile.Reader`` does: seek the fixed
-    trailer (magic + version word), decode the trailer proto, then parse
-    the load-on-open section (root data index, empty meta index, file
-    info, and the general bloom meta when present, walking to the
-    trailer as ``HFileInfo.initMetaAndIndex`` does). Reads no data block
-    and no leaf. Returns (data, meta, codec, root entries, bloom meta or
-    None); ``meta`` holds the trailer fields, ``file_info``,
-    ``data_block_encoding`` and, for a 2-level index, ``midkey``."""
+@contextmanager
+def _mapped(fname: str):
+    """The file mapped read-only, closed on exit: a reader touches only
+    the pages of the blocks it parses, never the whole file."""
     with open(fname, "rb") as f:
-        data = f.read()
+        try:
+            data = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
+        except ValueError:  # mmap refuses a 0-byte file
+            raise AssertionError("file shorter than a v3 trailer") from None
+    with data:
+        yield data
+
+
+def _open_hfile_v3(data):
+    """Open a mapped HFile v3 the way ``HFile.Reader`` does: seek the
+    fixed trailer (magic + version word), decode the trailer proto, then
+    parse the load-on-open section (root data index, empty meta index,
+    file info, and the general bloom meta when present, walking to the
+    trailer as ``HFileInfo.initMetaAndIndex`` does). Reads no data block
+    and no leaf. Returns (meta, codec, root entries, bloom meta or None);
+    ``meta`` holds the trailer fields, ``file_info``,
+    ``data_block_encoding`` and, for a 2-level index, ``midkey``."""
     if len(data) < TRAILER_SIZE_V3:
         raise AssertionError("file shorter than a v3 trailer")
     (version_word,) = struct.unpack_from(">I", data, len(data) - 4)
@@ -1203,7 +1216,7 @@ def _open_hfile_v3(fname: str):
     diff = file_info.get(FI_DATA_BLOCK_ENCODING) == b"DIFF"
     meta["data_block_encoding"] = "DIFF" if diff else "NONE"
     meta["file_info"] = file_info
-    return data, meta, codec, root, bloom_meta
+    return meta, codec, root, bloom_meta
 
 
 def _leaf_entries(data: bytes, leaf: tuple[int, int, bytes], codec: str) -> list:
@@ -1253,70 +1266,71 @@ def read_hfile_v3(fname: str) -> tuple[list, dict]:
     index, checksum-verifying each block and asserting cell order, index
     agreement, entry/LASTKEY/file-info consistency. Returns (cells,
     meta) with cells = [(row, family, qualifier, ts, value)]."""
-    data, meta, codec, entries, bloom_meta = _open_hfile_v3(fname)
-    if meta["num_data_index_levels"] == 2:
-        # root points at inline LEAF_INDEX blocks; expand to data entries
-        data_entries = []
-        for leaf in entries:
-            sub = _leaf_entries(data, leaf, codec)
-            if meta["midkey"]["leaf_offset"] == leaf[0] and not (
-                0 <= meta["midkey"]["entry"] < len(sub)
-            ):
-                raise AssertionError("mid-key entry outside its leaf")
-            data_entries.extend(sub)
-        entries = data_entries
-    diff = meta["data_block_encoding"] == "DIFF"
+    with _mapped(fname) as data:
+        meta, codec, entries, bloom_meta = _open_hfile_v3(data)
+        if meta["num_data_index_levels"] == 2:
+            # root points at inline LEAF_INDEX blocks; expand to data entries
+            data_entries = []
+            for leaf in entries:
+                sub = _leaf_entries(data, leaf, codec)
+                if meta["midkey"]["leaf_offset"] == leaf[0] and not (
+                    0 <= meta["midkey"]["entry"] < len(sub)
+                ):
+                    raise AssertionError("mid-key entry outside its leaf")
+                data_entries.extend(sub)
+            entries = data_entries
+        diff = meta["data_block_encoding"] == "DIFF"
 
-    # data blocks through the index
-    cells = []
-    prev_key = prev_order = None
-    prev_off = -1
-    n_rows_distinct = 0
-    prev_row = None
-    for i, entry in enumerate(entries):
-        kvs, prev = _data_block_cells(data, entry, codec, diff)
-        if prev != prev_off:
-            raise AssertionError(f"prevBlockOffset chain broken at block {i}")
-        prev_off = entry[0]
-        block_first = None
-        for key, value in kvs:
-            if block_first is None:
-                block_first = key
-            row, fam, qual, ts, typ = decode_cell_key(key)
-            order = _cell_order(row, fam, qual, ts)
-            if prev_key is not None and order < prev_order:
-                raise AssertionError("cells out of order")
-            prev_key, prev_order = key, order
-            if typ != KEYVALUE_TYPE_PUT:
-                raise AssertionError(f"unexpected cell type {typ}")
-            if row != prev_row:
-                n_rows_distinct += 1
-                prev_row = row
-            cells.append((row, fam, qual, ts, value))
-        if block_first != entry[2]:
-            raise AssertionError(f"index first-key disagrees for block {i}")
-        if bloom_meta is not None and not _bloom_contains(
-            data, bloom_meta, decode_cell_key(block_first)[0], codec
-        ):
-            raise AssertionError(
-                f"bloom false-negative on block {i}'s first row"
-            )
-    if len(cells) != meta["entry_count"]:
-        raise AssertionError("trailer entry_count disagrees")
-    if prev_key != meta["file_info"].get(FI_LASTKEY):
-        raise AssertionError("file-info LASTKEY disagrees")
-    if bloom_meta is not None:
-        if bloom_meta["key_count"] != n_rows_distinct:
-            raise AssertionError("bloom keyCount != distinct row count")
-        meta["bloom"] = {
-            "chunks": len(bloom_meta["chunks"]),
-            "key_count": bloom_meta["key_count"],
-            "total_bytes": bloom_meta["total_bytes"],
-        }
-    meta["rows"] = len(cells)
-    meta["min_key_hex"] = cells[0][0].hex().upper()
-    meta["max_key_hex"] = cells[-1][0].hex().upper()
-    return cells, meta
+        # data blocks through the index
+        cells = []
+        prev_key = prev_order = None
+        prev_off = -1
+        n_rows_distinct = 0
+        prev_row = None
+        for i, entry in enumerate(entries):
+            kvs, prev = _data_block_cells(data, entry, codec, diff)
+            if prev != prev_off:
+                raise AssertionError(f"prevBlockOffset chain broken at block {i}")
+            prev_off = entry[0]
+            block_first = None
+            for key, value in kvs:
+                if block_first is None:
+                    block_first = key
+                row, fam, qual, ts, typ = decode_cell_key(key)
+                order = _cell_order(row, fam, qual, ts)
+                if prev_key is not None and order < prev_order:
+                    raise AssertionError("cells out of order")
+                prev_key, prev_order = key, order
+                if typ != KEYVALUE_TYPE_PUT:
+                    raise AssertionError(f"unexpected cell type {typ}")
+                if row != prev_row:
+                    n_rows_distinct += 1
+                    prev_row = row
+                cells.append((row, fam, qual, ts, value))
+            if block_first != entry[2]:
+                raise AssertionError(f"index first-key disagrees for block {i}")
+            if bloom_meta is not None and not _bloom_contains(
+                data, bloom_meta, decode_cell_key(block_first)[0], codec
+            ):
+                raise AssertionError(
+                    f"bloom false-negative on block {i}'s first row"
+                )
+        if len(cells) != meta["entry_count"]:
+            raise AssertionError("trailer entry_count disagrees")
+        if prev_key != meta["file_info"].get(FI_LASTKEY):
+            raise AssertionError("file-info LASTKEY disagrees")
+        if bloom_meta is not None:
+            if bloom_meta["key_count"] != n_rows_distinct:
+                raise AssertionError("bloom keyCount != distinct row count")
+            meta["bloom"] = {
+                "chunks": len(bloom_meta["chunks"]),
+                "key_count": bloom_meta["key_count"],
+                "total_bytes": bloom_meta["total_bytes"],
+            }
+        meta["rows"] = len(cells)
+        meta["min_key_hex"] = cells[0][0].hex().upper()
+        meta["max_key_hex"] = cells[-1][0].hex().upper()
+        return cells, meta
 
 
 # --- Spark integration ------------------------------------------------------
@@ -1517,10 +1531,10 @@ def _row_candidates(entries: list, row: bytes):
 
 def seek_row_hfile_v3(fname: str, row: bytes, stats: dict | None = None) -> list:
     """Point-get through the bloom + block index — the read path a
-    region server serves from these files: open the file's trailer +
-    load-on-open metadata only (:func:`_open_hfile_v3`); if the file
-    carries a ROW bloom, probe it FIRST and return empty on a negative
-    without touching any data block
+    region server serves from these files: map the file read-only and
+    parse its trailer + load-on-open metadata only
+    (:func:`_open_hfile_v3`); if the file carries a ROW bloom, probe it
+    FIRST and return empty on a negative without touching any data block
     (``StoreFileReader.passesGeneralRowBloomFilter`` — the short-circuit
     that makes point-gets on absent rows ~free); otherwise binary-search
     the index (root, then only the leaves that can hold the row) and
@@ -1530,29 +1544,30 @@ def seek_row_hfile_v3(fname: str, row: bytes, stats: dict | None = None) -> list
     if stats is None:
         stats = {}
     stats.update(bloom_checked=False, bloom_negative=False, data_blocks_read=0)
-    data, meta, codec, entries, bloom_meta = _open_hfile_v3(fname)
-    if bloom_meta is not None:
-        stats["bloom_checked"] = True
-        if not _bloom_contains(data, bloom_meta, row, codec):
-            stats["bloom_negative"] = True
-            return []
-    if meta["num_data_index_levels"] == 2:
-        # two-step seek: the root stays small, and only the leaves that
-        # can hold the row are read
-        entries = [
-            e
-            for leaf in _row_candidates(entries, row)
-            for e in _leaf_entries(data, leaf, codec)
-        ]
-    diff = meta["data_block_encoding"] == "DIFF"
-    cells = []
-    for entry in _row_candidates(entries, row):
-        kvs, _ = _data_block_cells(data, entry, codec, diff)
-        stats["data_blocks_read"] += 1
-        for key, value in kvs:
-            r, fam, qual, ts, _typ = decode_cell_key(key)
-            if r == row:
-                cells.append((r, fam, qual, ts, value))
-            elif r > row:
-                return cells
-    return cells
+    with _mapped(fname) as data:
+        meta, codec, entries, bloom_meta = _open_hfile_v3(data)
+        if bloom_meta is not None:
+            stats["bloom_checked"] = True
+            if not _bloom_contains(data, bloom_meta, row, codec):
+                stats["bloom_negative"] = True
+                return []
+        if meta["num_data_index_levels"] == 2:
+            # two-step seek: the root stays small, and only the leaves that
+            # can hold the row are read
+            entries = [
+                e
+                for leaf in _row_candidates(entries, row)
+                for e in _leaf_entries(data, leaf, codec)
+            ]
+        diff = meta["data_block_encoding"] == "DIFF"
+        cells = []
+        for entry in _row_candidates(entries, row):
+            kvs, _ = _data_block_cells(data, entry, codec, diff)
+            stats["data_blocks_read"] += 1
+            for key, value in kvs:
+                r, fam, qual, ts, _typ = decode_cell_key(key)
+                if r == row:
+                    cells.append((r, fam, qual, ts, value))
+                elif r > row:
+                    return cells
+        return cells

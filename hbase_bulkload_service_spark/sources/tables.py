@@ -36,14 +36,43 @@ TS_LINEAGE = "tsdb.ts_lineage"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
-    if name == "events":
-        # The fixtures and the benchmark's events files store ``ts`` as
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads as
-        # TIMESTAMP_NTZ. A file written with TIMESTAMP(NANOS) is rejected
-        # by the vectorized reader unless nanos are read as raw longs.
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events" and _ts_is_nanos(path):
+        # The vectorized reader rejects a TIMESTAMP(NANOS) column unless
+        # nanos are read as raw longs; the key is read when the scan runs,
+        # so it is set on the session, and only for such a file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     return spread_scan(df) if spread else df
+
+
+def _ts_is_nanos(path: str) -> bool:
+    """True when the ``ts`` column of the parquet at ``path`` (a file, or
+    a directory of part files sharing one schema, partitioned or not) is
+    TIMESTAMP(NANOS). The fixtures and the benchmark's events store
+    TIMESTAMP(MICROS), which Spark reads as TIMESTAMP_NTZ. Read from the
+    footer's parquet schema, not the arrow schema, which also shows INT96
+    as ``ns``. A path that is not on the local file system reads as not
+    NANOS, and Spark's own read reports a missing one."""
+    import pyarrow.parquet as pq
+
+    if not os.path.exists(path):
+        return False
+    hidden = ("_", ".")
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(hidden))
+        parts = sorted(f for f in files if f.endswith(".parquet") and not f.startswith(hidden))
+        if parts:
+            path = os.path.join(root, parts[0])
+            break
+    else:
+        if os.path.isdir(path):
+            return False
+    schema = pq.read_metadata(path).schema
+    if "ts" not in schema.names:
+        return False
+    lt = schema.column(schema.names.index("ts")).logical_type
+    return lt.type == "TIMESTAMP" and "timeUnit=nanoseconds" in str(lt)
 
 
 def spread_scan(df: DataFrame) -> DataFrame:

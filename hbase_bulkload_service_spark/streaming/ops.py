@@ -485,101 +485,6 @@ def streaming_expectations(stream_df, row_checks):
     )
 
 
-def streaming_latest_version_tws(cells):
-    """streaming_latest_version on Spark 4's ``transformWithState``
-    API — the successor of applyInPandasWithState (SPARK-46815):
-    named, schema'd state cells on the RocksDB state-store provider,
-    per-state TTL, timers, and composite state types the old API cannot
-    express. Functionally IDENTICAL to streaming_latest_version by
-    construction (pinned in test_streaming_tws: same finite replay,
-    bit-equal output), so pipelines can migrate by swapping the call.
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (transformWithState rejects the default
-    HDFS-backed provider); the test sets it per-query via the writer —
-    at cluster scale RocksDB is what you want anyway (state spills to
-    local SSD instead of executor heap).
-
-    State/scale shape is unchanged: ONE (version_ts, value) row per
-    (key, qualifier), update-mode changelog output.
-
-    Dependency gate: the transformWithState Python state client speaks
-    protobuf to the JVM (pyspark/sql/streaming/proto/StateMessage_pb2);
-    without the ``protobuf`` package the DRIVER WORKER crashes with an
-    opaque XXKST stream failure mid-query — check up front and fail
-    with the actual reason instead (this container ships no protobuf,
-    so the equality test skips; the operator is exercised wherever
-    protobuf exists).
-    """
-    import importlib.util
-
-    try:  # find_spec raises if the parent 'google' namespace is absent
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        raise ImportError(
-            "streaming_latest_version_tws needs the 'protobuf' package: "
-            "transformWithState's Python state client is protobuf-based "
-            "(pyspark.sql.streaming.proto.StateMessage_pb2); without it "
-            "the TWS driver worker crashes opaquely (XXKST)"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _LatestProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "latest", _LATEST_STATE_SCHEMA
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            cur = self._state.get() if self._state.exists() else None
-            best_ts = cur[0] if cur is not None else None
-            best_val = cur[1] if cur is not None else None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                # deterministic same-version tie-break: max VALUE among
-                # max-version rows — the batch operator's tie_col=value
-                # ordering (max over (ts, value) is associative, so the
-                # outcome is independent of row order AND of where the
-                # micro-batch boundaries fall across replays)
-                mx = pdf["version_ts"].max()
-                ts = int(mx)
-                val = float(pdf.loc[pdf["version_ts"] == mx, "value"].max())
-                if (
-                    best_ts is None
-                    or ts > best_ts
-                    or (ts == best_ts and val > best_val)
-                ):
-                    best_ts, best_val = ts, val
-            if best_ts is not None and (
-                cur is None or (best_ts, best_val) != (cur[0], cur[1])
-            ):
-                self._state.update((best_ts, best_val))
-                yield pd.DataFrame(
-                    {
-                        "key": [key[0]],
-                        "qualifier": [key[1]],
-                        "version_ts": [best_ts],
-                        "value": [best_val],
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return cells.groupBy("key", "qualifier").transformWithStateInPandas(
-        statefulProcessor=_LatestProcessor(),
-        outputStructType=_LATEST_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_counter_rate(
     samples, drop_resets: bool = False, counter_max: int | None = None
 ):

@@ -1,7 +1,7 @@
 """Round-5 invariants: the SemDeDup centroid-count rule + two-level
 coarse-quantizer assignment (similarity.k_for / semantic_dedup), and
 differential DuckDB gates for the unrolled BPE oracle CTE chains
-(registry_wave7 q110/q111) on planted adversarial corpora."""
+(queries/text.py q110/q111) on planted adversarial corpora."""
 
 from __future__ import annotations
 

@@ -177,6 +177,20 @@ def test_load_events_marks_ts_and_ts_ms(spark, sf_dir):
     assert not derived_from_ts(ev.drop("ts"), "ts_ms", "ts_ms")
 
 
+def test_loading_micros_events_leaves_session_conf_alone(spark, sf_dir):
+    """The fixtures store ``ts`` as TIMESTAMP(MICROS): loading them sets
+    no session key. Only a TIMESTAMP(NANOS) file needs nanosAsLong."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        load_events(spark, sf_dir)
+        assert spark.conf.get(key, None) is None
+    finally:
+        if old is not None:
+            spark.conf.set(key, old)
+
+
 def _in_group(spark, group, build):
     """``build()`` under job group ``group``: (its result, the jobs it ran)."""
     sc = spark.sparkContext

@@ -229,9 +229,9 @@ def test_cooccurrence_rejects_bad_band(spark):
 def test_rollup_gate_plans_single_expand_aggregate(spark, sf_dir):
     """q131 must plan ONE Expand + hash aggregate over ONE scan — not a
     union of three separate aggregations."""
-    from hbase_bulkload_service_spark import registry_wave10 as w10
+    from hbase_bulkload_service_spark.queries.analytics import q131_rollup_totals
 
-    df = w10.q131_rollup_totals(spark, sf_dir)
+    df = q131_rollup_totals(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Expand") == 1
     assert plan.count("ReadSchema") == 1  # exactly one parquet scan

@@ -123,7 +123,7 @@ def test_streaming_expectations_rejects_empty(spark):
 def test_streaming_expectations_finite_stream_matches_batch(spark, sf_dir):
     """The actual streaming path (availableNow replay over orders)
     equals the batch evaluation of the same predicates."""
-    from hbase_bulkload_service_spark.registry_wave12 import (
+    from hbase_bulkload_service_spark.queries.streaming import (
         q137_streaming_expectations,
     )
 
@@ -270,7 +270,7 @@ def test_streaming_expectations_rejects_duplicate_names(spark):
 def test_corpus_build_manifest_is_deterministic_and_capped(spark, sf_dir):
     """The composed funnel->sample->manifest pipeline must reproduce the
     identical manifest across runs and never exceed the stratum cap."""
-    from hbase_bulkload_service_spark.registry_wave12 import (
+    from hbase_bulkload_service_spark.queries.curation import (
         _CAP139,
         q139_corpus_build_e2e,
     )

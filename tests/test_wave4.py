@@ -130,7 +130,7 @@ def test_repetition_stats_hand_computed(spark):
 # ---------------------------------------------------------------------------
 
 def test_semi_anti_partition_orders(spark):
-    from hbase_bulkload_service_spark.registry_wave4 import q80_semi_anti_returns
+    from hbase_bulkload_service_spark.queries.analytics import q80_semi_anti_returns
 
     out = q80_semi_anti_returns(spark, SF_DIR)
     total = out.agg(F.sum("n_orders")).collect()[0][0]
@@ -138,7 +138,7 @@ def test_semi_anti_partition_orders(spark):
 
 
 def test_market_share_bounds(spark):
-    from hbase_bulkload_service_spark.registry_wave4 import q82_market_share
+    from hbase_bulkload_service_spark.queries.analytics import q82_market_share
 
     for r in q82_market_share(spark, SF_DIR).collect():
         assert 0 <= r["brand_cents"] <= r["total_cents"]
@@ -343,7 +343,7 @@ def test_runtime_bloom_filter_injects_on_gate_query(spark):
     side — q95 pins the thresholds during its logical optimization and
     restores them before returning, so the scale plan is in the memoized
     QueryExecution while the session confs stay stock."""
-    from hbase_bulkload_service_spark.registry_wave4 import q95_bloom_dim_join
+    from hbase_bulkload_service_spark.queries.analytics import q95_bloom_dim_join
 
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     out = q95_bloom_dim_join(spark, SF_DIR)

@@ -307,7 +307,7 @@ def test_q125_permissive_corrupt_classification(spark, sf_dir):
     `_corrupt` (no false positives from well-formed lines) and parse
     every clean row losslessly, so the good-row checksum equals the one
     computed straight off the parquet base table."""
-    from hbase_bulkload_service_spark.registry_wave8 import q125_corrupt_records
+    from hbase_bulkload_service_spark.queries.bulkload import q125_corrupt_records
     from hbase_bulkload_service_spark.sources.tables import load_events
 
     out = q125_corrupt_records(spark, sf_dir).collect()[0]
@@ -347,7 +347,7 @@ def test_sketch_accuracy_keeps_null_key_group(spark):
 def test_gate_scratch_dirs_are_unique_per_call():
     """A re-run must not overwrite part files an earlier call's lazy
     readback frame still references."""
-    from hbase_bulkload_service_spark.registry_wave4 import _scratch
+    from hbase_bulkload_service_spark.queries.bulkload import _scratch
 
     a, b = _scratch("probe"), _scratch("probe")
     assert a != b

@@ -1,6 +1,6 @@
 """Re-emit QUERIES.md from registry docstrings (one row per registered
 query, first docstring sentence-block flattened and truncated). Run after
-any wave lands so the index never drifts from the registry."""
+any query changes so the index never drifts from the registry."""
 
 from __future__ import annotations
 

@@ -46,7 +46,7 @@ OPERATOR_DIRS = ["hbase_bulkload_service_spark/operators", "hbase_bulkload_servi
 #     correct 100 TB trade.
 #   derived-from-cache: the frame's input is already persisted by this
 #     operator, so re-evaluation reads the cache, not the corpus.
-#   fixture-branch: registry-level fixture synthesis, adjudicated there.
+#   fixture-branch: query-level fixture synthesis, adjudicated there.
 #   not-a-fanout: AST false positive (rebound per branch, single use).
 ALLOWLIST: dict[tuple[str, str], dict] = {
     ("histogram_drift", "per_bin"): {"note": "reuse-covered (q148 probe: 1 ReusedExchange, scans = the two input sides)", "fn_sha": "729b8848f3b3"},
@@ -73,7 +73,7 @@ ALLOWLIST: dict[tuple[str, str], dict] = {
     ("token_tvd", "totals"): {"note": "derived-from-cache (sw is persisted; totals is a sources-bounded agg over the cache)", "fn_sha": "ca5b88a0f317"},
     ("stale_series", "last"): {"note": "reuse-covered (q158 probe: no duplicated scan)", "fn_sha": "1017cedaa281"},
     ("vocab_concentration", "counts"): {"note": "reuse-covered (q224 probe: no duplicated scan — totals and the TakeOrdered cut share the word-keyed exchange; re-adjudicated r08 after the empty-corpus filter, which sits ABOVE the fan-out and does not change it)", "fn_sha": "c1444c58c161"},
-    # registry-level (fixture/gate construction; the q204 class lives here)
+    # query-level (fixture/gate construction; the q204 class lives here)
     ("q95_bloom_dim_join", "out"): {"note": "not-a-fanout (one reference forces optimizedPlan under pinned runtime-filter confs — memoized by QueryExecution — the other is the return; the dim's two scans are the bloom creation + join build, by design)", "fn_sha": "206a4389621b"},
 }
 
@@ -220,17 +220,17 @@ def _module_paths(repo: str):
         for fname in sorted(os.listdir(full)):
             if fname.endswith(".py"):
                 yield os.path.join(d, fname)
-    # registry modules construct fixtures/gates — the q204 class
+    # query modules construct fixtures/gates — the q204 class
     # (fixture frame fanned into several consumers) lives here
-    pkg = "hbase_bulkload_service_spark"
+    pkg = os.path.join("hbase_bulkload_service_spark", "queries")
     for fname in sorted(os.listdir(os.path.join(repo, pkg))):
-        if fname.startswith("registry") and fname.endswith(".py"):
+        if fname.endswith(".py"):
             yield os.path.join(pkg, fname)
 
 
 def sweep(repo: str) -> tuple[list[dict], list[dict], list[dict]]:
     """Return (unadjudicated, allowlisted, stale) findings across the
-    operator and registry modules. ``stale`` = allowlisted entries whose
+    operator and query modules. ``stale`` = allowlisted entries whose
     adjudicated function's content hash no longer matches the hash
     recorded at adjudication time — the probe note may no longer
     describe the code."""

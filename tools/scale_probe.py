@@ -4,7 +4,7 @@ and the q59 zero-Exchange bucketed join — at an sf1-equivalent scale
 is never touched) and record per-phase shuffle sizes, proving the
 range-exchange and bucketed-join claims hold beyond sf0.1.
 
-The bulkload phase runs q56's own pipeline (``registry_ext.flagship_kv``
+The bulkload phase runs q56's own pipeline (``queries.bulkload.flagship_kv``
 into ``hfile.write_hfiles(..., rollup=True)``) over amplified events.
 The window phase then runs one ``BulkloadService`` request per window
 width over the same events and records its scan stage (the longest
@@ -101,7 +101,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from hbase_bulkload_service_spark.operators import maintenance as mnt
-    from hbase_bulkload_service_spark.registry_ext import flagship_kv
+    from hbase_bulkload_service_spark.queries.bulkload import flagship_kv
     from hbase_bulkload_service_spark.sources import hfile
     from hbase_bulkload_service_spark.sources.tables import load
 
