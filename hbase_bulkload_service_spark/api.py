@@ -141,8 +141,8 @@ class BulkloadService:
         sliced = tsdb.hour_range_filter(cells, req.start_time, req.end_time)
         kv = tsdb.bulkload_kv(sliced)
         # rollup routing (TsdbBulkload.java:62-69): rollup jobs write the
-        # 8-buckets-per-region layout (autoLoad = !rollup, :163).
-        hfile.write_hfiles(
+        # 8-buckets-per-region layout (autoLoad = !rollup, :163). The
+        # writer checks the layout adoption needs before it commits.
+        return hfile.write_hfiles(
             kv, out, rollup=req.rollup, num_partitions=req.parallelism
         )
-        return hfile.validate_layout(out, rollup=req.rollup)

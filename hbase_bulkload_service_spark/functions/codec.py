@@ -204,48 +204,66 @@ def floor_to_hour_ms(ts_ms: Column) -> Column:
     return ts_ms - ts_ms % F.lit(3600 * 1000)
 
 
+def ts_literal(dt, ms: int) -> Column | None:
+    """A literal of timestamp type ``dt`` at epoch millis ``ms``, or None
+    when ``dt`` cannot hold it: a long of nanos for a ``ts`` read as long,
+    else a typed literal, which a scan can push down. An NTZ literal is the
+    UTC wall clock (the :func:`epoch_millis` convention) and an LTZ one
+    names UTC, so neither depends on the session timezone. The literal
+    text is parsed by SQL, never built through ``F.lit(datetime)``: that
+    converts through the OS timezone and an NTZ cast then re-renders in the
+    SESSION timezone, which agree only when the two zones do.
+    """
+    import datetime as _dt
+
+    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+
+    if isinstance(dt, LongType):  # nanos read as long
+        nanos = ms * 1_000_000
+        return F.lit(nanos) if -(2**63) <= nanos < 2**63 else None
+    try:
+        wall = (_dt.datetime(1970, 1, 1) + _dt.timedelta(milliseconds=ms)).isoformat(" ")
+    except OverflowError:
+        return None
+    if isinstance(dt, TimestampNTZType):
+        return F.expr(f"TIMESTAMP_NTZ '{wall}'")
+    if isinstance(dt, TimestampType):
+        return F.expr(f"TIMESTAMP '{wall}Z'")
+    return None
+
+
 def ts_at_most_ms(df, colname: str, ms: int) -> Column:
     """Pushdown-friendly ``col <= epoch-millis`` predicate on a timestamp
-    column: compares against a typed timestamp literal instead of wrapping
-    the column in epoch arithmetic (a wrapped column defeats parquet
-    row-group pruning — the scan would push only IsNotNull).
+    column: compares against a typed timestamp literal (:func:`ts_literal`)
+    instead of wrapping the column in epoch arithmetic (a wrapped column
+    defeats parquet row-group pruning — the scan would push only
+    IsNotNull).
 
     NTZ columns compare wall-clock-as-UTC (same convention as
     :func:`epoch_millis`); LTZ columns compare in absolute time. Both are
     session-timezone-proof.
     """
-    import datetime as _dt
-
-    from pyspark.sql.types import TimestampNTZType
-
-    dt = df.schema[colname].dataType
-    naive_utc = _dt.datetime.fromtimestamp(ms / 1000, tz=_dt.timezone.utc).replace(
-        tzinfo=None
-    )
-    if isinstance(dt, TimestampNTZType):
-        # a TIMESTAMP_NTZ 'literal' parses timezone-free. `F.lit(datetime)`
-        # would NOT be: lit→micros uses the OS timezone while a subsequent
-        # NTZ cast re-renders in the SESSION timezone — the conversions only
-        # cancel when the two zones agree (they silently diverge under e.g.
-        # spark.sql.session.timeZone=America/New_York; caught by TZ probe).
-        return F.col(colname) <= F.expr(
-            f"TIMESTAMP_NTZ '{naive_utc.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-        )
-    return F.col(colname) <= F.timestamp_millis(F.lit(ms))
+    bound = ts_literal(df.schema[colname].dataType, ms)
+    if bound is None:
+        raise ValueError(f"{colname}: no timestamp literal at {ms} ms")
+    return F.col(colname) <= bound
 
 
 def epoch_millis(df, colname: str) -> Column:
     """Timezone-proof epoch-millis of a timestamp column.
 
     Parquet timestamps may surface as TIMESTAMP_NTZ (Spark 4 default
-    inference) or TIMESTAMP_LTZ depending on session config. For NTZ the
+    inference), TIMESTAMP_LTZ, or a long of nanos (a TIMESTAMP(NANOS) file
+    read with ``spark.sql.legacy.parquet.nanosAsLong``). For NTZ the
     wall-clock is treated as UTC (matching DuckDB's ``epoch_ms`` on naive
     timestamps) via pure wall-clock arithmetic — no session-timezone
     dependency either way.
     """
-    from pyspark.sql.types import TimestampNTZType
+    from pyspark.sql.types import LongType, TimestampNTZType
 
     dt = df.schema[colname].dataType
+    if isinstance(dt, LongType):
+        return F.expr(f"{colname} div 1000000")
     if isinstance(dt, TimestampNTZType):
         return F.expr(
             f"timestampdiff(MILLISECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {colname})"

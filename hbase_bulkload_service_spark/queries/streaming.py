@@ -14,6 +14,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hbase_bulkload_service_spark.functions.codec import epoch_millis
 from hbase_bulkload_service_spark.operators import tsdb
 from hbase_bulkload_service_spark.oracle_frags import (
     _BL_LIST,
@@ -52,8 +53,6 @@ def q19_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + tumbling 5-min window agg → memory sink (availableNow).
     Complete output mode makes the finite-stream result equal the batch
     rollup, so the SAME SQL oracle gates the streaming operator."""
-    from pyspark.sql.types import LongType, TimestampNTZType
-
     from hbase_bulkload_service_spark.streaming import ops as st
 
     schema = load(spark, sf_dir, "events").schema  # sets nanosAsLong first if ts is NANOS
@@ -62,21 +61,11 @@ def q19_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    dt = schema["ts"].dataType
-    if isinstance(dt, LongType):  # TIMESTAMP(NANOS) read as long
-        ts_evt = F.timestamp_micros(F.expr("ts div 1000"))
-    elif isinstance(dt, TimestampNTZType):
-        # wall-clock-as-UTC via pure wall-clock arithmetic (epoch_millis
-        # convention). to_utc_timestamp(ntz, 'UTC') is NOT that: Spark
-        # first casts NTZ→instant through the SESSION timezone, shifting
-        # every window by the zone offset (caught by the TZ probe).
-        ts_evt = F.timestamp_millis(
-            F.expr(
-                "timestampdiff(MILLISECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-            )
-        )
-    else:
-        ts_evt = F.col("ts")
+    # the event time as an instant through epoch_millis (NTZ read as the
+    # UTC wall clock). to_utc_timestamp(ntz, 'UTC') is NOT that: Spark
+    # first casts NTZ→instant through the SESSION timezone, shifting
+    # every window by the zone offset (caught by the TZ probe).
+    ts_evt = F.timestamp_millis(epoch_millis(stream, "ts"))
     rolled = st.streaming_rollup_5m(
         stream.withColumn("ts_evt", ts_evt), ts_col="ts_evt"
     )

@@ -15,6 +15,7 @@ from hbase_bulkload_service_spark.functions.codec import (
     decode_int_be,
     epoch_millis,
 )
+from hbase_bulkload_service_spark.functions.hashes import salt_bucket
 from hbase_bulkload_service_spark.operators import maintenance, tsdb
 from hbase_bulkload_service_spark.operators import table as tbl
 from hbase_bulkload_service_spark.oracle_frags import (
@@ -136,8 +137,11 @@ def q05_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q10_salt_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D1 — bit-exact Java Arrays.hashCode salting (TsdbBulkload.java:81-114)."""
     cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    salted = tsdb.with_salt(cells)
-    return salted.select("metric_id", "tags", "bucket").distinct()
+    bucket = salt_bucket(
+        tsdb.salt_base_bytes(F.col("metric_id"), F.col("tags")),
+        tsdb.DEFAULT_BUCKET_COUNT,
+    )
+    return cells.select("metric_id", "tags", bucket.alias("bucket")).distinct()
 
 
 @register(
@@ -160,14 +164,12 @@ def q10_salt_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_latest_version_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3/E1 — newest-version-wins dedup (TsdbBulkload.java:129-139), done
     through the *binary* rowkey/qualifier/value codecs and decoded back —
-    exercises I1/I5 end-to-end. Same-version collisions are collapsed
-    deterministically (max value) first."""
+    exercises I1/I5 end-to-end. A same-version collision goes to the
+    greater value inside the dedup's one aggregate: the big-endian bytes
+    of a non-negative double order as its value, so this is the oracle's
+    MAX(dvalue) collapse with no second shuffle."""
     cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
-    c1 = cells.groupBy("rowkey", "qualifier", "version_ts").agg(
-        F.max("dvalue").alias("dvalue")
-    )
-    c1 = c1.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    deduped = tsdb.latest_version_dedup(c1, key_cols=("rowkey", "qualifier"))
+    deduped = tsdb.latest_version_dedup(cells, key_cols=("rowkey", "qualifier"))
     return deduped.select(
         decode_int_be(F.expr("substring(rowkey, 1, 3)"), 3).cast("int").alias("metric_id"),
         decode_int_be(F.expr("substring(rowkey, 4, 4)"), 4).alias("ts_hour"),

@@ -114,8 +114,10 @@ def write_hfiles(
     per region. Pass a count only to pin a layout.
 
     The manifest is built from the written files' parquet footers after
-    Spark's commit (:func:`build_manifest`), no data is read back; it is
-    the commit marker :func:`validate_layout` requires. Files and manifest
+    Spark's commit (:func:`build_manifest`), no data is read back, and
+    that pass also runs adoption's checks: a layout :func:`validate_layout`
+    would refuse raises here, before the commit. The manifest is the
+    commit marker :func:`validate_layout` requires. Files and manifest
     land in a staging dir that :func:`commit_dir` swaps into ``path``, so
     a write that fails at any step leaves the previous output adoptable
     and a retry replaces it whole.
@@ -128,7 +130,7 @@ def write_hfiles(
             .option("compression", "snappy")
             .parquet(staging)
         )
-        m = build_manifest(staging)
+        m = build_manifest(staging, rollup)
         write_manifest(staging, m)
         return m
 
@@ -265,10 +267,11 @@ def _check_records(records: list[dict], rollup: bool) -> dict:
     return manifest
 
 
-def build_manifest(path: str) -> dict:
+def build_manifest(path: str, rollup: bool) -> dict:
     """``{"regions": {"<region>": {rows, min_key_hex, max_key_hex}}}`` of
-    a parquet layout, from its file footers."""
-    return _manifest(_file_records(path))
+    a parquet layout, from its file footers, after adoption's checks on
+    them (:func:`_check_records`)."""
+    return _check_records(_file_records(path), rollup)
 
 
 def validate_layout(path: str, rollup: bool = False):
@@ -315,7 +318,7 @@ def validate_manifest_layout(path: str, rollup: bool = False) -> dict:
     """Adoption check over a per-file ``_manifest.json`` (the list of
     ``{file, region, rows, min_key_hex, max_key_hex}`` a rolling writer
     emits): the checks of :func:`_check_records`, with each file's bucket
-    span read off its keys' 2-byte BE salt prefix (tsdb.with_salt).
+    span read off its keys' 2-byte BE salt prefix (tsdb.bulkload_kv).
     O(files) metadata, no file is opened.
 
     Returns a summary of what WAS checked: ``per_record_validated`` is

@@ -101,22 +101,16 @@ def load_events(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataF
     ``ts`` and ``ts_ms`` carry the :data:`TS_LINEAGE` mark, so a time filter
     further down can also bound the raw ``ts`` the scan reads."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+
+    from hbase_bulkload_service_spark.functions.codec import epoch_millis
 
     df = load(spark, sf_dir, "events", spread=spread)
-    dt = df.schema["ts"].dataType
-    if isinstance(dt, LongType):
-        ts_ms = F.expr("ts div 1000000")
-    elif isinstance(dt, TimestampNTZType):
-        ts_ms = F.expr("timestampdiff(MILLISECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
-    else:
-        ts_ms = F.unix_millis(F.col("ts"))
     return df.select(
         *[
             F.col(c).alias(c, metadata={TS_LINEAGE: "ts"}) if c == "ts" else c
             for c in df.columns
         ],
-        ts_ms.alias("ts_ms", metadata={TS_LINEAGE: "ts_ms"}),
+        epoch_millis(df, "ts").alias("ts_ms", metadata={TS_LINEAGE: "ts_ms"}),
     )
 
 

@@ -108,8 +108,8 @@ def _latest_fn(
     for pdf in pdfs:
         if len(pdf) == 0:
             continue
-        # same-version ties resolve to max VALUE (the batch operator's
-        # tie_col=value ordering) — associative, so the survivor is
+        # same-version ties resolve to max VALUE (the rule of the batch
+        # tsdb.latest_version_dedup) — associative, so the survivor is
         # independent of row order and micro-batch boundaries
         mx = pdf["version_ts"].max()
         ts = int(mx)
@@ -151,7 +151,8 @@ def streaming_latest_version(cells):
 def upsert_batch_writer(path: str, key_cols: tuple[str, ...] = ("key", "qualifier")):
     """H4/H6 sink analog for parquet fixtures: a foreachBatch function that
     merges each micro-batch into a keyed snapshot with latest-version-wins
-    semantics (old snapshot ∪ batch → arg-max per key), committed through
+    semantics (old snapshot ∪ batch → ``tsdb.latest_version_dedup``, so a
+    same-version tie keeps the greater value), committed through
     ``hfile.commit_dir``. The old snapshot is read inside the commit, after
     its recovery, so replaying a batch after a crash mid-swap merges into
     the restored snapshot instead of an empty one.
@@ -162,6 +163,7 @@ def upsert_batch_writer(path: str, key_cols: tuple[str, ...] = ("key", "qualifie
     MERGE INTO on a table format with row-level upserts; the per-batch
     dedup logic is identical.
     """
+    from hbase_bulkload_service_spark.operators.tsdb import latest_version_dedup
     from hbase_bulkload_service_spark.sources.hfile import commit_dir
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
@@ -172,16 +174,9 @@ def upsert_batch_writer(path: str, key_cols: tuple[str, ...] = ("key", "qualifie
             merged = cells
             if os.path.isdir(path):
                 merged = spark.read.parquet(path).unionByName(cells)
-            (
-                merged.groupBy(*key_cols)
-                .agg(
-                    F.max_by(
-                        F.struct("version_ts", "value"), F.col("version_ts")
-                    ).alias("s")
-                )
-                .select(*key_cols, "s.version_ts", "s.value")
-                .write.parquet(staging)
-            )
+            latest_version_dedup(merged, key_cols).select(
+                *key_cols, "version_ts", "value"
+            ).write.parquet(staging)
 
         commit_dir(path, merge)
 
@@ -216,7 +211,6 @@ def streaming_lookup_join(
 
 def streaming_bulkload(
     base_path: str,
-    bucket_count: int = 512,
     rollup: bool = False,
     num_partitions: int | None = None,
 ):
@@ -234,7 +228,9 @@ def streaming_bulkload(
     job's HFile set is self-consistent and HBase resolves versions at read
     time (multiple files per region are expected — the 2048/region cap).
     For a merged snapshot view, compact with latest_version_dedup over the
-    union of batches (see upsert_batch_writer for the snapshot pattern).
+    union of batches (see upsert_batch_writer for the snapshot pattern);
+    within a batch, ``bulkload_kv`` keeps the greatest (version_ts, value)
+    per cell, as every batch writer does.
 
     ``num_partitions=None`` lets each batch's range exchange be sized by
     its shuffled bytes (about one file per region for a small batch); a
@@ -250,7 +246,7 @@ def streaming_bulkload(
         if not batch_df.take(1):
             return  # empty trigger: no adoption unit
         _hfile.write_hfiles(
-            _tsdb.bulkload_kv(batch_df, bucket_count=bucket_count),
+            _tsdb.bulkload_kv(batch_df),
             os.path.join(base_path, f"batch={int(batch_id)}"),
             rollup=rollup,
             num_partitions=num_partitions,

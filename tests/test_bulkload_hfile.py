@@ -70,23 +70,57 @@ def test_parquet_row_in_wrong_region_dir_is_caught(spark, kv, tmp_path):
         hfile.validate_layout(path)
 
 
-def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
-    """Region dirs whose key spans overlap must fail even when every row
-    sits in its bucket's region (the parquet branch checks spans, not
-    key prefixes)."""
+_OVERLAPPING = [(0, "0000AA"), (0, "0000CC"), (1, "0000BB")]
+
+
+def _overlapping_kv(spark):
+    """A KV stream whose regions 0 and 1 overlap in key space although
+    every row sits in its bucket's region."""
     rows = [
         (bucket, key_hex.encode(), key_hex, b"t", b"q", "71", b"v")
-        for bucket, key_hex in [(0, "0000AA"), (0, "0000CC"), (1, "0000BB")]
+        for bucket, key_hex in _OVERLAPPING
     ]
-    kv = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "bucket int, key binary, key_hex string, family binary,"
         " qualifier binary, qualifier_hex string, value binary",
     )
+
+
+def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
+    """Region dirs whose key spans overlap must fail even when every row
+    sits in its bucket's region (the parquet branch checks spans, not
+    key prefixes): the writer refuses to commit such a layout, and
+    adoption refuses one that reaches it by another way."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     path = str(tmp_path / "hf_overlap")
-    hfile.write_hfiles(kv, path, num_partitions=2)
+    with pytest.raises(AssertionError, match="overlap"):
+        hfile.write_hfiles(_overlapping_kv(spark), path, num_partitions=2)
+    assert not os.path.exists(path)
+
+    for bucket, key_hex in _OVERLAPPING:
+        region = os.path.join(path, f"region={bucket}")
+        os.makedirs(region, exist_ok=True)
+        pq.write_table(
+            pa.table({"bucket": [bucket], "key_hex": [key_hex]}),
+            os.path.join(region, f"{key_hex}.parquet"),
+        )
+    hfile.write_manifest(path, {"regions": {}})
     with pytest.raises(AssertionError, match="overlap"):
         hfile.validate_layout(path)
+
+
+def test_refused_rewrite_keeps_the_committed_output(spark, kv, tmp_path):
+    """A write whose layout adoption would refuse raises before its
+    commit: the output already at the path stays adoptable and
+    unchanged."""
+    path = str(tmp_path / "hf_keep")
+    first = hfile.write_hfiles(kv, path, num_partitions=8)
+    with pytest.raises(AssertionError, match="overlap"):
+        hfile.write_hfiles(_overlapping_kv(spark), path, num_partitions=2)
+    assert hfile.validate_layout(path) == first
 
 
 def test_load_hfiles_returns_written_manifest(spark, kv, tmp_path):
@@ -314,7 +348,7 @@ def test_failed_rewrite_keeps_the_committed_output(spark, kv, tmp_path, monkeypa
     fresh = str(tmp_path / "hf_fresh")
     first = hfile.write_hfiles(kv, path, num_partitions=8)
 
-    def fail(_path):
+    def fail(_path, _rollup):
         raise RuntimeError("manifest build failed")
 
     with monkeypatch.context() as m:

@@ -106,6 +106,21 @@ def test_bulkload_kv_is_range_partitioned_and_sorted(spark):
     assert re.search(r"AQEShuffleRead\n.*\nArguments: coalesced", final), final
 
 
+def test_latest_version_dedup_is_one_keyed_exchange(spark):
+    """q11: a same-version tie resolves inside the dedup aggregate, so the
+    only keyed shuffle is the dedup's own pinned exchange, directly below
+    its aggregate — no collapse shuffle before it."""
+    plan = formatted_plan(
+        registry.QUERIES["q11_latest_version_dedup"](spark, SF_DIR)
+    )
+    assert plan.count("hashpartitioning(") == 1, plan
+    assert re.search(
+        r"SortAggregate \(\d+\)\n\s*\+- SortAggregate \(\d+\)\n"
+        r"(\s*\+- Sort \(\d+\)\n)?\s*\+- Exchange \(\d+\)\n",
+        plan,
+    ), plan
+
+
 def test_topk_avoids_global_sort(spark):
     plan = formatted_plan(registry.QUERIES["q03_topk_orders"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan

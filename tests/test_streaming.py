@@ -449,7 +449,7 @@ def test_streaming_counter_rate_counter_max_matches_batch(spark, tmp_path):
 def test_streaming_latest_version_tie_breaks_deterministically(spark, tmp_path):
     # two rows with the SAME max version in one batch (both orders) and a
     # same-version arrival in a LATER batch: the survivor must always be
-    # the max value (the batch operator's tie_col=value semantics),
+    # the max value (the rule of the batch tsdb.latest_version_dedup),
     # regardless of row order or micro-batch boundaries
     d = str(tmp_path / "tiecells")
     spark.createDataFrame(
