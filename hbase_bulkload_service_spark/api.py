@@ -105,8 +105,9 @@ class BulkloadService:
     # -- POST /tsdb/load (:232-254, H7 external contract) ------------------
     def load_hfiles(self, path: str, rollup: bool = False) -> dict:
         """Adoption stub: validate the non-overlapping layout that
-        LoadIncrementalHFiles requires from the files' footers and return
-        the manifest, which must equal the one the writer committed."""
+        LoadIncrementalHFiles requires from the files (either container,
+        ``hfile.validate_layout``) and return the manifest, which must
+        equal the one the writer committed."""
         return hfile.validate_layout(path, rollup=rollup)
 
     # -- maintenance crons (:126-154 → manager/HBaseManager.java) ----------

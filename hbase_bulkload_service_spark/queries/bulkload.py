@@ -661,17 +661,14 @@ def q125_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 def v3_gate(spark: SparkSession, sf_dir: str, name: str, **codec) -> DataFrame:
     """The v3 container gates' shared round trip: the flagship KV written
     as REAL v3 files (``codec``: write_hfilev3_files' compression /
-    encoding / bloom arguments), checked at manifest level in the driver
-    (bucket-prefix spans, file caps, region disjointness), read back with
-    the per-file container invariants checked inside the distributed
-    reading tasks, and summarized per region."""
+    encoding / bloom arguments; the writer runs adoption's layout checks
+    before it commits), read back with the per-file container invariants
+    checked inside the distributed reading tasks, and summarized per
+    region."""
     d = _scratch(name)
     hfilev3.write_hfilev3_files(
         flagship_kv(spark, sf_dir), d, rollup=True, num_partitions=16, **codec
     )
-    summary = hfile.validate_manifest_layout(d, rollup=True)
-    # the manifest check covers no record; the readback below owes them
-    assert not summary["per_record_validated"] and summary["pending"]
     return region_summary(hfilev3.read_hfilev3_dir(spark, d))
 
 
@@ -690,11 +687,11 @@ def q167_hfilev3_container(spark: SparkSession, sf_dir: str) -> DataFrame:
     then read BACK by opening each file exactly as HBase's HFile.Reader
     does — trailer magic/version, load-on-open walk, index→block
     agreement, per-block CRC verify, global cell order, entry-count and
-    LASTKEY agreement — one task per file, plus the manifest-level
-    layout checks adoption requires. Summarized per region against the
-    SAME container-agnostic oracle as q116: a bug anywhere in the block
-    framing, index arithmetic, protobuf encoding, or trailer breaks the
-    readback and the row (reference HBaseController.java:232-254,
+    LASTKEY agreement — one task per file; the layout checks adoption
+    requires run in the writer, before it commits. Summarized per region
+    against the SAME container-agnostic oracle as q116: a bug anywhere in
+    the block framing, index arithmetic, protobuf encoding, or trailer
+    breaks the readback and the row (reference HBaseController.java:232-254,
     HFileOutputUtil.java:17-39)."""
     return v3_gate(spark, sf_dir, "q167hfilev3")
 
@@ -810,7 +807,7 @@ def q170_hfilev3_point_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     for hexkey, must_hit in [(p, True) for p in probes] + [
         (p + "FF", False) for p in probes
     ]:
-        for m in manifest:
+        for m in manifest["files"]:
             # files are globally non-overlapping (the §4.2 layout), so
             # at most the boundary-straddling pair covers a probe
             if m["min_key_hex"] <= hexkey <= m["max_key_hex"]:

@@ -77,6 +77,7 @@ import pyarrow as pa
 from pyspark.sql import functions as F
 
 from hbase_bulkload_service_spark.session import local_frame
+from hbase_bulkload_service_spark.sources import hfile
 
 # --- pinned v3 layout constants (Apache HBase public format) --------------
 BLOCK_MAGIC_DATA = b"DATABLK*"
@@ -1396,26 +1397,20 @@ def write_hfilev3_files(
     compression: str = "NONE",
     encoding: str = "NONE",
     bloom: bool = False,
-) -> list[dict]:
+) -> dict:
     """H2/H3 rolling writer over the REAL v3 container: range-partition +
     sort once (globally non-overlapping regions, the §4.2 contract), then
     each task rolls one HFile per region it holds. Input columns as
     bulkload_kv (bucket, key, key_hex, family, qualifier, qualifier_hex,
     value); cell timestamp is fixed at 0 (bulk loads carry the version in
     the value/qualifier per the reference's TSDB layout). Returns the
-    per-file manifest (``file, region, rows, min_key_hex, max_key_hex``),
-    also written to ``_manifest.json``. Files and manifest are written to
-    a staging dir that ``hfile.commit_dir`` swaps into ``path``, so the
-    dir never mixes this write's files with a previous write's."""
-    from hbase_bulkload_service_spark.sources.hfile import (
-        assign_region,
-        commit_dir,
-        write_manifest,
-    )
+    manifest, also written to ``_manifest.json``, that ``hfile.v3_manifest``
+    builds from the tasks' per-file entries (no file is read again) after
+    adoption's checks: a layout adoption would refuse raises before
+    ``hfile.commit_dir`` swaps the staging dir in, keeping the old output."""
+    sorted_kv = hfile.assign_region(kv, rollup, num_partitions)
 
-    sorted_kv = assign_region(kv, rollup, num_partitions)
-
-    def write(staging: str) -> list[dict]:
+    def write(staging: str) -> dict:
         os.makedirs(staging)
 
         def write_region_file(region: int, pid: int, cells) -> dict:
@@ -1435,29 +1430,22 @@ def write_hfilev3_files(
                 "max_key_hex": meta["max_key_hex"],
             }
 
-        manifest = _rolling_write_arrow(sorted_kv, write_region_file)
-        write_manifest(staging, manifest)
+        files = _rolling_write_arrow(sorted_kv, write_region_file)
+        manifest = hfile.v3_manifest(files, rollup)
+        hfile.write_manifest(staging, manifest)
         return manifest
 
-    return commit_dir(path, write)
+    return hfile.commit_dir(path, write)
 
 
 def read_hfilev3_dir(spark, path: str):
-    """Distributed v3 readback: one task per file (manifest-driven), each
-    opening its file exactly as HFile.Reader would (trailer → load-on-
-    open → index → checksum-verified data blocks) and asserting the
-    manifest agrees with what the file itself says. Returns (region, key,
-    key_hex, family, qualifier, qualifier_hex, value)."""
+    """Distributed v3 readback: one task per file of the manifest's
+    ``files`` list, each opening its file exactly as HFile.Reader would
+    (trailer → load-on-open → index → checksum-verified data blocks) and
+    asserting its entry agrees with what the file itself says. Returns
+    (region, key, key_hex, family, qualifier, qualifier_hex, value)."""
     with open(os.path.join(path, "_manifest.json")) as f:
-        manifest = json.load(f)
-    files = [
-        (
-            os.path.join(path, m["file"]),
-            m["region"],
-            (m["rows"], m["min_key_hex"], m["max_key_hex"]),
-        )
-        for m in manifest
-    ]
+        files = json.load(f).get("files", [])
 
     # Arrow-batched readback: the old parallelize(...).flatMap +
     # createDataFrame(rdd) path pickled EVERY cell row Python->JVM with
@@ -1465,7 +1453,11 @@ def read_hfilev3_dir(spark, path: str):
     # ~6 s-wall gate (the decode itself is ~20 ms/file). mapInPandas
     # ships each file's cells as ONE Arrow batch instead.
     meta_df = local_frame(spark,
-        [(f, r, e[0], e[1], e[2]) for f, r, e in files],
+        [
+            (os.path.join(path, m["file"]), m["region"], m["rows"],
+             m["min_key_hex"], m["max_key_hex"])
+            for m in files
+        ],
         "fname string, region int, exp_rows long, exp_min string, "
         "exp_max string",
     ).repartition(

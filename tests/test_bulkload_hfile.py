@@ -70,21 +70,20 @@ def test_parquet_row_in_wrong_region_dir_is_caught(spark, kv, tmp_path):
         hfile.validate_layout(path)
 
 
-_OVERLAPPING = [(0, "0000AA"), (0, "0000CC"), (1, "0000BB")]
-
-
-def _overlapping_kv(spark):
-    """A KV stream whose regions 0 and 1 overlap in key space although
-    every row sits in its bucket's region."""
-    rows = [
-        (bucket, key_hex.encode(), key_hex, b"t", b"q", "71", b"v")
-        for bucket, key_hex in _OVERLAPPING
-    ]
+def _kv_of(spark, rows):
+    """A KV stream of the given (bucket, key) rows."""
     return spark.createDataFrame(
-        rows,
+        [(bucket, key, key.hex().upper(), b"t", b"q", "71", b"v") for bucket, key in rows],
         "bucket int, key binary, key_hex string, family binary,"
         " qualifier binary, qualifier_hex string, value binary",
     )
+
+
+# regions 0 and 1 overlap in key space although every row sits in its
+# bucket's region
+_OVERLAPPING = [
+    (0, bytes.fromhex("0000AA")), (0, bytes.fromhex("0000CC")), (1, bytes.fromhex("0000BB"))
+]
 
 
 def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
@@ -97,10 +96,12 @@ def test_parquet_overlapping_regions_are_caught(spark, tmp_path):
 
     path = str(tmp_path / "hf_overlap")
     with pytest.raises(AssertionError, match="overlap"):
-        hfile.write_hfiles(_overlapping_kv(spark), path, num_partitions=2)
+        hfile.write_hfiles(_kv_of(spark, _OVERLAPPING), path, num_partitions=2)
     assert not os.path.exists(path)
+    assert not os.path.exists(path + ".inprogress")
 
-    for bucket, key_hex in _OVERLAPPING:
+    for bucket, key in _OVERLAPPING:
+        key_hex = key.hex().upper()
         region = os.path.join(path, f"region={bucket}")
         os.makedirs(region, exist_ok=True)
         pq.write_table(
@@ -119,7 +120,7 @@ def test_refused_rewrite_keeps_the_committed_output(spark, kv, tmp_path):
     path = str(tmp_path / "hf_keep")
     first = hfile.write_hfiles(kv, path, num_partitions=8)
     with pytest.raises(AssertionError, match="overlap"):
-        hfile.write_hfiles(_overlapping_kv(spark), path, num_partitions=2)
+        hfile.write_hfiles(_kv_of(spark, _OVERLAPPING), path, num_partitions=2)
     assert hfile.validate_layout(path) == first
 
 
@@ -135,21 +136,32 @@ def test_load_hfiles_returns_written_manifest(spark, kv, tmp_path):
         assert svc.load_hfiles(path) == json.load(f)
 
 
+def _remap_v3_regions(path):
+    """Rename every v3 file under ``path`` to region ``region div 8`` — a
+    wrong-but-monotone mapping under rollup=False — with unique names, and
+    commit a manifest that matches the renamed files."""
+    with open(os.path.join(path, "_manifest.json")) as f:
+        files = json.load(f)["files"]
+    assert any(m["region"] >= 8 for m in files)
+    renamed = []
+    for i, m in enumerate(files):
+        name = f"region_{m['region'] // 8:05d}_x{i:05d}.hfile"
+        os.rename(os.path.join(path, m["file"]), os.path.join(path, name))
+        renamed.append({**m, "file": name, "region": m["region"] // 8})
+    renamed.sort(key=lambda m: m["file"])
+    hfile.write_manifest(path, {**hfile._manifest(renamed), "files": renamed})
+
+
 def test_v3_wrong_region_mapping_is_caught(spark, kv, tmp_path):
     """A regression that maps rows to wrong-but-monotone regions (e.g.
     region = bucket div 8 while claiming rollup=False) must fail the
-    bucket-prefix check — manifest spans alone stay non-overlapping."""
+    bucket-prefix check, even with a manifest that agrees with the files:
+    region key spans alone stay non-overlapping."""
     from hbase_bulkload_service_spark.sources import hfilev3
 
     path = str(tmp_path / "v3_badregion")
     hfilev3.write_hfilev3_files(kv, path, num_partitions=8)
-    mpath = os.path.join(path, "_manifest.json")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    assert any(m["region"] >= 8 for m in manifest)
-    for m in manifest:
-        m["region"] = m["region"] // 8  # monotone but wrong under rollup=False
-    hfile.write_manifest(path, manifest)
+    _remap_v3_regions(path)
     with pytest.raises(AssertionError, match="not in region"):
         hfile.validate_layout(path, rollup=False)
 
@@ -161,16 +173,46 @@ def test_v3_wrong_region_mapping_is_caught_deep(spark, kv, tmp_path):
 
     path = str(tmp_path / "v3_badregion_deep")
     hfilev3.write_hfilev3_files(kv, path)
-    mpath = os.path.join(path, "_manifest.json")
-    with open(mpath) as f:
-        manifest = json.load(f)
-    bad = max(manifest, key=lambda m: m["region"])
-    assert bad["region"] >= 8
-    for m in manifest:
-        m["region"] = m["region"] // 8
-    hfile.write_manifest(path, manifest)
-    with pytest.raises(AssertionError, match="not in region|disagree"):
+    _remap_v3_regions(path)
+    with pytest.raises(AssertionError, match="not in region"):
         hfile.validate_layout(path, rollup=False)
+
+
+# bucket-0 rows whose keys do not start with their bucket: the 2-byte
+# prefix b"00" reads as bucket 12336
+_UNSALTED = [(0, b"00key%d" % i) for i in range(3)]
+
+
+def test_v3_writer_refuses_a_layout_adoption_would_refuse(spark, kv, tmp_path):
+    """The v3 writer runs adoption's checks before it commits: a layout
+    whose keys sit outside their region raises, leaves nothing on a fresh
+    path, and leaves an earlier good write adoptable and unchanged."""
+    from hbase_bulkload_service_spark.sources import hfilev3
+
+    fresh = str(tmp_path / "v3_fresh")
+    with pytest.raises(AssertionError, match="wrong region"):
+        hfilev3.write_hfilev3_files(_kv_of(spark, _UNSALTED), fresh, num_partitions=1)
+    assert not os.path.exists(fresh)
+    assert not os.path.exists(fresh + ".inprogress")
+
+    path = str(tmp_path / "v3_keep")
+    first = hfilev3.write_hfilev3_files(kv, path, num_partitions=8)
+    with pytest.raises(AssertionError, match="wrong region"):
+        hfilev3.write_hfilev3_files(_kv_of(spark, _UNSALTED), path, num_partitions=1)
+    assert hfile.validate_layout(path) == first
+    with open(os.path.join(path, "_manifest.json")) as f:
+        assert json.load(f) == first
+
+
+def test_empty_v3_write_adopts_as_empty(spark, kv, tmp_path):
+    """A v3 write with no cells commits the empty layout's one manifest;
+    adoption and the distributed readback both accept it."""
+    from hbase_bulkload_service_spark.sources import hfilev3
+
+    path = str(tmp_path / "v3_empty")
+    assert hfilev3.write_hfilev3_files(kv.filter("false"), path) == {"regions": {}}
+    assert hfile.validate_layout(path) == {"regions": {}}
+    assert hfilev3.read_hfilev3_dir(spark, path).count() == 0
 
 
 def _unsorted_files(path):
@@ -265,14 +307,18 @@ def test_uncommitted_dir_without_regions_is_refused(spark, tmp_path):
         hfile.validate_layout(str(path))
 
 
-@pytest.mark.parametrize("tamper", ["deleted", "edited"])
+@pytest.mark.parametrize("tamper", ["deleted", "edited", "v3-deleted", "v3-edited"])
 def test_adoption_needs_the_written_manifest(spark, kv, tmp_path, tamper):
     """``_manifest.json`` is the commit marker: a committed write without
-    it, or with one its files disagree with, is not adopted."""
+    it, or with one its files disagree with, is not adopted — for the
+    parquet and the HFile v3 container alike."""
+    from hbase_bulkload_service_spark.sources import hfilev3
+
     path = str(tmp_path / "hf")
-    hfile.write_hfiles(kv, path, num_partitions=8)
+    write = hfilev3.write_hfilev3_files if tamper.startswith("v3-") else hfile.write_hfiles
+    write(kv, path, num_partitions=8)
     mpath = os.path.join(path, "_manifest.json")
-    if tamper == "deleted":
+    if tamper.endswith("deleted"):
         os.remove(mpath)
         with pytest.raises(FileNotFoundError, match="no _manifest.json"):
             hfile.validate_layout(path)
@@ -356,6 +402,7 @@ def test_failed_rewrite_keeps_the_committed_output(spark, kv, tmp_path, monkeypa
         for target in (path, fresh):
             with pytest.raises(RuntimeError, match="manifest build failed"):
                 hfile.write_hfiles(kv, target)
+            assert not os.path.exists(target + ".inprogress")
     svc = BulkloadService(spark, lambda table: None, str(tmp_path))
     assert svc.load_hfiles(path) == first
     assert not os.path.exists(fresh)

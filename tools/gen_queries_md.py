@@ -34,8 +34,9 @@ def _summary(fn) -> str:
     return flat.replace("|", "\\|")
 
 
-def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def render() -> str:
+    """QUERIES.md's text: one row per registered query, then the retired
+    entries."""
     out = [HEADER]
     for name, fn in registry.QUERIES.items():
         out.append(f"| `{name}` | {_summary(fn)} |\n")
@@ -56,8 +57,13 @@ def main() -> None:
         "added): duplicated q98_schema_evolution's mergeSchema gate; "
         "retired under the 246-query capacity ceiling |\n"
     )
+    return "".join(out)
+
+
+def main() -> None:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "QUERIES.md"), "w") as f:
-        f.write("".join(out))
+        f.write(render())
     print(f"wrote {len(registry.QUERIES)} live + 3 retired entries")
 
 
